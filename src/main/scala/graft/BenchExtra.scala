@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   *     times each named query n times through the NOOP sink (computes every
   *     column of every row, discards the output — guide §1.4) and prints
   *     min/median per query as one JSON line.
+  *   sbt "runMain graft.BenchExtra timecount <n> [q1 q2 ...]"
+  *     same as `time`, but each run is fn().count() — the exact action the
+  *     frozen Bench times, for A/B runs that must match its plan shape
+  *     (Catalyst may prune columns under .count() that the noop sink keeps).
   *
   * Env contract matches Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. */
 object BenchExtra {

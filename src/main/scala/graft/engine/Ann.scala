@@ -68,34 +68,28 @@ object Ann {
     *    order — a uniform pseudo-random draw that is identical under any
     *    partitioning/parallelism, collected once (bounded driver memory:
     *    sampleCap x dims doubles, e.g. 64k x 128 = 64 MB at the cap);
-    *  - init: below [[ParallelSeedK]] lists, greedy farthest-point seeding
-    *    over the sample (deterministic — no RNG: first point is sample(0),
-    *    each next seed is the sample point with MINIMUM max-cosine to the
-    *    chosen set; one-time driver cost O(sampleCap * k * dims) — the
-    *    flops of a single Lloyd round). At k >= ParallelSeedK,
-    *    DETERMINISTIC k-means|| ([[seedParallel]]): the k sequential
-    *    driver passes become `SeedRounds` distributed cost jobs, so
-    *    seeding stays bounded to the k ~ sqrt(N) ~ 10^4 lists a
-    *    10^9-vector corpus wants;
-    *  - `iters` Lloyd rounds, each a DISTRIBUTED job over the parallelized
-    *    sample: assignment is the `st_ivf_assign` law (map-only, ties ->
-    *    lowest cid) — shipped as a single plan literal below
-    *    [[BroadcastMatrixBytesConf]] matrix bytes and as a per-round
-    *    TorrentBroadcast above it (same scalar core, bit-identical) — and
-    *    the centroid update is a per-cid [[graft.expr.VectorSumQ40]]
-    *    aggregate — EXACT Q40 fixed-point long sums (associative, so
-    *    identical under ANY partitioning/task order — a double sum would
-    *    vary with reduction order), one buffer per (task, cid) with
-    *    map-side combine instead of a sample x dims exploded shuffle. Per
-    *    round the driver only collects k (cid, sums, count) rows and
-    *    renormalizes — O(k * dims), not O(sampleCap); an emptied cluster
-    *    keeps its centroid.
+    *  - init: greedy farthest-point seeding over the sample for every k
+    *    (deterministic — no RNG: first point is sample(0), each next seed is
+    *    the sample point with MINIMUM max-cosine to the chosen set; one-time
+    *    driver cost O(sampleCap * k * dims) — the flops of a single Lloyd
+    *    round);
+    *  - `iters` Lloyd rounds under the `st_ivf_assign` law (ties -> lowest
+    *    cid). Below [[SmallFitFlops]] they run on the driver. Above it each
+    *    round is a DISTRIBUTED job over the parallelized sample: assignment
+    *    ships the centroid matrix as a single plan literal to the
+    *    `st_ivf_assign` kernel (map-only), and the centroid update is a
+    *    per-cid [[graft.expr.VectorSumQ40]] aggregate — EXACT Q40
+    *    fixed-point long sums (associative, so identical under ANY
+    *    partitioning/task order — a double sum would vary with reduction
+    *    order), one buffer per (task, cid) with map-side combine instead of
+    *    a sample x dims exploded shuffle. Per round the driver only collects
+    *    k (cid, sums, count) rows and renormalizes — O(k * dims), not
+    *    O(sampleCap); an emptied cluster keeps its centroid.
     *
-    * Returns (cid 0..k-1, centroid) sorted by cid. At 10^9+ vectors this fit
-    * stays bounded: the distributed cost is one sample scan plus `iters`
-    * assignment jobs over at most sampleCap rows, and the driver never does
-    * O(sample * k) flops per iteration (the round-4 scale seam this
-    * replaces). */
+    * Returns (cid 0..k-1, centroid) sorted by cid. The distributed cost is
+    * one sample scan plus `iters` assignment jobs over at most sampleCap
+    * rows. List counts far beyond a flat fit's reach go through
+    * [[kmeansFitHier]]. */
   def kmeansFit(corpus: DataFrame, k: Int, iters: Int = 10,
                 sampleCap: Int = 65536): Array[(Long, Array[Double])] = {
     require(k >= 2, s"need k >= 2, got $k")
@@ -109,7 +103,7 @@ object Ann {
     require(sample.length >= k, s"sample (${sample.length}) smaller than k ($k)")
     val dim = sample(0).length
     val pts = sample.map(normalize)
-    def farthestPointSeeds(): Array[Array[Double]] = Ann.farthestPointSeeds(pts, k)
+    val seeds = farthestPointSeeds(pts, k)
     // Lloyd rounds: the assignment rule in BOTH regimes is the st_ivf_assign
     // law (sim = dot / max(|a||b|, 1e-12), strict-> ties to the lowest cid).
     // Below SmallFitFlops total flops the loop runs ON THE DRIVER — the
@@ -125,38 +119,20 @@ object Ann {
     val smallFit =
       sample.length.toLong * k * dim * math.max(iters, 1) <= SmallFitFlops
     if (smallFit)
-      return localLloydRounds(pts, farthestPointSeeds(), iters)
+      return localLloydRounds(pts, seeds, iters)
         .zipWithIndex.map { case (ce, i) => (i.toLong, ce) }
     // distributed regime: parallelize the (already normalized) sample once
-    // for the seeding + Lloyd jobs; the driver copy was needed for the
-    // deterministic hash-order draw anyway, so this ships it back out
-    // exactly once (bounded: sampleCap x dims doubles). `sid` is the
-    // sample's deterministic hash-order position — the row identity the
-    // k-means|| threshold draw and candidate ordering key on.
+    // for the Lloyd jobs; the driver copy was needed for the deterministic
+    // hash-order draw and the seeding anyway, so this ships it back out
+    // exactly once (bounded: sampleCap x dims doubles)
     import spark.implicits._
     val sampleDist = spark.sparkContext
-      .parallelize(pts.zipWithIndex.map { case (p, i) => (i.toLong, p.toSeq) }.toSeq,
-        spark.sparkContext.defaultParallelism)
-      .toDF("sid", "emb")
+      .parallelize(pts.map(_.toSeq).toSeq, spark.sparkContext.defaultParallelism)
+      .toDF("emb")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      var cents =
-        if (k >= ParallelSeedK) seedParallel(sampleDist, pts(0), k, dim)
-        else farthestPointSeeds()
-      // Transport choice for the per-round centroid matrix: below the
-      // conf'd byte threshold it ships as ONE plan literal through the
-      // st_ivf_assign kernel (codegen'd, zero extra machinery); above it,
-      // a TorrentBroadcast + mapPartitions assignment — at the k ~ sqrt(N)
-      // ~ 3*10^4 lists a 10^9-vector corpus wants, the matrix is ~30 MB
-      // and a per-round literal would be re-serialized into every round's
-      // task binaries, while a broadcast ships once per round via the
-      // BitTorrent protocol and is fetched at most once per executor.
-      // BOTH transports run the SAME scalar law (K.ivfAssignCore — the
-      // kernel delegates to it) and feed the same exact Q40 aggregate, so
-      // the fit is bit-identical either way; the choice is pure transport.
-      val bcThreshold = spark.conf
-        .get(BroadcastMatrixBytesConf, BroadcastMatrixBytesDefault.toString).toLong
-      val useBroadcastMat = k.toLong * dim * 8 > bcThreshold
+      var cents = seeds
+      val cids = typedLit((0L until k.toLong).toSeq)
       var it = 0
       while (it < iters) {
         // centroid update via the exact Q40 fixed-point vector-sum
@@ -166,49 +142,13 @@ object Ann {
         // shuffled (that explode dominated the round at k ~ 10^3); long
         // addition is associative-exact, so the fit stays bit-identical
         // under any partitioning
-        var roundBc: org.apache.spark.broadcast.Broadcast[
-          (Array[Double], Array[Double], Array[Long])] = null
-        val assigned =
-          if (!useBroadcastMat) {
-            val flat = cents.flatMap(_.toSeq).toSeq
-            val cids = (0L until k.toLong).toSeq
-            sampleDist.withColumn("cid", call_function("st_ivf_assign",
-              col("emb"), typedLit(flat), typedLit(cids), lit(dim)))
-          } else {
-            val cm = new Array[Double](k * dim)
-            var ci = 0
-            while (ci < k) {
-              System.arraycopy(cents(ci), 0, cm, ci * dim, dim); ci += 1
-            }
-            val cn = graft.expr.K.centroidNorms(cm, dim)
-            val ids = Array.tabulate(k)(_.toLong)
-            roundBc = spark.sparkContext.broadcast((cm, cn, ids))
-            val bc = roundBc
-            val d = dim
-            sampleDist.select(col("emb")).as[Seq[Double]]
-              .mapPartitions { rows =>
-                val (cmv, cnv, idsv) = bc.value
-                rows.map { emb =>
-                  // sample vectors are driver-normalized to exactly `d`
-                  // elements (ragged input throws before parallelize), so
-                  // no per-element null/length guard is needed here
-                  (graft.expr.K.ivfAssignCore(emb.toArray, cmv, cnv, idsv, d),
-                    emb)
-                }
-              }
-              .toDF("cid", "emb")
-          }
-        val stats =
-          try assigned
-            .groupBy(col("cid"))
-            .agg(call_function("st_vecsum_q40", col("emb"), lit(dim)).as("s"),
-              count(lit(1)).as("c"))
-            .collect()
-          // the round's broadcast is dead the moment its stats landed on the
-          // driver — destroy it now so `iters` rounds hold at most ONE
-          // matrix-sized broadcast instead of accumulating all of them until
-          // context shutdown
-          finally if (roundBc != null) roundBc.destroy()
+        val stats = sampleDist
+          .withColumn("cid", call_function("st_ivf_assign",
+            col("emb"), typedLit(cents.flatMap(_.toSeq).toSeq), cids, lit(dim)))
+          .groupBy(col("cid"))
+          .agg(call_function("st_vecsum_q40", col("emb"), lit(dim)).as("s"),
+            count(lit(1)).as("c"))
+          .collect()
         val sums = Array.fill(k)(new Array[Double](dim))
         val counts = new Array[Long](k)
         stats.foreach { r =>
@@ -251,7 +191,7 @@ object Ann {
   /** Deterministic farthest-point seeding (k-means++ analogue, no RNG) over
     * an already-normalized point set: first seed is pts(0), each next seed
     * the point with MINIMUM max-cosine to the chosen set; O(|pts| * k * dim)
-    * serial flops — the local regime's cost. */
+    * serial flops. */
   private[engine] def farthestPointSeeds(pts: Array[Array[Double]], k: Int): Array[Array[Double]] = {
     val dim = pts(0).length
     def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -334,183 +274,6 @@ object Ann {
     * far above. */
   val SmallFitFlops: Long = 200000000L
 
-  /** Runtime conf key: centroid-matrix byte size above which the distributed
-    * Lloyd rounds ship the matrix as a TorrentBroadcast (mapPartitions over
-    * the shared [[graft.expr.K.ivfAssignCore]] law) instead of a per-round
-    * plan literal through `st_ivf_assign`. Pure transport — the fit result
-    * is bit-identical either way (same scalar law, exact Q40 sums), so the
-    * knob cannot change any gated hash. */
-  val BroadcastMatrixBytesConf = "graft.ann.fit.broadcastMatrixBytes"
-
-  /** Default broadcast threshold: 8 MiB. A k=4096 x dims=64 fit (2 MB
-    * matrix) stays on the literal kernel — codegen'd, no extra machinery,
-    * measured fine at that size — while the k ~ sqrt(10^9) ~ 3*10^4 x 128
-    * matrix (~30 MB) a 10^9-vector corpus wants would be re-serialized into
-    * EVERY round's task binaries as a literal; the broadcast ships it once
-    * per round (torrent-fanout, fetched once per executor) and is destroyed
-    * as soon as the round's stats land. */
-  val BroadcastMatrixBytesDefault: Long = 8L << 20
-
-  /** List count above which the distributed regime seeds with k-means||
-    * instead of driver farthest-point: farthest-point is O(sample * k *
-    * dim) serial driver flops (a few seconds at k = 1024, ~minutes at the
-    * k ~ sqrt(N) ~ 3*10^4 a 10^9-vector corpus wants) — k-means|| replaces
-    * the k sequential driver passes with `SeedRounds` distributed cost
-    * jobs whose total work is ~(SeedRounds^2/2) * sample * l * dim spread
-    * across the cluster. With l = k oversampling the crossover on this
-    * 32-thread sandbox sits near k ~ 2048; on a real cluster it moves
-    * lower still. */
-  val ParallelSeedK: Int = 2048
-  private val SeedRounds = 5
-
-  /** Sample rows used for candidate WEIGHTS (reduction quality heuristic):
-    * weights steer the weighted farthest-point reduction, they do not
-    * affect correctness — a bounded deterministic prefix keeps the
-    * assignment job O(WeightSample * |cands| * dim) instead of scaling
-    * with the full sample. */
-  private val WeightSample = 16384L
-
-  /** DETERMINISTIC k-means|| seeding (Bahmani et al., VLDB 2012) over the
-    * parallelized sample (sid, emb — emb normalized):
-    *
-    *  - c0 = the hash-order-first sample vector (sid 0);
-    *  - `SeedRounds` rounds: every point's cost = 1 - maxsim to the current
-    *    candidate set, maintained INCREMENTALLY — a persisted per-row
-    *    running best-sim column is folded with `st_ivf_maxsim` against only
-    *    the candidates ADDED last round (max over a union = max(prev, new):
-    *    comparisons, not accumulation, so the value is bit-identical to a
-    *    full rescan while the per-round literal and flops shrink from the
-    *    whole candidate set to the ~l new ones — O(rounds * l) total
-    *    candidate-scans instead of O(rounds^2 * l / 2)); phi = DECIMAL sum
-    *    of costs (exact, order-independent); a point joins the candidate
-    *    set iff u(sid, round) * phi < k * cost, where u is an
-    *    xxhash64-derived uniform in [0, 1) — the Bahmani draw with the RNG
-    *    replaced by a per-row hash, so it is identical under any
-    *    partitioning, at oversampling l = k (l = 2k doubled every cost job
-    *    for no reduction-quality gain on this host);
-    *  - candidate weights = per-candidate assignment counts over the first
-    *    [[WeightSample]] sample rows (st_ivf_assign + groupBy count — a
-    *    deterministic bounded prefix; weights only steer the reduction);
-    *  - reduction to k: deterministic WEIGHTED farthest-point over the
-    *    ~k * rounds candidates (start at the max-weight candidate, then
-    *    argmax (weight + 1) * (1 - best-sim-so-far) — the +1 keeps the
-    *    distance criterion alive for candidates outside the weight
-    *    prefix, which would otherwise all score an indistinguishable 0 —
-    *    ties to the lowest candidate index); O(|cands| * k * dim) driver
-    *    flops over the CANDIDATE set only, independent of sample size.
-    *
-    * Short draws (adversarially concentrated cost) are padded with the
-    * first not-yet-chosen sids — deterministic, and only reachable when
-    * nearly every sample point is already a candidate. */
-  private def seedParallel(sampleDist: DataFrame, first: Array[Double],
-                           k: Int, dim: Int): Array[Array[Double]] = {
-    val cands = scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]((0L, first))
-    val chosen = scala.collection.mutable.HashSet(0L)
-    // per-row cost off the persisted running best-sim column (cheap
-    // arithmetic over the cache — the maxsim scan itself is never repeated)
-    val cost = greatest(lit(0.0), lit(1.0) - col("bsim"))
-    // candidates appended since the last cost fold; round 1 folds c0 itself
-    val newVecs = scala.collection.mutable.ArrayBuffer(first)
-    var best: DataFrame = null
-    var phi: java.math.BigDecimal = null
-    var r = 1
-    var done = false
-    try {
-      while (r <= SeedRounds && !done && cands.length < 16 * k) {
-        if (newVecs.nonEmpty) {
-          // fold ONLY the new candidates into the running best-sim — max
-          // over the union = max(prev best, max over new): comparisons, not
-          // accumulation, so bit-identical to a full rescan at a fraction
-          // of the flops and literal bytes. phi refreshes with the fold; an
-          // empty draw changes neither, so both are reused as-is then.
-          val flatNew = typedLit(newVecs.flatMap(_.toSeq).toSeq)
-          val ms = call_function("st_ivf_maxsim", col("emb"), flatNew, lit(dim))
-          val upd = (if (best == null) sampleDist.withColumn("bsim", ms)
-                     else best.withColumn("bsim", greatest(col("bsim"), ms)))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          phi = upd.agg(sum(cost.cast("decimal(38,18)")).as("p")).head.getDecimal(0)
-          // the phi action materialized upd — the superseded cache can go
-          if (best != null) best.unpersist()
-          best = upd
-          newVecs.clear()
-        }
-        if (phi == null || phi.signum() == 0) done = true // every point is a center
-        else {
-          val phiD = phi.doubleValue()
-          val u = shiftrightunsigned(xxhash64(col("sid"), lit(r)), 11).cast("double") /
-            lit((1L << 53).toDouble)
-          val sel = best.where(u * lit(phiD) < lit(1.0 * k) * cost)
-            .select(col("sid"), col("emb")).orderBy(col("sid")).collect()
-          sel.foreach { row =>
-            val sid = row.getLong(0)
-            if (!chosen(sid)) {
-              chosen += sid
-              val v = row.getSeq[Double](1).toArray
-              cands += ((sid, v))
-              newVecs += v
-            }
-          }
-          r += 1
-        }
-      }
-    } finally if (best != null) best.unpersist()
-    if (cands.length < k) {
-      // pad deterministically with the first unchosen sids
-      val need = k - cands.length
-      val extra = sampleDist.where(!col("sid").isInCollection(chosen.toSeq))
-        .orderBy(col("sid")).limit(need).select(col("sid"), col("emb")).collect()
-      extra.foreach(row => cands += ((row.getLong(0), row.getSeq[Double](1).toArray)))
-      require(cands.length >= k,
-        s"k-means|| produced only ${cands.length} candidates for k=$k")
-    }
-    // candidate weights from one assignment job over a bounded prefix
-    val flatAll = typedLit(cands.flatMap(_._2.toSeq).toSeq)
-    val cidAll = typedLit(cands.indices.map(_.toLong))
-    val weights = new Array[Long](cands.length)
-    // repartition: sids are contiguous per parallelize slice, so the
-    // prefix filter would land every surviving row on the first
-    // WeightSample/sampleCap fraction of partitions and run the assignment
-    // kernel that many times narrower (measured 4x at the 16k/64k default);
-    // the shuffle moves only WeightSample rows
-    sampleDist.where(col("sid") < WeightSample)
-      .repartition(sampleDist.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("cid", call_function("st_ivf_assign",
-        col("emb"), flatAll, cidAll, lit(dim)))
-      .groupBy(col("cid")).count().collect()
-      .foreach(row => weights(row.getLong(0).toInt) = row.getLong(1))
-    // weighted farthest-point reduction to k (deterministic ties)
-    val m = cands.length
-    val vecs = cands.map(_._2).toArray
-    val taken = new Array[Boolean](m)
-    val bestSim = Array.fill(m)(Double.NegativeInfinity)
-    var startIdx = 0
-    var i = 1
-    while (i < m) { if (weights(i) > weights(startIdx)) startIdx = i; i += 1 }
-    val seeds = scala.collection.mutable.ArrayBuffer(vecs(startIdx))
-    taken(startIdx) = true
-    while (seeds.length < k) {
-      val last = seeds.last
-      var nextIdx = -1
-      var nextScore = Double.NegativeInfinity
-      var j = 0
-      while (j < m) {
-        if (!taken(j)) {
-          var dt = 0.0; var d0 = 0
-          while (d0 < dim) { dt += vecs(j)(d0) * last(d0); d0 += 1 }
-          if (dt > bestSim(j)) bestSim(j) = dt
-          // +1: a zero-weight candidate (outside the WeightSample prefix)
-          // must still be ordered by distance, not collapse to score 0
-          val score = (weights(j) + 1).toDouble * (1.0 - bestSim(j))
-          if (score > nextScore) { nextScore = score; nextIdx = j }
-        }
-        j += 1
-      }
-      seeds += vecs(nextIdx)
-      taken(nextIdx) = true
-    }
-    seeds.toArray
-  }
-
   /** Two-level quantizer: `top` = the k1 top-level centroids, `flat` = the
     * full rectangular k1*k2 flat list (cid = c1*k2 + c2, sorted) including
     * any padding duplicates, `k2` = sub-lists per top cluster. `flat` is
@@ -522,8 +285,9 @@ object Ann {
   /** Hierarchical (two-level) spherical k-means — the inverted-multi-index
     * style coarse quantizer for list counts beyond any flat fit's reach:
     *
-    *  - fit k1 top-level centroids with [[kmeansFit]] (all its regimes and
-    *    determinism guarantees apply);
+    *  - fit k1 top-level centroids with [[kmeansFit]] (its farthest-point
+    *    seeding, driver/distributed Lloyd regimes and determinism
+    *    guarantees apply);
     *  - assign the deterministic sample to them (one distributed job, the
     *    k1 x dim literal is small by construction);
     *  - fit k2 sub-centroids INSIDE each top cluster — all k1 sub-fits run
@@ -535,9 +299,10 @@ object Ann {
     *    EXACT small-fit arithmetic, just running per-executor-group.
     *
     * Why this exists: at the k ~ sqrt(N) ~ 3*10^4 lists a 10^9-vector
-    * corpus wants, every flat-fit stage that is O(k) per row or per
-    * candidate becomes the bottleneck — the k-means|| reduction alone is
-    * O(cands * k * dim) ~ 10^14 serial driver flops. Here NO stage exceeds
+    * corpus wants, every flat-fit stage that is O(k) per row becomes the
+    * bottleneck — farthest-point seeding alone is O(sample * k * dim)
+    * serial driver flops, and each Lloyd round ships a k x dim literal and
+    * scans all k centroids per sample row. Here NO stage exceeds
     * O(k1 + k2) per row: seeding, fitting and ([[assignCids2]]) assignment
     * all scan k1 + k2 ~ 2*sqrt(k) centroids. The price is the standard IMI
     * approximation: two-level assignment is not a flat argmax over all

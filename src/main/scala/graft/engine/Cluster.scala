@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Density-based spatial clustering (grid DBSCAN) and the distributed
   * fixed-radius NEIGHBOR SELF-JOIN it is built on.
@@ -144,11 +145,13 @@ object Cluster {
     // Persist for the duration of the two Durable builds (the q34/§5
     // pattern: cache filled by the first build, read by the second,
     // released before returning; lineage is NOT truncated, so a lost cache
-    // partition recomputes from the caller's input as before).
-    val pts = points.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // partition recomputes from the caller's input as before). An input the
+    // caller already cached is used as-is and stays cached.
+    val owned = points.storageLevel == StorageLevel.NONE
+    if (owned) points.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      dbscanBuilt(pts, epsM, minPts, level)
-    } finally pts.unpersist()
+      dbscanBuilt(points, epsM, minPts, level)
+    } finally if (owned) points.unpersist()
   }
 
   private def dbscanBuilt(points: DataFrame, epsM: Double, minPts: Int,

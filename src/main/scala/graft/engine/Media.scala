@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column plumbing: media spans are opaque references/bytes with
+/** Multimodal column plumbing: media spans are opaque references with
   * typed metadata; decode / feature-extract runs per partition in batches.
   *
   * STUB NOTE: no image/audio codecs exist in this container, so `decodeStub`
@@ -147,61 +147,6 @@ object Media {
     * metadata + the 8-dim feature vector. */
   def extractFeaturesPpm(spark: SparkSession, docs: DataFrame): DataFrame =
     extractWith(spark, docs, ref => decodePpm(renderPpm(ref)))
-
-  /** Deterministic fake payload bytes for a media ref (STUB — stands in for
-    * fetching the actual blob): >= 256 bytes derived from md5 of the ref, with
-    * the ref embedded in full so the decode can recover it exactly (the
-    * payload grows past 256 bytes rather than truncating long refs — a
-    * truncated ref would make decodeBytes disagree with decodeStub(ref)).
-    * Refs longer than the 2-byte length field (65535 UTF-8 bytes) are
-    * rejected with null, like an unfetchable blob. A real pipeline reads
-    * these from the object store instead. */
-  def fetchStub(ref: String): Array[Byte] = {
-    val refBytes = ref.getBytes("UTF-8")
-    if (refBytes.length > 0xFFFF) return null
-    val seed = graft.core.Hashing.md5(refBytes)
-    val out = new Array[Byte](math.max(256, 16 + refBytes.length))
-    var i = 0
-    while (i < out.length) { out(i) = seed(i % 16); i += 1 }
-    val n = refBytes.length
-    System.arraycopy(refBytes, 0, out, 16, n)
-    out(0) = (n >> 8).toByte // 2-byte big-endian length (a 1-byte field would
-    out(1) = (n & 0xFF).toByte // wrap modulo 256 for long refs)
-    out
-  }
-
-  /** Decode typed metadata from an opaque payload (STUB — a real
-    * implementation parses the container header here). Recovers the ref
-    * embedded by fetchStub and derives the same metadata as decodeStub, so
-    * the bytes path and the ref path agree. */
-  def decodeBytes(payload: Array[Byte]): (Int, Int, Int, Array[Float]) = {
-    if (payload == null || payload.length < 16) return null
-    val len = ((payload(0) & 0xFF) << 8) | (payload(1) & 0xFF)
-    if (len < 0 || 16 + len > payload.length) return null
-    val ref = new String(payload, 16, len, "UTF-8")
-    decodeStub(ref)
-  }
-
-  /** Binary-column variant: docs with an opaque `payload: binary` column ->
-    * typed metadata, decoded per partition batch. The schema shape a real
-    * image/audio pipeline uses: bytes stay opaque to the engine; only the
-    * typed metadata participates in joins/filters. */
-  def extractFeaturesFromBytes(spark: SparkSession, media: DataFrame): DataFrame = {
-    import spark.implicits._
-    media
-      .select(col("doc_id"), col("media_ref"), col("payload"))
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        // codec init once per partition; undecodable payloads are skipped
-        // (relaxed null discipline, like unparseable text spans)
-        it.flatMap { case (docId, ref, payload) =>
-          Option(decodeBytes(payload)).map { case (w, h, f, feat) =>
-            MediaFeature(docId, ref, w, h, f, feat)
-          }
-        }
-      }
-      .toDF()
-  }
 
   /** THE media-span extraction + partition-batched decode pipeline: one
     * span explode/filter definition, one mapPartitions shape (decoder/codec

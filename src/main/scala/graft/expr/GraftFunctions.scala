@@ -362,10 +362,6 @@ object GraftFunctions {
       si(LongType, "ivfAssign2",
         Seq(Cast(a(0), ArrayType(DoubleType)), Cast(a(1), ArrayType(DoubleType)),
           Cast(a(2), ArrayType(DoubleType)), int(a(3))))),
-    "st_ivf_maxsim" -> ((a: Seq[Expression]) =>
-      si(DoubleType, "ivfMaxSim",
-        Seq(Cast(a(0), ArrayType(DoubleType)), Cast(a(1), ArrayType(DoubleType)),
-          int(a(2))))),
     // AGGREGATE (TypedImperativeAggregate — the analyzer wraps it into an
     // AggregateExpression on resolution); dim must be a foldable int
     "st_vecsum_q40" -> ((a: Seq[Expression]) => {

@@ -1164,9 +1164,9 @@ object K {
   // row a task evaluates, but toDoubleArray COPIES it per call — at
   // nCentroids x dims = 4096 x 64 that was a 2 MB memcpy per ROW (~1.4 TB
   // over a 64k-sample 10-round fit), dominating the assignment kernel.
-  // Four round-robin slots (matrix + cids for st_ivf_assign plus a
-  // st_ivf_maxsim matrix can coexist on one thread without eviction
-  // thrash) behind SoftReferences (the GC reclaims a retired fit's matrix
+  // Four round-robin slots (the two literals of st_ivf_assign — matrix +
+  // cids — and the two matrices of st_ivf_assign2 fit on one thread at once
+  // without eviction thrash) behind SoftReferences (the GC reclaims a retired fit's matrix
   // instead of it pinning executor-thread memory forever). Identity-keyed,
   // so a non-literal argument (different instance per row) simply misses
   // and pays the copy it always paid.
@@ -1207,32 +1207,21 @@ object K {
     private var norms: Array[Double] = null
     def normsFor(d: Int): Array[Double] = {
       if (normDim != d) {
-        norms = centroidNorms(cm, d)
+        val n = cm.length / d
+        norms = new Array[Double](n)
+        var c = 0
+        while (c < n) {
+          val off = c * d
+          var nb = 0.0
+          var j = 0
+          while (j < d) { val y = cm(off + j); nb += y * y; j += 1 }
+          norms(c) = math.sqrt(nb)
+          c += 1
+        }
         normDim = d
       }
       norms
     }
-  }
-
-  /** Per-centroid self-norms of a row-major flattened n x d matrix — the
-    * SAME element-ordered y*y accumulation the kernels' inline loop used,
-    * so any sim dividing by these is bit-identical to the interleaved form.
-    * Public (and the single definition [[CentMat]] delegates to) so the
-    * broadcast-transport fit path (Ann.kmeansFit) derives identical norms
-    * to the literal-kernel transport. */
-  def centroidNorms(cm: Array[Double], d: Int): Array[Double] = {
-    val n = cm.length / d
-    val ns = new Array[Double](n)
-    var c = 0
-    while (c < n) {
-      val off = c * d
-      var nb = 0.0
-      var j = 0
-      while (j < d) { val y = cm(off + j); nb += y * y; j += 1 }
-      ns(c) = math.sqrt(nb)
-      c += 1
-    }
-    ns
   }
   private def centMatOf(a: ArrayData): CentMat =
     memoized(a, ad => new CentMat(ad.toDoubleArray()))
@@ -1271,18 +1260,7 @@ object K {
     // the cached self-norms are the same element-ordered accumulation the
     // inline interleaved loop computed, so every sim is bit-identical to
     // cosineSim(emb, cent) — see [[CentMat]]
-    java.lang.Long.valueOf(ivfAssignCore(e, cm, mat.normsFor(dim), ids, dim))
-  }
-
-  /** Shared scalar argmax core of [[ivfAssign]] over already-decoded arrays
-    * (e.length == dim, cm row-major with norms cn = [[centroidNorms]](cm,
-    * dim), ids(c) = row c's cid, ascending — ties to the FIRST max). Public
-    * and the single definition the ArrayData kernel delegates to, so the
-    * broadcast-variable transport of the distributed k-means fit
-    * (Ann.kmeansFit) computes bit-identical cids to the literal-kernel
-    * transport by construction. */
-  def ivfAssignCore(e: Array[Double], cm: Array[Double], cn: Array[Double],
-                    ids: Array[Long], dim: Int): Long = {
+    val cn = mat.normsFor(dim)
     var na = 0.0
     var i = 0
     while (i < dim) { na += e(i) * e(i); i += 1 }
@@ -1290,7 +1268,6 @@ object K {
     var best = Double.NegativeInfinity
     var bestId = ids(0)
     var c = 0
-    val n = ids.length
     while (c < n) {
       val off = c * dim
       var dot = 0.0
@@ -1303,7 +1280,7 @@ object K {
       if (sim > best) { best = sim; bestId = ids(c) }
       c += 1
     }
-    bestId
+    java.lang.Long.valueOf(bestId)
   }
 
   /** st_ivf_assign2(emb, topFlat, subFlat, dim): TWO-LEVEL (inverted-multi-
@@ -1368,46 +1345,6 @@ object K {
       c += 1
     }
     java.lang.Long.valueOf(b1.toLong * k2 + b2)
-  }
-
-  /** st_ivf_maxsim(emb, centsFlat, dim): the MAXIMUM cosine similarity of
-    * `emb` against the row-major flattened centroid matrix — the cost
-    * kernel for k-means|| seeding (cost(x) = 1 - maxsim). Identical
-    * accumulation law and null discipline as [[ivfAssign]] (which returns
-    * the argmax id instead of the max value). */
-  def ivfMaxSim(emb: ArrayData, centsFlat: ArrayData, dim: Int): java.lang.Double = {
-    if (emb == null || centsFlat == null) return null
-    if (dim <= 0 || emb.numElements() != dim) return null
-    var nc0 = 0
-    while (nc0 < dim) {
-      if (emb.isNullAt(nc0)) return null
-      nc0 += 1
-    }
-    val e = emb.toDoubleArray()
-    val mat = centMatOf(centsFlat)
-    val cm = mat.cm
-    if (cm.length == 0 || cm.length % dim != 0) return null
-    val n = cm.length / dim
-    val cn = mat.normsFor(dim)
-    var na = 0.0
-    var i = 0
-    while (i < dim) { na += e(i) * e(i); i += 1 }
-    val sqna = math.sqrt(na)
-    var best = Double.NegativeInfinity
-    var c = 0
-    while (c < n) {
-      val off = c * dim
-      var dot = 0.0
-      var j = 0
-      while (j < dim) {
-        dot += e(j) * cm(off + j)
-        j += 1
-      }
-      val sim = dot / math.max(sqna * cn(c), 1e-12)
-      if (sim > best) best = sim
-      c += 1
-    }
-    java.lang.Double.valueOf(best)
   }
 
   def cosineSim(a: ArrayData, b: ArrayData): java.lang.Double = {

@@ -153,4 +153,16 @@ class ClusterSpec extends AnyFunSuite {
     }.sortBy(_._1)
     assert(got == expect)
   }
+
+  test("dbscan leaves a caller-cached input cached") {
+    import spark.implicits._
+    val df = mixedPoints.toDF("pid", "lat", "lon").cache()
+    try {
+      df.count()
+      val level = df.storageLevel
+      assert(level != org.apache.spark.storage.StorageLevel.NONE)
+      Cluster.dbscan(df, epsM = 3000.0, minPts = 4).collect()
+      assert(df.storageLevel == level, "dbscan dropped or changed the caller's cache")
+    } finally df.unpersist()
+  }
 }

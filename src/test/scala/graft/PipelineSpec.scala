@@ -483,36 +483,13 @@ class PipelineSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
   }
 
-  test("kmeansFit broadcast matrix transport is bit-identical to the literal kernel") {
+  test("kmeansFit at k = 2048: farthest-point seeding, deterministic and distinct") {
     import spark.implicits._
-    // same distributed-regime shape as above; forcing the threshold to 0
-    // routes every Lloyd round through the TorrentBroadcast + mapPartitions
-    // transport (K.ivfAssignCore), which must produce the EXACT bits of the
-    // plan-literal st_ivf_assign transport — the conf is transport-only
-    val rng = new java.util.Random(11L)
-    val vecs = (0 until 4096).map(i => (i.toLong, Seq.fill(64)(rng.nextGaussian())))
-    val df = vecs.toDF("vec_id", "embedding")
-    val viaLiteral = Ann.kmeansFit(df.repartition(3), k = 256, iters = 3)
-    spark.conf.set(Ann.BroadcastMatrixBytesConf, "0")
-    try {
-      val viaBroadcast = Ann.kmeansFit(df.repartition(3), k = 256, iters = 3)
-      assert(viaLiteral.map(_._2.toSeq).toSeq == viaBroadcast.map(_._2.toSeq).toSeq,
-        "broadcast transport changed fit bits")
-      // and the broadcast transport is itself partitioning-invariant
-      val viaBroadcast7 = Ann.kmeansFit(df.repartition(7), k = 256, iters = 3)
-      assert(viaBroadcast.map(_._2.toSeq).toSeq == viaBroadcast7.map(_._2.toSeq).toSeq)
-    } finally spark.conf.unset(Ann.BroadcastMatrixBytesConf)
-  }
-
-  test("kmeansFit at k >= ParallelSeedK: k-means|| seeding, deterministic and distinct") {
-    import spark.implicits._
-    // k = 2048 over 4096 x 32-dim vectors with iters=1 crosses BOTH
-    // thresholds (SmallFitFlops and ParallelSeedK), so this exercises the
-    // full scale path: k-means|| candidate rounds -> weighted reduction ->
-    // one distributed Lloyd round. Must be repartition-invariant (hash
-    // draws + decimal sums are partitioning-free) and yield k distinct
-    // unit-norm centroids.
-    assert(2048 >= Ann.ParallelSeedK)
+    // k = 2048 over 4096 x 32-dim vectors with iters=1 crosses
+    // SmallFitFlops, so this exercises the large-k path: farthest-point
+    // seeding over the sample -> one distributed Lloyd round. Must be
+    // repartition-invariant (hash-order sample + exact Q40 sums are
+    // partitioning-free) and yield k distinct unit-norm centroids.
     assert(4096L * 2048 * 32 * 1 > Ann.SmallFitFlops)
     val rng = new java.util.Random(23L)
     val vecs = (0 until 4096).map(i => (i.toLong, Seq.fill(32)(rng.nextGaussian())))
@@ -520,7 +497,7 @@ class PipelineSpec extends AnyFunSuite {
     val b = Ann.kmeansFit(vecs.toDF("vec_id", "embedding").repartition(8), k = 2048, iters = 1)
     assert(a.length == 2048 && a.map(_._1).toSeq == (0L until 2048L))
     assert(a.map(_._2.toSeq).toSeq == b.map(_._2.toSeq).toSeq,
-      "k-means|| fit not partitioning-invariant")
+      "k = 2048 fit not partitioning-invariant")
     assert(a.map(_._2.toSeq).distinct.length == 2048, "duplicate centroids")
     for ((_, c) <- a.take(50)) {
       val norm = math.sqrt(c.map(x => x * x).sum)
@@ -841,34 +818,6 @@ class PipelineSpec extends AnyFunSuite {
       val d = Media.decodePpm(Media.renderPpm(ref))
       assert(d != null && d._1 >= 8 && d._1 <= 23 && d._2 >= 8 && d._2 <= 23)
     }
-  }
-
-  test("media binary-column path agrees with the ref path") {
-    import spark.implicits._
-    val docs = Corpus.documentsDf(spark, 200, partitions = 2)
-    val refPath = Media.extractFeatures(spark, docs)
-      .orderBy("doc_id", "media_ref").collect()
-    // build the binary table: (doc_id, media_ref, payload) with stub bytes
-    val media = Media.extractFeatures(spark, docs)
-      .select("doc_id", "media_ref").as[(String, String)]
-      .map { case (d, r) => (d, r, Media.fetchStub(r)) }
-      .toDF("doc_id", "media_ref", "payload")
-    val bytesPath = Media.extractFeaturesFromBytes(spark, media)
-      .orderBy("doc_id", "media_ref").collect()
-    assert(refPath.length == bytesPath.length && refPath.length > 0)
-    assert(refPath.zip(bytesPath).forall { case (a, b) => a == b })
-  }
-
-  test("fetchStub/decodeBytes agree for refs longer than 240 UTF-8 bytes") {
-    // the payload grows past 256 bytes rather than truncating the ref
-    val longRef = "media://" + ("x" * 300) + "/\u00e9nd" // multi-byte tail
-    val decodedRef = Media.decodeBytes(Media.fetchStub(longRef))
-    val direct = Media.decodeStub(longRef)
-    assert(decodedRef != null)
-    assert(decodedRef._1 == direct._1 && decodedRef._2 == direct._2 &&
-      decodedRef._3 == direct._3 && decodedRef._4.sameElements(direct._4),
-      "bytes path must agree with the ref path for long refs")
-    assert(Media.fetchStub("x" * 70000) == null, "oversized ref -> null (unfetchable)")
   }
 
   test("media feature extraction: schema, determinism, batch shape") {
