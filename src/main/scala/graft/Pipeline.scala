@@ -14,11 +14,12 @@ import graft.engine._
   *                -> spatial join vs polygon layer (stage)
   *                -> tile histogram (stage)
   *
-  * Each stage commits an atomic manifest (snapshot id, input fingerprint,
-  * per-partition lineage row counts) under <outDir>/<stage>/; a rerun with
-  * unchanged inputs replans nothing and reads the committed Parquet back —
-  * the unit of resume a 10^12-doc spark-submit retry needs. Metrics (input/
-  * output rows per stage, wall seconds) print as one JSON line.
+  * Each stage commits a manifest (snapshot id, input fingerprint,
+  * per-partition lineage row counts) to <outDir>/<stage>/_graft_log; a
+  * rerun with unchanged inputs replans nothing and reads the committed
+  * Parquet back — the unit of resume a 10^12-doc spark-submit retry needs.
+  * Metrics (input/output rows per stage, wall seconds) print as one JSON
+  * line.
   *
   * Usage: Pipeline <docsParquet> <polysParquet> <outDir> [cellLevel] [zoom]
   * (defaults: synthesize a 100k-doc corpus under outDir when docsParquet is
@@ -67,7 +68,8 @@ object Pipeline {
     val docs: DataFrame =
       if (docsArg == "synthetic") {
         val p = s"$outDir/input_docs"
-        if (!new java.io.File(s"$p/_SUCCESS").exists())
+        val success = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
+        if (!success.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(success))
           Corpus.documentsDf(spark, 100000L, partitions = 64)
             .write.mode("overwrite").parquet(p)
         spark.read.parquet(p)
@@ -105,14 +107,14 @@ object Pipeline {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, (Long, Double, Boolean))]
     def stage(name: String, dir: String, fp: String, partitionCol: Option[String])
              (body: => DataFrame): DataFrame = {
-      val resumed = Checkpoint.readManifestFingerprint(dir).contains(fp)
+      var computed = false
       val t0 = System.nanoTime()
-      val df = Checkpoint.stage(spark, dir, name, fp, partitionCol)(body)
-      // a resumed stage's row count comes from its committed manifest
-      val rows =
-        if (resumed) Checkpoint.readManifestTotal(dir).getOrElse(df.count())
-        else df.count()
-      out += name -> ((rows, (System.nanoTime() - t0) / 1e9, resumed))
+      val (df, m) = Checkpoint.stage(spark, dir, name, fp, partitionCol) {
+        computed = true
+        body
+      }
+      // fresh or resumed, the row count comes from the committed manifest
+      out += name -> ((m.totalRows, (System.nanoTime() - t0) / 1e9, !computed))
       df
     }
 

@@ -1072,16 +1072,13 @@ object SparkEntry {
         .withColumn("cell", call_function("st_cell", col("lat"), col("lon"), lit(5)))
         .select(col("c_custkey"), col("cell"))
       val base = scratchDir("q68", dir)
-      // catalog names PID-scoped like the paths: concurrent JVMs at the same
-      // scale share the repo-local metastore and must not clobber each other
-      graft.engine.Bucketing.sweepDeadProcessTables(s)
+      // fixed catalog names: the session catalog is per-JVM (in-memory), and
+      // the PID-scoped scratch dir keeps concurrent processes' data apart
       val a = graft.engine.Bucketing.writeBucketed(
-        pts, graft.engine.Bucketing.processScopedName("graft_q68_pts"),
-        s"$base/pts", "cell", 8)
+        pts, "graft_q68_pts", s"$base/pts", "cell", 8)
       val b = graft.engine.Bucketing.writeBucketed(
         pts.groupBy("cell").agg(count(lit(1)).as("n")),
-        graft.engine.Bucketing.processScopedName("graft_q68_cnt"),
-        s"$base/cnt", "cell", 8)
+        "graft_q68_cnt", s"$base/cnt", "cell", 8)
       graft.engine.Bucketing.bucketedJoin(a, b, "cell")
         .orderBy(col("c_custkey"))
     }),
@@ -1142,9 +1139,9 @@ object SparkEntry {
     }),
     // q73: containment-only spatial join — doc-level semi/anti split in one
     // gated row via a status column. Uses containmentSplit (ONE spatial
-    // join + left-outer probe; the separate containedDocs/uncontainedDocs
-    // calls would evaluate the join twice); the semi/anti variants
-    // themselves are gated by EngineSpec + the PlanSpec join-type gate.
+    // join + left-outer probe; separate semi and anti joins would evaluate
+    // the join twice); EngineSpec checks it against test-only semi/anti
+    // variants whose join types PlanSpec gates.
     "q73_spatial_semi_anti" -> ((spark, dir) => {
       val s = prep(spark)
       val docs = Corpus.storedDocs(s, corpusDocs(dir))

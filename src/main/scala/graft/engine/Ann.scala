@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -386,44 +387,29 @@ object Ann {
 
   // ---- tick-index compaction (small-file maintenance) ----------------------
 
-  /** Compaction manifest for a tick-built index ([[ivfIngestTick]] layout):
-    * `gen` = the live compacted generation (its rows live under
-    * `batch=-gen`; 0 = none yet), `upTo` = the compaction WATERMARK — every
-    * streaming batch id < upTo is folded into the compacted generation and
-    * is DEAD as a directory. The manifest is the single atomic commit
-    * point (tmp + atomic move, the [[Checkpoint]] discipline), which is
-    * what makes compaction crash-safe without a transactional store:
-    * a crash BEFORE the move leaves the old manifest naming the old live
-    * set (the half-written new generation is invisible garbage, swept by
-    * the next attempt); a crash AFTER it leaves superseded dirs as
-    * garbage (swept by the next attempt) that [[readIvfTicks]] already
-    * ignores. Plain directory rewrites instead would have a window where
-    * a reader double-counts or loses rows — there is none here. */
-  private def compactionManifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_ivf_compaction.json")
+  /** Compaction commit of a tick-built index ([[ivfIngestTick]] layout),
+    * one batch of Spark's `HDFSMetadataLog` under `path/_graft_log`: the
+    * batch id is the live compacted generation `gen` (its rows live under
+    * `batch=-gen`; no batch = none yet), `upTo` the compaction WATERMARK —
+    * every streaming batch id < upTo is folded into the compacted
+    * generation and is DEAD as a directory. The log entry is the single
+    * commit point, which is what makes compaction crash-safe without a
+    * transactional store: a crash BEFORE it leaves the previous entry
+    * naming the old live set (the half-written new generation is invisible
+    * garbage, swept by the next attempt); a crash AFTER it leaves
+    * superseded dirs as garbage (swept by the next attempt) that
+    * [[readIvfTicks]] already ignores. Plain directory rewrites instead
+    * would have a window where a reader double-counts or loses rows —
+    * there is none here. */
+  private final case class IvfCompaction(upTo: Long)
 
-  private def readCompactionManifest(fs: org.apache.hadoop.fs.FileSystem,
-                                     path: String): (Long, Long) = {
-    val p = compactionManifestPath(path)
-    if (!fs.exists(p)) return (0L, 0L)
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val gen = """"gen":(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    val upTo = """"up_to":(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    (gen.getOrElse(0L), upTo.getOrElse(0L))
-  }
-
-  private def writeCompactionManifest(fs: org.apache.hadoop.fs.FileSystem,
-                                      path: String, gen: Long, upTo: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(path, "_graft_ivf_compaction.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"gen":$gen,"up_to":$upTo}""".getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, compactionManifestPath(path))) {
-      fs.delete(compactionManifestPath(path), false)
-      require(fs.rename(tmp, compactionManifestPath(path)),
-        s"cannot commit compaction manifest under $path")
-    }
+  /** (gen, upTo) of the latest committed compaction; (0, 0) before any. */
+  private def committedCompaction(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                                  path: String): (Long, Long) = {
+    val log = new org.apache.hadoop.fs.Path(path, "_graft_log")
+    if (!fs.exists(log)) (0L, 0L)
+    else new HDFSMetadataLog[IvfCompaction](spark, log.toString).getLatest()
+      .fold((0L, 0L)) { case (gen, c) => (gen, c.upTo) }
   }
 
   private def batchDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -449,7 +435,7 @@ object Ann {
   def readIvfTicks(spark: SparkSession, path: String): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, upTo) = readCompactionManifest(fs, path)
+    val (gen, upTo) = committedCompaction(spark, fs, path)
     val live = batchDirs(fs, path).collect {
       case (id, p) if (gen > 0 && id == -gen) || id >= upTo => p.toString
     }
@@ -460,7 +446,7 @@ object Ann {
   /** Fold the compacted generation plus every batch in [watermark,
     * upToBatch) into ONE new generation (one file set per cid instead of
     * one per (tick, cid) — the small-file maintenance a long-running
-    * ingest needs), then atomically advance the manifest and sweep the
+    * ingest needs), then commit the next generation and sweep the
     * superseded dirs.
     *
     * CALLER CONTRACT: `upToBatch` must not exceed the source checkpoint's
@@ -473,7 +459,7 @@ object Ann {
   def compactIvfTicks(spark: SparkSession, path: String, upToBatch: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, oldUpTo) = readCompactionManifest(fs, path)
+    val (gen, oldUpTo) = committedCompaction(spark, fs, path)
     // sweep garbage first: stale generations (a crashed attempt's
     // half-written dir) and batches already below the committed watermark
     batchDirs(fs, path).foreach { case (id, p) =>
@@ -490,13 +476,17 @@ object Ann {
     spark.read.option("basePath", path).parquet(src.map(_.toString): _*)
       .select(col("vec_id"), col("embedding"), col("cid"))
       .write.partitionBy("cid").mode("overwrite").parquet(dest)
-    // the atomic commit point: readers switch to the new generation +
-    // watermark in one rename
-    writeCompactionManifest(fs, path, newGen, upToBatch)
+    // the commit point: readers switch to the new generation + watermark
+    // in one log entry; a concurrent compactor that committed newGen first
+    // makes this add fail instead of overwriting its entry
+    val log = new HDFSMetadataLog[IvfCompaction](spark, s"$path/_graft_log")
+    require(log.add(newGen, IvfCompaction(upToBatch)),
+      s"compaction generation $newGen under $path was committed concurrently")
+    log.purge(newGen)
     src.foreach(p => fs.delete(p, true))
   }
 
-  /** Search a tick-built index through the manifest-aware live set —
+  /** Search a tick-built index through the compaction-aware live set —
     * [[searchIvfIndex]]'s exact ranking over [[readIvfTicks]]. */
   def searchIvfTicks(spark: SparkSession, path: String, queries: DataFrame,
                      cents: Array[(Long, Array[Double])], k: Int,
@@ -649,7 +639,7 @@ object Ann {
     * train once on a sample, add forever, retrain = new index). Long-
     * running ingests compact their accumulated per-tick file sets with
     * [[compactIvfTicks]] and read/search through [[readIvfTicks]] /
-    * [[searchIvfTicks]] (manifest-aware; identical to a plain read while
+    * [[searchIvfTicks]] (compaction-aware; identical to a plain read while
     * no compaction has run). */
   def ivfIngestTick(delta: DataFrame, cents: Array[(Long, Array[Double])],
                     path: String, batchId: Long): Unit =

@@ -20,85 +20,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Bucketing {
 
-  /** Sanitized local hostname baked into scoped names so a metastore shared
-    * ACROSS hosts is safe: the sweep only ever considers entries created on
-    * this host (a remote process's liveness cannot be probed with a local
-    * ProcessHandle, so remote entries are simply never touched). */
-  private val HostTag: String = {
-    val raw =
-      try java.net.InetAddress.getLocalHost.getHostName
-        .toLowerCase(java.util.Locale.ROOT).replaceAll("[^a-z0-9]", "").take(24)
-      catch { case _: Throwable => "" }
-    if (raw.isEmpty) "unknownhost" else raw
-  }
-
-  private def startSeconds(h: java.lang.ProcessHandle): Long =
-    h.info().startInstant()
-      .map[java.lang.Long](i => java.lang.Long.valueOf(i.getEpochSecond))
-      .orElse(java.lang.Long.valueOf(-1L)).longValue()
-
-  /** Catalog-safe name scoped to THIS process: two concurrent JVMs sharing
-    * one metastore (e.g. Bench and Verify at the same scale) must never
-    * DROP/CREATE the same table name — the scratch *paths* are already
-    * PID-scoped, so the catalog names follow the same rule. The name embeds
-    * host + pid + process START time: the host keys the sweep to local
-    * entries only, and the start time defeats PID recycling (a new process
-    * that reuses a dead owner's pid has a different start instant, so the
-    * dead owner's tables still sweep). */
-  def processScopedName(tag: String): String = {
-    val self = java.lang.ProcessHandle.current()
-    s"${tag}_h${HostTag}_p${self.pid()}_s${startSeconds(self)}"
-  }
-
-  /** Drop catalog tables named `graft_*_h<thisHost>_p<pid>_s<start>` whose
-    * owning process is dead (a SIGKILLed JVM never cleans up its own
-    * entries) — the catalog analogue of the scratch-dir dead-owner sweep.
-    * Dead = no live local process with that pid AND that start second (a
-    * live pid with a different start is a RECYCLED pid — the owner is gone).
-    * Never touches a live process's tables, only sweeps THIS host's entries
-    * (remote owners are unprobeable locally), and ONLY the `graft_`
-    * namespace this engine creates — a user table that happens to match the
-    * suffix shape must never be collateral. */
-  def sweepDeadProcessTables(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val self = java.lang.ProcessHandle.current().pid()
-    val rx = s"^graft_.*_h${HostTag}_p([0-9]+)_s(-?[0-9]+)$$".r
-    // pre-round-5 names carried only the pid; keep sweeping those leftovers
-    // under the old same-host assumption so they don't linger forever
-    val legacyRx = "^graft_.*_p([0-9]+)$".r
-    def drop(name: String): Unit =
-      try spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      catch { case _: Throwable => () }
-    spark.catalog.listTables().collect().foreach { tbl =>
-      tbl.name match {
-        case rx(pidS, startS) =>
-          (pidS.toLongOption, startS.toLongOption) match {
-            case (Some(pid), Some(start)) =>
-              // dead = no live process with that pid, OR a live one whose
-              // start instant is KNOWN and differs (recycled pid). An
-              // unreadable start instant (other-user process, restricted
-              // /proc) must count as LIVE — treating unknown as recycled
-              // would let a concurrent sweep drop a running JVM's tables,
-              // the exact scenario the scoped names protect against.
-              val dead = pid != self && java.lang.ProcessHandle.of(pid)
-                .map[java.lang.Boolean] { h =>
-                  val s = startSeconds(h)
-                  !(h.isAlive && (s == -1L || s == start))
-                }
-                .orElse(true)
-              if (dead) drop(tbl.name)
-            case _ => ()
-          }
-        case legacyRx(pidS) =>
-          pidS.toLongOption.foreach { pid =>
-            val dead = pid != self && java.lang.ProcessHandle.of(pid)
-              .map[java.lang.Boolean](h => !h.isAlive).orElse(true)
-            if (dead) drop(tbl.name)
-          }
-        case _ => ()
-      }
-    }
-  }
-
   /** Write `df` as a bucketed, bucket-sorted external table (data under
     * `path`, metadata in the session catalog) and return the table-backed
     * DataFrame whose scan carries the bucket spec. The identifier is

@@ -1,9 +1,8 @@
 package graft.engine
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
 
 /** Checkpoint-resumable staged writes with per-partition lineage + metrics
@@ -12,12 +11,14 @@ import org.apache.spark.sql.functions._
   * SURVEY §7.4).
   *
   * A stage writes `partitionBy(partitionCol)` Parquet, then commits a
-  * manifest JSON (snapshot id, input fingerprint, per-partition row counts).
-  * A rerun with the same fingerprint short-circuits to a plain read — the
-  * unit of resume is the committed stage/partition, which is what a
-  * spark-submit retry of a 10^12-row pipeline needs to skip.
-  * The manifest is written atomically (tmp + move) so a crash mid-commit
-  * never yields a half-trusted stage.
+  * [[Manifest]] (snapshot id, input fingerprint, per-partition row counts)
+  * as batch 0 of Spark's `HDFSMetadataLog` under `<dir>/_graft_log` — the
+  * commit log Structured Streaming trusts for exactly-once, on any Hadoop
+  * `FileSystem`. A rerun with the same fingerprint short-circuits to a plain
+  * read — the unit of resume is the committed stage/partition, which is
+  * what a spark-submit retry of a 10^12-row pipeline needs to skip. A crash
+  * before the log entry lands leaves no committed manifest, so the stage
+  * recomputes; a half-trusted stage is never read.
   */
 object Checkpoint {
 
@@ -25,55 +26,21 @@ object Checkpoint {
   final case class Manifest(stage: String, snapshotId: String, fingerprint: String,
                             totalRows: Long, partitions: Seq[PartitionEntry])
 
-  private def manifestPath(dir: String) = Paths.get(dir, "_graft_manifest.json")
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  def writeManifest(dir: String, m: Manifest): Unit = {
-    val parts = m.partitions
-      .map(p => s"""{"value":"${esc(p.value)}","rows":${p.rows}}""")
-      .mkString("[", ",", "]")
-    val json =
-      s"""{"stage":"${esc(m.stage)}","snapshot_id":"${esc(m.snapshotId)}",""" +
-        s""""fingerprint":"${esc(m.fingerprint)}","total_rows":${m.totalRows},""" +
-        s""""partitions":$parts}"""
-    val tmp = Paths.get(dir, "_graft_manifest.json.tmp")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def readManifestFingerprint(dir: String): Option[String] = {
-    val p = manifestPath(dir)
-    if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val m = """"fingerprint":"([^"]*)"""".r.findFirstMatchIn(s)
-    m.map(_.group(1))
-  }
-
-  /** Committed total row count — lets a resumed consumer skip re-counting. */
-  def readManifestTotal(dir: String): Option[Long] = {
-    val p = manifestPath(dir)
-    if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    """"total_rows":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
+  /** The manifest committed under `dir`, if any stage has committed there. */
+  def committed(spark: SparkSession, dir: String): Option[Manifest] = {
+    val log = new Path(dir, "_graft_log")
+    if (!log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log)) None
+    else new HDFSMetadataLog[Manifest](spark, log.toString).get(0L)
   }
 
   /** Run a stage: if `dir` holds a committed manifest for this fingerprint,
     * read it back (resume); otherwise compute, write partitioned Parquet,
-    * collect per-partition lineage counts, and commit the manifest. */
+    * collect per-partition lineage counts, and commit the manifest. Returns
+    * the stage's rows and its committed manifest. */
   def stage(spark: SparkSession, dir: String, stageName: String, fingerprint: String,
-            partitionCol: Option[String])(compute: => DataFrame): DataFrame = {
-    if (readManifestFingerprint(dir).contains(fingerprint)) {
-      return spark.read.parquet(dir)
-    }
+            partitionCol: Option[String])(compute: => DataFrame): (DataFrame, Manifest) = {
+    val prior = committed(spark, dir).filter(_.fingerprint == fingerprint)
+    if (prior.isDefined) return (spark.read.parquet(dir), prior.get)
     val df = compute
     val writer = df.write.mode(SaveMode.Overwrite)
     partitionCol match {
@@ -92,8 +59,12 @@ object Checkpoint {
         (Seq(PartitionEntry("*", n)), n)
     }
     val snapshotId = java.util.UUID.nameUUIDFromBytes(
-      (stageName + ":" + fingerprint).getBytes(StandardCharsets.UTF_8)).toString
-    writeManifest(dir, Manifest(stageName, snapshotId, fingerprint, total, entries))
-    written
+      (stageName + ":" + fingerprint).getBytes("UTF-8")).toString
+    val m = Manifest(stageName, snapshotId, fingerprint, total, entries)
+    // the log is built only now: the Overwrite above deletes everything
+    // under `dir`, a log opened before it included
+    require(new HDFSMetadataLog[Manifest](spark, s"$dir/_graft_log").add(0L, m),
+      s"stage $stageName: another writer committed $dir concurrently")
+    (written, m)
   }
 }

@@ -1,6 +1,8 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
 
 /** Z-ordered data layout + file-level bbox pruning — the storage-side half
@@ -8,9 +10,11 @@ import org.apache.spark.sql.functions._
   *
   * [[writeZOrdered]] range-partitions a point table by its Morton key
   * (st_zorder) and sorts within partitions, so each output file covers a
-  * compact spatial extent; a manifest of per-file lat/lon min/max is then
-  * computed in one distributed pass over the written files. [[readBBox]]
-  * consults the manifest and hands Spark ONLY the files whose bbox
+  * compact spatial extent; per-file lat/lon min/max are then computed in
+  * one distributed pass over the written files and committed as the next
+  * batch of Spark's `HDFSMetadataLog` under `dir/_graft_log` (the per-file
+  * skipping metadata of Jigsaw, SIGMOD 2021). [[readBBox]] consults the
+  * latest committed batch and hands Spark ONLY the files whose bbox
   * intersects the query box — pruning happens before task planning, exactly
   * like Iceberg metadata pruning, and composes with parquet row-group
   * min/max skipping inside the surviving files (the zkey sort makes the
@@ -19,20 +23,21 @@ import org.apache.spark.sql.functions._
   * Scale shape: the write is one range shuffle (range boundaries from
   * Spark's reservoir sample of the zkey distribution — skewed hotspots just
   * get more files); the manifest pass is a file-count-sized aggregate; the
-  * driver only ever materializes the manifest (one row per file — ~10^5
-  * rows for a 100 TB table at 1 GB files), never data.
+  * driver only ever materializes the manifest (one entry per file — ~10^5
+  * for a 100 TB table at 1 GB files), never data, and reads it back with
+  * no Spark job.
   */
 object Layout {
 
   /** Write `pts` (must carry lat/lon) z-ordered into `dir/data` as
-    * `numFiles` range-partitioned files plus `dir/manifest` with per-file
-    * (file, min/max lat/lon, n_rows). `bits` is the curve resolution per
-    * axis — 16 gives ~600 m cells at the equator, far finer than any
-    * realistic file extent. `curve` picks the space-filling curve:
-    * "morton" (st_zorder, default) or "hilbert" (st_hilbert — no Z jumps,
-    * so file bboxes come out tighter and pruning skips more files; the
-    * measured A/B lives in BASELINE.md). The key column is `zkey` either
-    * way. */
+    * `numFiles` range-partitioned files, then commit the per-file
+    * (file, min/max lat/lon) manifest to `dir/_graft_log`. `bits` is the
+    * curve resolution per axis — 16 gives ~600 m cells at the equator, far
+    * finer than any realistic file extent. `curve` picks the space-filling
+    * curve: "morton" (st_zorder, default) or "hilbert" (st_hilbert — no Z
+    * jumps, so file bboxes come out tighter and pruning skips more files;
+    * the measured A/B lives in BASELINE.md). The key column is `zkey`
+    * either way. */
   def writeZOrdered(pts: DataFrame, dir: String, bits: Int = 16,
                     numFiles: Int = 16, curve: String = "morton"): Unit = {
     val fn = curve match {
@@ -46,35 +51,42 @@ object Layout {
       .repartitionByRange(numFiles, col("zkey"))
       .sortWithinPartitions("zkey")
       .write.mode("overwrite").parquet(s"$dir/data")
-    spark.read.parquet(s"$dir/data")
+    val entries = spark.read.parquet(s"$dir/data")
       .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min("lat").as("min_lat"), max("lat").as("max_lat"),
-        min("lon").as("min_lon"), max("lon").as("max_lon"),
-        count(lit(1)).as("n_rows"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/manifest")
+      .agg(min("lat"), max("lat"), min("lon"), max("lon"))
+      .collect()
+      .map(r => Entry(r.getString(0), r.getDouble(1), r.getDouble(2),
+        r.getDouble(3), r.getDouble(4))).toSeq
+    val log = new HDFSMetadataLog[LayoutFiles](spark, s"$dir/_graft_log")
+    val next = log.getLatestBatchId().fold(0L)(_ + 1)
+    require(log.add(next, LayoutFiles(entries)),
+      s"another writer committed a layout under $dir concurrently")
+    log.purge(next)
   }
 
   private final case class Entry(file: String, minLat: Double, maxLat: Double,
                                  minLon: Double, maxLon: Double)
+  private final case class LayoutFiles(files: Seq[Entry])
 
-  /** Load the manifest ONCE (one Spark job — it is file-count-sized, the
-    * driver holds it by design, like Iceberg's manifest list) and verify it
-    * describes EXACTLY the files on disk: a crash between a data overwrite
-    * and its manifest rewrite would otherwise leave a stale manifest
-    * silently pruning with wrong bboxes. One directory listing per read;
-    * fails loudly on any mismatch. */
+  /** Load the latest committed manifest (a driver-side log read, no Spark
+    * job — it is file-count-sized, the driver holds it by design, like
+    * Iceberg's manifest list) and verify it describes EXACTLY the files on
+    * disk: a crash between a data overwrite and its log commit would
+    * otherwise leave a stale manifest silently pruning with wrong bboxes.
+    * One directory listing per read; fails loudly on any mismatch. */
   private def loadManifest(spark: SparkSession, dir: String): Seq[Entry] = {
     // compare scheme-normalized paths (file:/ vs file:/// spellings differ
     // between _metadata.file_path and FileSystem.listStatus)
-    def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    val entries = spark.read.parquet(s"$dir/manifest")
-      .select("file", "min_lat", "max_lat", "min_lon", "max_lon").collect()
-      .map(r => Entry(r.getString(0), r.getDouble(1), r.getDouble(2),
-        r.getDouble(3), r.getDouble(4))).toSeq
-    val path = new org.apache.hadoop.fs.Path(s"$dir/data")
+    def norm(p: String): String = new Path(p).toUri.getPath
+    val path = new Path(s"$dir/data")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = path.getFileSystem(conf)
+    val log = new Path(dir, "_graft_log")
+    val latest =
+      if (fs.exists(log)) new HDFSMetadataLog[LayoutFiles](spark, log.toString).getLatest()
+      else None
+    require(latest.isDefined, s"no layout committed under $dir")
+    val entries = latest.get._2.files
     val onDiskPaths = fs.listStatus(path).map(_.getPath)
       .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
     val onDisk = onDiskPaths.map(p => norm(p.toString)).toSet

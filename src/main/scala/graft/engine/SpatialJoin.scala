@@ -335,20 +335,6 @@ object SpatialJoin {
       .drop("rings", "jcell")
   }
 
-  /** Containment-only variants: docs that have >=1 point in any polygon
-    * (left-semi) or in none (left-anti) — no row multiplication. */
-  def containedDocs(points: DataFrame, polys: DataFrame,
-                    level: Int = DefaultLevel): DataFrame = {
-    val hits = join(points, polys, level).select("doc_id").distinct()
-    points.select("doc_id").distinct().join(hits, Seq("doc_id"), "left_semi")
-  }
-
-  def uncontainedDocs(points: DataFrame, polys: DataFrame,
-                      level: Int = DefaultLevel): DataFrame = {
-    val hits = join(points, polys, level).select("doc_id").distinct()
-    points.select("doc_id").distinct().join(hits, Seq("doc_id"), "left_anti")
-  }
-
   /** Fixed-radius distance join: every (site, point) pair within `radiusM`
     * metres — the "all points near each site" query between kNN (nearest k)
     * and PIP containment (polygon membership).

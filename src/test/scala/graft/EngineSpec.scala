@@ -159,8 +159,8 @@ class EngineSpec extends AnyFunSuite {
     val docs = Corpus.documentsDf(spark, 500, partitions = 4)
     val polys = Corpus.polygons(spark).toDF()
     val points = SpatialJoin.extractPoints(docs).cache()
-    val in = SpatialJoin.containedDocs(points, polys).collect().map(_.getString(0)).toSet
-    val outD = SpatialJoin.uncontainedDocs(points, polys).collect().map(_.getString(0)).toSet
+    val in = Containment.containedDocs(points, polys).collect().map(_.getString(0)).toSet
+    val outD = Containment.uncontainedDocs(points, polys).collect().map(_.getString(0)).toSet
     val all = points.select("doc_id").distinct().collect().map(_.getString(0)).toSet
     assert((in intersect outD).isEmpty)
     assert((in union outD) == all)
@@ -400,12 +400,12 @@ class EngineSpec extends AnyFunSuite {
       Corpus.documentsDf(spark, 100, partitions = 2)
         .withColumn("pfx", substring(col("doc_id"), 1, 5))
     }
-    val a = Checkpoint.stage(spark, dir, "docs", "fp-v1", Some("pfx"))(body)
+    val (a, _) = Checkpoint.stage(spark, dir, "docs", "fp-v1", Some("pfx"))(body)
     assert(computes == 1 && a.count() == 100)
-    val b = Checkpoint.stage(spark, dir, "docs", "fp-v1", Some("pfx"))(body)
+    val (b, _) = Checkpoint.stage(spark, dir, "docs", "fp-v1", Some("pfx"))(body)
     assert(computes == 1, "stage recomputed despite committed manifest")
     assert(b.count() == 100)
-    val fp = Checkpoint.readManifestFingerprint(dir)
+    val fp = Checkpoint.committed(spark, dir).map(_.fingerprint)
     assert(fp.contains("fp-v1"))
     // changed fingerprint -> recompute
     Checkpoint.stage(spark, dir, "docs", "fp-v2", Some("pfx"))(body)

@@ -50,7 +50,7 @@ class PipelineJobSpec extends AnyFunSuite {
 
     // manifests committed with per-partition lineage
     for (st <- Seq("clean", "profile", "points", "joined", "tiles", "pyramid"))
-      assert(graft.engine.Checkpoint.readManifestFingerprint(s"$out/$st").isDefined, st)
+      assert(graft.engine.Checkpoint.committed(spark, s"$out/$st").isDefined, st)
 
     // rerun: every stage must resume from its manifest with identical rows
     val second = Pipeline.run(spark, docsDir, "synthetic", out, 5, 7).toMap

@@ -157,9 +157,9 @@ class PlanSpec extends AnyFunSuite {
     val docs = Corpus.documentsDf(spark, 200, partitions = 2)
     val polys = Corpus.polygons(spark).toDF()
     val pts = SpatialJoin.extractPoints(docs)
-    val semi = physical(SpatialJoin.containedDocs(pts, polys))
+    val semi = physical(Containment.containedDocs(pts, polys))
     assert(semi.contains("LeftSemi"), s"no left-semi join:\n${semi.take(1500)}")
-    val anti = physical(SpatialJoin.uncontainedDocs(pts, polys))
+    val anti = physical(Containment.uncontainedDocs(pts, polys))
     assert(anti.contains("LeftAnti"), s"no left-anti join:\n${anti.take(1500)}")
   }
 
