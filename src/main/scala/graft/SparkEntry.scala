@@ -431,7 +431,7 @@ object SparkEntry {
       val s = prep(spark)
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
       val polys = Corpus.storedPolys(s, corpusDocs(dir))
-      SpatialJoin.joinRange(SpatialJoin.extractPoints(docs), polys)
+      SpatialJoin.joinRangeWithIndex(SpatialJoin.extractPoints(docs), SpatialJoin.buildIndex(polys))
         .select(col("doc_id"), col("offset"), col("poly_id"))
         .orderBy(col("doc_id"), col("offset"), col("poly_id"))
     }),
@@ -1017,11 +1017,9 @@ object SparkEntry {
       // reuse the batch index builder: covering + levels probe computed once
       val index = SpatialJoin.buildIndex(polys, cache = true)
       val pts = SpatialJoin.extractPoints(s.readStream.schema(sch).parquet(docsPath))
-        .withColumn("jcell",
-          explode(array(index.levels.map(l => substring(col("cell"), 1, l)): _*)))
       val outBase = scratchDir("q69", dir)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = graft.streaming.Streams.spatialJoinStream(pts, index.cells, index.rings)
+      val q = SpatialJoin.joinWithIndex(pts, index)
         .select(col("doc_id"), col("offset"), col("poly_id"))
         .writeStream
         .format("parquet")

@@ -14,17 +14,34 @@ import org.apache.spark.sql.functions._
   * [[Manifest]] (snapshot id, input fingerprint, per-partition row counts)
   * as batch 0 of Spark's `HDFSMetadataLog` under `<dir>/_graft_log` — the
   * commit log Structured Streaming trusts for exactly-once, on any Hadoop
-  * `FileSystem`. A rerun with the same fingerprint short-circuits to a plain
-  * read — the unit of resume is the committed stage/partition, which is
-  * what a spark-submit retry of a 10^12-row pipeline needs to skip. A crash
-  * before the log entry lands leaves no committed manifest, so the stage
-  * recomputes; a half-trusted stage is never read.
+  * `FileSystem`. A rerun with the same fingerprint AND the same data files
+  * on disk short-circuits to a plain read — the unit of resume is the
+  * committed stage/partition, which is what a spark-submit retry of a
+  * 10^12-row pipeline needs to skip. A crash before the log entry lands
+  * leaves no committed manifest, and a part file lost or added after the
+  * commit no longer matches the committed file set; either way the stage
+  * recomputes, so a half-trusted stage is never read.
   */
 object Checkpoint {
 
   final case class PartitionEntry(value: String, rows: Long)
   final case class Manifest(stage: String, snapshotId: String, fingerprint: String,
-                            totalRows: Long, partitions: Seq[PartitionEntry])
+                            totalRows: Long, partitions: Seq[PartitionEntry],
+                            files: Seq[String])
+
+  /** Scheme-normalized path: `file:/` vs `file:///` spellings differ between
+    * `Dataset.inputFiles` and `FileSystem` listings. */
+  private def norm(p: String): String = new Path(p).toUri.getPath
+
+  /** The Parquet data files under `dir`, partition directories included. */
+  private def dataFiles(spark: SparkSession, dir: String): Set[String] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(path, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
+      .map(p => norm(p.toString)).toSet
+  }
 
   /** The manifest committed under `dir`, if any stage has committed there. */
   def committed(spark: SparkSession, dir: String): Option[Manifest] = {
@@ -33,13 +50,17 @@ object Checkpoint {
     else new HDFSMetadataLog[Manifest](spark, log.toString).get(0L)
   }
 
-  /** Run a stage: if `dir` holds a committed manifest for this fingerprint,
-    * read it back (resume); otherwise compute, write partitioned Parquet,
-    * collect per-partition lineage counts, and commit the manifest. Returns
-    * the stage's rows and its committed manifest. */
+  /** Run a stage: if `dir` holds a committed manifest for this fingerprint
+    * whose file set is exactly the data files on disk, read it back
+    * (resume); otherwise compute, write partitioned Parquet, collect
+    * per-partition lineage counts, and commit the manifest. Returns the
+    * stage's rows and its committed manifest. A manifest committed
+    * without a file list reads back with an empty one, so its stage
+    * recomputes once. */
   def stage(spark: SparkSession, dir: String, stageName: String, fingerprint: String,
             partitionCol: Option[String])(compute: => DataFrame): (DataFrame, Manifest) = {
-    val prior = committed(spark, dir).filter(_.fingerprint == fingerprint)
+    val prior = committed(spark, dir).filter(m => m.fingerprint == fingerprint &&
+      m.files.toSet == dataFiles(spark, dir))
     if (prior.isDefined) return (spark.read.parquet(dir), prior.get)
     val df = compute
     val writer = df.write.mode(SaveMode.Overwrite)
@@ -60,7 +81,8 @@ object Checkpoint {
     }
     val snapshotId = java.util.UUID.nameUUIDFromBytes(
       (stageName + ":" + fingerprint).getBytes("UTF-8")).toString
-    val m = Manifest(stageName, snapshotId, fingerprint, total, entries)
+    val m = Manifest(stageName, snapshotId, fingerprint, total, entries,
+      written.inputFiles.map(norm).toSeq.sorted)
     // the log is built only now: the Overwrite above deletes everything
     // under `dir`, a log opened before it included
     require(new HDFSMetadataLog[Manifest](spark, s"$dir/_graft_log").add(0L, m),

@@ -45,15 +45,6 @@ object Dedup {
   private def shingled(docs: DataFrame, textCol: String): DataFrame =
     docs.select(col("doc_id"), shingles(col(textCol)).as("shingles"))
 
-  /** MinHash signature via the codegen'd st_minhash kernel: one MD5 per
-    * shingle, Kirsch-Mitzenmacher double hashing for the family, unsigned
-    * min per hash. Emitted through a Generate barrier so the signature is
-    * evaluated exactly once however many band expressions consume it. */
-  def minhashSignature(docs: DataFrame, textCol: String = "text",
-                       numHashes: Int = 32): DataFrame =
-    shingled(docs, textCol).select(col("doc_id"), col("shingles"),
-      call_function("st_minhash", col("shingles"), lit(numHashes)).as("sig"))
-
   /** (doc_id, band, bucket) LSH band-bucket rows, hot buckets capped. */
   private def bandBuckets(sh: DataFrame,
                           numHashes: Int, bands: Int, maxBucket: Int): DataFrame = {
@@ -80,40 +71,14 @@ object Dedup {
     * verify with true shingle Jaccard. Returns (doc_a, doc_b, jaccard) with
     * doc_a < doc_b, jaccard >= threshold.
     *
-    * Shingle recompute-vs-store: the shingle projection is consumed twice —
-    * banding and Jaccard verification. By default it is RECOMPUTED (two
-    * tokenization passes over the corpus); `stageShingles = true` persists
-    * it (memory/disk) between the two consumers instead.
-    *
-    * Measured (sf0.1 documents, local[16], SparkListener task metrics —
-    * exact, unlike wall time on this shared host): the stored shingle
-    * projection occupies 4.7x the raw text bytes (7.0 MB cached vs 1.5 MB of
-    * text), and the staged run was strictly worse end-to-end — warm wall
-    * 1.37 s vs 1.17 s, executor CPU 0.81 s vs 0.49 s, shuffle write 3.2 MB
-    * vs 1.6 MB (cache-block reads also re-enter the read path: 49.5 MB of
-    * reported input vs the recompute plan's direct scans). AT 100 TB THE
-    * DEFAULT IS RECOMPUTE: a ~5x blowup of the corpus in executor
-    * memory/disk per wave buys nothing — the columnar re-scan plus
-    * re-tokenization CPU is the cheaper currency. Flip to staging only when
-    * the input scan itself is the bottleneck (e.g. remote cold storage).
-    *
-    * Lifecycle caveat: with `stageShingles = true` the persisted projection
-    * stays pinned in executor storage for the session (the returned lazy
-    * plan references it, so this method cannot unpersist it) — the caller
-    * owns the release: materialize the result, then
-    * `spark.catalog.clearCache()` or track/unpersist via
-    * `spark.sparkContext.getPersistentRDDs`. Another reason the default
-    * is recompute. */
+    * The shingle projection is consumed twice — banding and Jaccard
+    * verification — and is recomputed for each rather than stored: the
+    * stored projection measured 4.7x the raw text bytes and slower end to
+    * end (sf0.1 documents, local[16]). */
   def minhashLsh(docs: DataFrame, textCol: String = "text",
                  numHashes: Int = 32, bands: Int = 8,
-                 threshold: Double = 0.7, maxBucket: Int = 64,
-                 stageShingles: Boolean = false): DataFrame = {
-    val sh = {
-      val s0 = shingled(docs, textCol)
-      if (stageShingles)
-        s0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else s0
-    }
+                 threshold: Double = 0.7, maxBucket: Int = 64): DataFrame = {
+    val sh = shingled(docs, textCol)
     val banded = bandBuckets(sh, numHashes, bands, maxBucket)
     val a = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
     val b = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b"))

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.expr.GraftFunctions._
 
@@ -13,10 +13,11 @@ import graft.expr.GraftFunctions._
   *  - the polygon side is exploded into its covering cells (superset-exact
   *    covering) — polygons are the small side and are broadcast by default,
   *    so the fact side never shuffles for the join itself;
-  *  - for very large polygon layers, `salted = true` spreads hot cells: the
-  *    fact side gets salt = pmod(xxhash64(doc_id, offset), S) and the polygon
-  *    side replicates each covering cell S times (explicit skew handling; AQE
-  *    skew-join remains as a backstop for the sort-merge path).
+  *  - for polygon layers too large to broadcast, `salt = S > 1` spreads hot
+  *    cells: the fact side gets salt = pmod(xxhash64(doc_id, offset), S) and
+  *    the polygon side replicates each covering cell S times on a shuffle
+  *    join (explicit skew handling; AQE skew-join remains as a backstop for
+  *    the sort-merge path).
   */
 object SpatialJoin {
 
@@ -61,35 +62,11 @@ object SpatialJoin {
     * dimension shuffle shrinks by the per-polygon cell count times the
     * geometry size, which at a production layer (10^6 polygons x up to 1024
     * cells x KB-scale rings) is the difference between a feasible and an
-    * impossible broadcast.
-    *
-    * `compact` pipes the covering through `st_compact_cells` (H3
-    * compactCells analogue): complete 32-sibling sets collapse into their
-    * parent, shrinking the broadcast/shuffle payload the covering becomes
-    * (-41% rows on the hotspot layer) — coverage is EXACTLY preserved and
-    * the compacted cells stay pairwise disjoint, so join results are
-    * bit-identical (gated by q31/q56). Default OFF here on purpose: the
-    * per-level EXPLODE join ([[joinWithIndex]]) multiplies the FACT-side
-    * probe stream by the number of distinct covering levels, and
-    * compacting a single-level adaptive covering introduces coarser levels
-    * — measured ~25% slower end-to-end on the explode path at sf0.1
-    * (BASELINE.md compaction A/B) and strictly worse at 100 TB, where the
-    * probe stream is the dominant cost. Turn it ON when the covering
-    * itself is the bottleneck: [[joinRangeWithIndex]] (one probe row per
-    * point regardless of levels), memory-constrained broadcasts, or very
-    * large layers on the non-broadcast path. [[joinMulti]] compacts
-    * unconditionally — its covering is already multi-level and flows
-    * through dimension-side shuffles the compaction shrinks (measured
-    * parity-to-better there). */
+    * impossible broadcast. */
   def polygonCells(polys: DataFrame, level: Int = DefaultLevel,
-                   maxCells: Int = MaxCellsPerPolygon,
-                   compact: Boolean = false): DataFrame = {
-    val cover = call_function("st_cover_cells_adaptive",
-      col("ring"), lit(level), lit(maxCells))
-    polys.select(col("poly_id"),
-      explode(if (compact) call_function("st_compact_cells", cover) else cover)
-        .as("cell"))
-  }
+                   maxCells: Int = MaxCellsPerPolygon): DataFrame =
+    polys.select(col("poly_id"), explode(call_function("st_cover_cells_adaptive",
+      col("ring"), lit(level), lit(maxCells))).as("cell"))
 
   /** Prepared polygon side: covering rows (poly_id, cell), the distinct
     * covering levels, and the ring geometry (poly_id, ring) — one row per
@@ -117,8 +94,8 @@ object SpatialJoin {
 
   def buildIndex(polys: DataFrame, level: Int = DefaultLevel,
                  maxCells: Int = MaxCellsPerPolygon,
-                 cache: Boolean = false, compact: Boolean = false): PolygonIndex = {
-    val pc = polygonCells(polys, level, maxCells, compact)
+                 cache: Boolean = false): PolygonIndex = {
+    val pc = polygonCells(polys, level, maxCells)
     val pcc = if (cache) pc.cache() else pc
     val rings = polys.select(col("poly_id"), col("ring"))
     val ringsC = if (cache) rings.cache() else rings
@@ -135,60 +112,55 @@ object SpatialJoin {
     * one level so no duplicate matches arise. The distinct-levels probe is a
     * plan-time action on the dimension-sized polygon side only.
     *
-    * broadcastPolys: hint the (small) polygon-cell side for a broadcast hash
-    * join — the default for dimension-sized layers. With salted > 1 the join
-    * key becomes (cell, salt) to split hot cells across reducers. */
+    * broadcastPolys: broadcast the (small) polygon-cell side — the default
+    * for dimension-sized layers; false plans a sort-merge join. `salt` > 1
+    * plans a shuffle join keyed on (cell, salt) that splits hot cells
+    * across reducers, whatever `broadcastPolys` says. */
   def join(points: DataFrame, polys: DataFrame, level: Int = DefaultLevel,
            broadcastPolys: Boolean = true, salt: Int = 1): DataFrame =
     joinWithIndex(points, buildIndex(polys, level), broadcastPolys, salt)
 
-  /** Join against a prebuilt polygon index (static-layer fast path).
+  /** Points keyed for the per-level equi-join: one row per distinct covering
+    * level, `jcell` = the point cell's prefix at that level. */
+  private def keyed(points: DataFrame, levels: Array[Int]): DataFrame =
+    points.withColumn("jcell", explode(array(levels.map(l => substring(col("cell"), 1, l)): _*)))
+
+  /** The broadcast cell probe: keyed points join the broadcast (poly_id,
+    * cell) covering on `jcell`, then each candidate picks up its polygon's
+    * geometry from a second broadcast keyed on poly_id (one row per polygon
+    * — never one per covering cell). Both joins use `how`; the caller runs
+    * the PIP refine. */
+  private def probe(points: DataFrame, index: PolygonIndex, how: String): DataFrame =
+    keyed(points, index.levels)
+      .join(broadcast(index.cells.withColumnRenamed("cell", "jcell")), Seq("jcell"), how)
+      .join(broadcast(index.rings), Seq("poly_id"), how)
+
+  /** Join against a prebuilt polygon index (static-layer fast path; the
+    * points may be a streaming frame — the index is a static dimension, so
+    * the stream-static join needs no state). Same arms as [[join]].
     *
-    * Broadcast path: the cell join ships only (poly_id, cell) rows; each
-    * matched candidate then picks up its ring from a second broadcast keyed
-    * on poly_id (one ring per polygon — never one per covering cell), and
-    * the PIP refine runs last. Non-broadcast path: the ring-carrying
-    * covering is reconstructed with a DIMENSION-side join first, so the
-    * fact side still shuffles exactly once on the cell key (attaching rings
-    * after the shuffle join would re-shuffle fact-sized candidates by
-    * poly_id instead). */
+    * The non-broadcast arms rebuild the ring-carrying covering with a
+    * DIMENSION-side join first, so the fact side still shuffles exactly once
+    * on the cell key (attaching rings after the shuffle join would
+    * re-shuffle fact-sized candidates by poly_id instead). */
   def joinWithIndex(points: DataFrame, index: PolygonIndex,
                     broadcastPolys: Boolean = true, salt: Int = 1): DataFrame = {
-    val pc0 = index.cells
-    val levels = index.levels
-    val prefixes = array(levels.map(l => substring(col("cell"), 1, l)): _*)
-    val keyedPoints = points
-      .withColumn("jcell", explode(prefixes))
     val outCols = points.columns.map(col) :+ col("poly_id")
-    val refined: DataFrame => DataFrame = df =>
-      df.where(call_function("st_point_in_polygon", col("lat"), col("lon"), col("ring")))
-        .select(outCols: _*)
-    // fat covering for the non-broadcast arms: (poly_id, cell, ring) rebuilt
-    // on the dimension side (rings attach before the fact-side shuffle)
-    def fat: DataFrame = pc0.join(index.rings, Seq("poly_id"))
-    if (salt <= 1) {
-      if (broadcastPolys)
-        refined(keyedPoints
-          .join(broadcast(pc0.withColumnRenamed("cell", "jcell")), Seq("jcell"), "inner")
-          .join(broadcast(index.rings), Seq("poly_id"), "inner"))
-      else
-        // hint sort-merge so both sides range-partition on the cell key
-        // (the "range-partition join" path for layers too large to broadcast)
-        refined(keyedPoints.join(
-          fat.withColumnRenamed("cell", "jcell").hint("merge"), Seq("jcell"), "inner"))
-    } else {
-      val saltedPoints = keyedPoints.withColumn(
-        "salt", pmod(xxhash64(col("doc_id"), col("offset")), lit(salt)).cast("int"))
-      def salted(cells: DataFrame): DataFrame = cells
-        .withColumnRenamed("cell", "jcell")
-        .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-      if (broadcastPolys)
-        refined(saltedPoints
-          .join(broadcast(salted(pc0)), Seq("jcell", "salt"), "inner")
-          .join(broadcast(index.rings), Seq("poly_id"), "inner"))
-      else
-        refined(saltedPoints.join(salted(fat), Seq("jcell", "salt"), "inner"))
-    }
+    // fat covering for the shuffle arms: (poly_id, jcell, ring)
+    def fat: DataFrame = index.cells.join(index.rings, Seq("poly_id"))
+      .withColumnRenamed("cell", "jcell")
+    val cand =
+      if (salt > 1)
+        keyed(points, index.levels)
+          .withColumn("salt", pmod(xxhash64(col("doc_id"), col("offset")), lit(salt)).cast("int"))
+          .join(fat.withColumn("salt", explode(sequence(lit(0), lit(salt - 1)))),
+            Seq("jcell", "salt"), "inner")
+      else if (broadcastPolys) probe(points, index, "inner")
+      // hint sort-merge so both sides range-partition on the cell key (the
+      // "range-partition join" path for layers too large to broadcast)
+      else keyed(points, index.levels).join(fat.hint("merge"), Seq("jcell"), "inner")
+    cand.where(call_function("st_point_in_polygon", col("lat"), col("lon"), col("ring")))
+      .select(outCols: _*)
   }
 
   /** Prefix range-join variant: joins WITHOUT exploding the fact side.
@@ -200,7 +172,9 @@ object SpatialJoin {
     * it, and refine with a prefix-containment filter (the interval test
     * cellMin <= cell < cellMax, expressed as startsWith) + exact PIP. One row
     * per point and one row per covering cell enter the join regardless of
-    * how many covering levels the layer mixes.
+    * how many covering levels the layer mixes. The covering is broadcast
+    * ring-free; the prefix-containment filter prunes candidates BEFORE each
+    * survivor picks up its ring from the one-row-per-polygon broadcast.
     *
     * Trade-off: candidate pairs = points x covering-cells within each pivot
     * cell, so a very coarse pivot level concentrates more candidates per key
@@ -210,8 +184,7 @@ object SpatialJoin {
     *
     * Requires points extracted at a level >= index.levels.max (the default
     * extraction level is also the covering maxLevel, so this holds). */
-  def joinRangeWithIndex(points: DataFrame, index: PolygonIndex,
-                         broadcastPolys: Boolean = true): DataFrame = {
+  def joinRangeWithIndex(points: DataFrame, index: PolygonIndex): DataFrame = {
     val pivot = index.levels.min
     val outCols = points.columns.map(col) :+ col("poly_id")
     // join key = xxhash64 of the pivot prefix, not the string itself: long
@@ -220,31 +193,15 @@ object SpatialJoin {
     // a colliding pair has different pivot prefixes, and `cell startsWith
     // ccell` forces equal pivot prefixes (len(ccell) >= pivot), so no
     // collision can survive the containment re-check below.
-    def keyed(cells: DataFrame): DataFrame = cells.select(
-      Seq(col("poly_id"), col("cell").as("ccell"),
-        xxhash64(substring(col("cell"), 1, pivot)).as("pkey")) ++
-        (if (cells.columns.contains("ring")) Seq(col("ring")) else Nil): _*)
-    val probed = points.withColumn("pkey", xxhash64(substring(col("cell"), 1, pivot)))
-    val cand =
-      if (broadcastPolys)
-        // ring-free covering in the broadcast; the prefix-containment filter
-        // prunes candidates BEFORE each survivor picks up its ring from the
-        // one-row-per-polygon broadcast
-        probed.join(broadcast(keyed(index.cells)), Seq("pkey"), "inner")
-          .where(col("cell").startsWith(col("ccell")))
-          .join(broadcast(index.rings), Seq("poly_id"), "inner")
-      else
-        probed.join(keyed(index.cells.join(index.rings, Seq("poly_id"))).hint("merge"),
-            Seq("pkey"), "inner")
-          .where(col("cell").startsWith(col("ccell")))
-    cand
+    val cells = index.cells.select(col("poly_id"), col("cell").as("ccell"),
+      xxhash64(substring(col("cell"), 1, pivot)).as("pkey"))
+    points.withColumn("pkey", xxhash64(substring(col("cell"), 1, pivot)))
+      .join(broadcast(cells), Seq("pkey"), "inner")
+      .where(col("cell").startsWith(col("ccell")))
+      .join(broadcast(index.rings), Seq("poly_id"), "inner")
       .where(call_function("st_point_in_polygon", col("lat"), col("lon"), col("ring")))
       .select(outCols: _*)
   }
-
-  def joinRange(points: DataFrame, polys: DataFrame, level: Int = DefaultLevel,
-                broadcastPolys: Boolean = true): DataFrame =
-    joinRangeWithIndex(points, buildIndex(polys, level), broadcastPolys)
 
   /** Multi-ring spatial join: polygons with holes and/or multipolygons
     * (`polys`: poly_id, rings: array<array<struct<lat,lon>>>).
@@ -298,7 +255,7 @@ object SpatialJoin {
     // keyed on poly_id, where both sides co-partition and each polygon's
     // cells (<= maxCells) meet within one task.
     val ringsDim = polys.select(col("poly_id"), col("rings"))
-    val (levels, pc) =
+    val cand =
       if (broadcastPolys) {
         val rows = rawCells.collect()
         val byPoly = rows.groupBy(_.getString(0))
@@ -312,24 +269,21 @@ object SpatialJoin {
         val ls = keep.map(_.getString(1).length).distinct.sorted
         val local = rawCells.sparkSession.createDataFrame(
           java.util.Arrays.asList(keep: _*), rawCells.schema)
-        (ls, broadcast(local.withColumnRenamed("cell", "jcell")))
+        probe(points, PolygonIndex(local, ls.toArray, ringsDim), "inner")
       } else {
         val cells0 = rawCells.dropDuplicates("poly_id", "cell")
         val pruned = cells0.alias("a").join(cells0.hint("merge").alias("b"),
             col("a.poly_id") === col("b.poly_id") &&
               length(col("b.cell")) < length(col("a.cell")) &&
               col("a.cell").startsWith(col("b.cell")), "left_anti")
-          .select(col("a.poly_id").as("poly_id"), col("a.cell").as("cell"))
-        val ls = pruned.select(length(col("cell")).as("l"))
-          .distinct().collect().map(_.getInt(0)).sorted.toSeq
-        (ls, pruned.withColumnRenamed("cell", "jcell").hint("merge"))
+          .select(col("a.poly_id").as("poly_id"), col("a.cell").as("jcell"))
+        val ls = pruned.select(length(col("jcell")).as("l"))
+          .distinct().collect().map(_.getInt(0)).sorted
+        keyed(points, ls)
+          .join(pruned.hint("merge"), Seq("jcell"), "inner")
+          .join(ringsDim.hint("merge"), Seq("poly_id"), "inner")
       }
-    val prefixes = array(levels.map(l => substring(col("cell"), 1, l)): _*)
-    val ringsSide = if (broadcastPolys) broadcast(ringsDim) else ringsDim.hint("merge")
-    points
-      .withColumn("jcell", explode(prefixes))
-      .join(pc, Seq("jcell"), "inner")
-      .join(ringsSide, Seq("poly_id"), "inner")
+    cand
       .where(call_function("st_point_in_polygon_multi",
         col("lat"), col("lon"), col("rings")))
       .drop("rings", "jcell")
@@ -463,13 +417,7 @@ object SpatialJoin {
       // drop every row and empty the domain
       return points.select(col("doc_id")).distinct()
         .withColumn("status", lit("out"))
-    val prefixes = array(index.levels.map(l => substring(col("cell"), 1, l)): _*)
-    points
-      .select(col("doc_id"), col("lat"), col("lon"), col("cell"))
-      .withColumn("jcell", explode(prefixes))
-      .join(broadcast(index.cells.withColumnRenamed("cell", "jcell")),
-        Seq("jcell"), "left_outer")
-      .join(broadcast(index.rings), Seq("poly_id"), "left_outer")
+    probe(points.select(col("doc_id"), col("lat"), col("lon"), col("cell")), index, "left_outer")
       .groupBy(col("doc_id"))
       .agg(max(when(call_function("st_point_in_polygon",
         col("lat"), col("lon"), col("ring")), 1).otherwise(0)).as("hit"))

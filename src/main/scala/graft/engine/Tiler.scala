@@ -107,16 +107,12 @@ object Tiler {
     * through the hash join; only matched rows reach the poly_id groupBy.
     * Zones with no data come from a dimension-side-only aggregate, not an
     * outer join against the raster (Spark cannot preserve a broadcast
-    * side, and outer-joining the raster would shuffle it).
-    * broadcastZones=false switches both joins to sort-merge for layers
-    * too large to broadcast. */
+    * side, and outer-joining the raster would shuffle it). */
   def zonalStats(polys: DataFrame, tiles: DataFrame, zoom: Int,
-                 valueCol: String = "n_points",
-                 broadcastZones: Boolean = true): DataFrame = {
+                 valueCol: String = "n_points"): DataFrame = {
     val zones = polyfill(polys, zoom)
-    val zside = if (broadcastZones) broadcast(zones) else zones.hint("merge")
     val hits = tiles.select(col("tile_id"), col(valueCol).cast("long").as("v"))
-      .join(zside, Seq("tile_id"))
+      .join(broadcast(zones), Seq("tile_id"))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("n_data_tiles"), sum(col("v")).as("total"))
     zones.groupBy(col("poly_id")).agg(count(lit(1)).as("n_zone_tiles"))

@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * writeStream); aggregations get watermarked event-time windows; custom
   * per-key state (session tracking) uses flatMapGroupsWithState.
   *
-  * The batch spatial-join pipeline streams on the fact side too: the polygon
-  * covering is a static broadcast dimension, so stream-static joins work
-  * without state. */
+  * The batch spatial join streams on the fact side as is:
+  * `SpatialJoin.joinWithIndex` takes a streaming point frame against the
+  * static broadcast polygon index, a stream-static join with no state. */
 object Streams {
 
   /** Streaming point extraction + tile assignment over an interleaved-doc
@@ -25,19 +25,6 @@ object Streams {
       .where(col("pt").isNotNull)
       .withColumn("tile_id",
         call_function("st_tile_id", col("pt.lat"), col("pt.lon"), lit(zoom)))
-
-  /** Stream-static spatial join: streaming points against the static
-    * polygon-cell dimension (broadcast; no streaming state needed).
-    * polyCells carries (poly_id, cell) only; `rings` (poly_id, ring — one
-    * row per polygon) attaches to matched candidates in a second broadcast
-    * join, mirroring the batch path's geometry-dedup shape. */
-  def spatialJoinStream(points: DataFrame, polyCells: DataFrame,
-                        rings: DataFrame): DataFrame =
-    points
-      .join(broadcast(polyCells.withColumnRenamed("cell", "jcell")), Seq("jcell"))
-      .join(broadcast(rings), Seq("poly_id"))
-      .where(call_function("st_point_in_polygon", col("lat"), col("lon"), col("ring")))
-      .drop("ring")
 
   /** Watermarked sliding-window event counts (late data dropped after
     * `watermark`). */

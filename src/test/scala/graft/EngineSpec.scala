@@ -333,10 +333,8 @@ class EngineSpec extends AnyFunSuite {
       df.select("doc_id", "offset", "poly_id").collect()
         .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
     val classic = rows(SpatialJoin.join(pts, polys))
-    val ranged = rows(SpatialJoin.joinRange(pts, polys))
+    val ranged = rows(SpatialJoin.joinRangeWithIndex(pts, SpatialJoin.buildIndex(polys)))
     assert(ranged == classic)
-    val rangedSmj = rows(SpatialJoin.joinRange(pts, polys, broadcastPolys = false))
-    assert(rangedSmj == classic)
   }
 
   test("antimeridian-crossing polygons are rejected; the generator never makes one") {
@@ -410,6 +408,19 @@ class EngineSpec extends AnyFunSuite {
     // changed fingerprint -> recompute
     Checkpoint.stage(spark, dir, "docs", "fp-v2", Some("pfx"))(body)
     assert(computes == 2)
+  }
+
+  test("checkpoint stage recomputes when a committed part file is lost") {
+    val dir = graft.TestTmp.dir("graft-ckpt-lost")
+    var computes = 0
+    def body = { computes += 1; Corpus.documentsDf(spark, 100, partitions = 4) }
+    Checkpoint.stage(spark, dir, "docs", "fp-v1", None)(body)
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length == 4 && parts.head.delete())
+    val (df, m) = Checkpoint.stage(spark, dir, "docs", "fp-v1", None)(body)
+    assert(computes == 2, "stage resumed over a lost part file")
+    assert(df.count() == 100 && m.totalRows == 100)
   }
 
   test("span-sequence equality survives write/read round trip") {

@@ -75,7 +75,7 @@ class PlanSpec extends AnyFunSuite {
     val pts = SpatialJoin.extractPoints(docs)
     // formatted explain mentions each Generate node twice (tree + details)
     val baseGen = "Generate".r.findAllIn(physical(pts)).size
-    val ranged = physical(SpatialJoin.joinRange(pts, polys))
+    val ranged = physical(SpatialJoin.joinRangeWithIndex(pts, SpatialJoin.buildIndex(polys)))
     val rangedGen = "Generate".r.findAllIn(ranged).size
     // + one node (x2 mentions) for the DIMENSION-side covering explode only
     assert(rangedGen == baseGen + 2,
@@ -272,6 +272,24 @@ class PlanSpec extends AnyFunSuite {
     val plan = physical(SpatialJoin.join(SpatialJoin.extractPoints(docs), polys,
       salt = 4, broadcastPolys = false))
     assert(plan.contains("salt"), s"salt missing from join keys:\n${plan.take(1500)}")
+  }
+
+  test("salt > 1 takes the shuffle join: no broadcast, same rows as the broadcast join") {
+    val docs = Corpus.documentsDf(spark, 200, partitions = 2)
+    val polys = Corpus.polygons(spark).toDF()
+    val pts = SpatialJoin.extractPoints(docs)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "offset", "poly_id").collect().map(_.toString).sorted
+    val plain = rows(SpatialJoin.join(pts, polys))
+    // kill size-based broadcast: any BroadcastHashJoin left was forced
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val salted = SpatialJoin.join(pts, polys, salt = 4)
+      val got = rows(salted)
+      val plan = physical(salted)
+      assert(!plan.contains("BroadcastHashJoin"), s"salted join broadcast:\n${plan.take(2000)}")
+      assert(plain.nonEmpty && got.sameElements(plain))
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("neighborPairs: fact-x-fact cell join is a SHUFFLE join; only the band lookup broadcasts") {

@@ -110,17 +110,10 @@ class StreamingSpec extends AnyFunSuite {
     Corpus.documentsDf(spark, 300, partitions = 3).write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val polys = Corpus.polygons(spark).toDF()
-    val polyCells = SpatialJoin.polygonCells(polys, 5)
-    val levels = polyCells.select(length(col("cell")).as("l")).distinct()
-      .collect().map(_.getInt(0)).sorted
-
-    def pointsOf(df: org.apache.spark.sql.DataFrame) =
-      SpatialJoin.extractPoints(df)
-        .withColumn("jcell", explode(array(levels.map(l => substring(col("cell"), 1, l)): _*)))
+    val index = SpatialJoin.buildIndex(polys)
 
     val stream = spark.readStream.schema(schema).parquet(dir)
-    val q = Streams.spatialJoinStream(pointsOf(stream), polyCells,
-        polys.select(col("poly_id"), col("ring")))
+    val q = SpatialJoin.joinWithIndex(SpatialJoin.extractPoints(stream), index)
       .select("doc_id", "offset", "poly_id")
       .writeStream.format("memory").queryName("sj_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
