@@ -687,7 +687,8 @@ object SparkEntry {
     }),
     // q57: Structured Streaming tile assignment under Trigger.AvailableNow
     // over the stored corpus directory, parquet sink, read back for the
-    // oracle compare — puts the streaming path into the driver gate.
+    // oracle compare — the batch extractPoints -> Tiler.assign chain on a
+    // streaming frame, which puts the streaming path into the driver gate.
     "q57_stream_tiles" -> ((spark, dir) => {
       val s = prep(spark)
       val nDocs = corpusDocs(dir)
@@ -695,8 +696,8 @@ object SparkEntry {
       val sch = s.read.parquet(docsPath).schema
       val outBase = scratchDir("q57", dir)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = graft.streaming.Streams.tileAssign(
-          s.readStream.schema(sch).parquet(docsPath), 7)
+      val q = Tiler.assign(
+          SpatialJoin.extractPoints(s.readStream.schema(sch).parquet(docsPath)), 7)
         .select(col("doc_id"), col("offset"), col("tile_id"))
         .writeStream
         .format("parquet")
@@ -1337,9 +1338,7 @@ object SparkEntry {
     "q91_focal_smooth" -> ((spark, dir) => {
       val s = prep(spark)
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
-      val pts = SpatialJoin.extractPoints(docs)
-      val base = Tiler.assign(pts, 6)
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
+      val base = Tiler.raster(SpatialJoin.extractPoints(docs), 6)
       Tiler.focalSmooth(base, r = 1).orderBy(col("tile_id"))
     }),
     // q92: zonal statistics — per-polygon aggregates of the z=9 raster.
@@ -1350,8 +1349,7 @@ object SparkEntry {
       val s = prep(spark)
       val polys = Corpus.storedPolys(s, corpusDocs(dir))
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
-      val tiles = Tiler.assign(SpatialJoin.extractPoints(docs), 9)
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
+      val tiles = Tiler.raster(SpatialJoin.extractPoints(docs), 9)
       Tiler.zonalStats(polys, tiles, 9).orderBy(col("poly_id"))
     }),
     // q93: per-track trajectory summary — a document's span points in
@@ -1411,8 +1409,7 @@ object SparkEntry {
     "q97_hotspot_gi" -> ((spark, dir) => {
       val s = prep(spark)
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
-      val tiles = Tiler.assign(SpatialJoin.extractPoints(docs), 6)
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
+      val tiles = Tiler.raster(SpatialJoin.extractPoints(docs), 6)
       Tiler.hotspotGi(tiles).orderBy(col("tile_id"))
     }),
     // q98: z-ordered layout + manifest bbox pruning — write the point table
@@ -1467,9 +1464,7 @@ object SparkEntry {
     "q99_moran_i" -> ((spark, dir) => {
       val s = prep(spark)
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
-      val tiles = Tiler.assign(SpatialJoin.extractPoints(docs), 6)
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
-      Tiler.moranI(tiles)
+      Tiler.moranI(Tiler.raster(SpatialJoin.extractPoints(docs), 6))
     }),
     // q100: STREAMING geofence transitions — per-track last-inside state
     // carried across micro-batches (fMGWS, Append). The source is staged as

@@ -282,15 +282,24 @@ object Cells {
     math.min(math.max(y, 0L), nTiles - 1)
   }
 
-  /** Packed tile id: z (5 bits) | x (29 bits) | y (29 bits). */
+  /** Packed tile id layout: z (5 bits) | x (29 bits) | y (29 bits). The
+    * shifts and the x/y mask are the one definition every packer and
+    * decoder reads (the SQL-side codec lives in `graft.engine.Tiler`). */
+  final val TileZShift = 58
+  final val TileXShift = 29
+  final val TileXYMask: Long = (1L << 29) - 1
+
+  private def packTileId(z: Int, x: Long, y: Long): Long =
+    (z.toLong << TileZShift) | (x << TileXShift) | y
+
   def tileId(lat: Double, lon: Double, z0: Int): Long = {
     val z = math.min(math.max(z0, 0), MaxTileZoom)
-    (z.toLong << 58) | (tileX(lon, z) << 29) | tileY(lat, z)
+    packTileId(z, tileX(lon, z), tileY(lat, z))
   }
 
-  def tileIdZ(id: Long): Int = (id >>> 58).toInt
-  def tileIdX(id: Long): Long = (id >>> 29) & ((1L << 29) - 1)
-  def tileIdY(id: Long): Long = id & ((1L << 29) - 1)
+  def tileIdZ(id: Long): Int = (id >>> TileZShift).toInt
+  def tileIdX(id: Long): Long = (id >>> TileXShift) & TileXYMask
+  def tileIdY(id: Long): Long = id & TileXYMask
 
   /** Tile bounds: Array(latSouth, lonWest, latNorth, lonEast). */
   def tileBounds(z: Int, x: Long, y: Long): Array[Double] = {
@@ -320,7 +329,7 @@ object Cells {
       while (y <= y1) {
         val tb = tileBounds(z, x, y)
         if (cellIntersectsRing(tb, ring))
-          out += ((z.toLong << 58) | (x << 29) | y)
+          out += packTileId(z, x, y)
         y += 1
       }
       x += 1

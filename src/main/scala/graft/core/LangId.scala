@@ -14,9 +14,10 @@ package graft.core
   * ties resolve to the first language in sorted order; all-zero scores
   * return "und".
   *
-  * This replaces nothing: the stopword heuristic (TextOps.langId, q42)
-  * stays; this is the heavier-duty classifier a real pipeline would use
-  * (still a single codegen'd pass per row — no explode, no shuffle).
+  * This replaces nothing: the stopword heuristic (`lang_pred` of
+  * TextOps.profile, q42) stays; this is the heavier-duty classifier a real
+  * pipeline would use (still a single codegen'd pass per row — no explode,
+  * no shuffle).
   */
 object LangId {
 

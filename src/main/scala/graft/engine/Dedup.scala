@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Deduplication operators for training-data pipelines: exact (hash groupBy),
+/** Deduplication operators for training-data pipelines: exact (content hash),
   * MinHash+LSH banding, SimHash hamming buckets, n-gram Jaccard verification.
   *
   * Scale design: every method is shuffle-bounded by the *candidate* set, not
@@ -14,21 +14,13 @@ import org.apache.spark.sql.functions._
   * `maxBucket` rows per (band, bucket) via a window row_number, bounding the
   * per-bucket self-join at C(maxBucket, 2) pairs; rows beyond the cap in a
   * degenerate bucket are quarantined from candidate generation rather than
-  * detonating the join. Per-group output is likewise bounded (count + min/max
-  * exemplars, never an unbounded collect_list). */
+  * detonating the join. Exact groups are likewise bounded (membership rows
+  * with a window count, never an unbounded collect_list). */
 object Dedup {
 
-  /** Exact duplicate groups by content hash, bounded output per group:
-    * (content_hash, n, min_doc, max_doc). */
-  def exact(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(count(lit(1)).as("n"),
-        min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-      .where(col("n") > 1)
-
-  /** Exact duplicate membership rows (content_hash, doc_id, n) — the
-    * full-id-list companion to `exact` without any unbounded per-group
-    * state (a window count instead of collect_list). */
+  /** Exact duplicate membership rows (content_hash, doc_id, n) by content
+    * hash, without any unbounded per-group state (a window count instead
+    * of collect_list). */
   def exactGroups(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val w = Window.partitionBy(col("content_hash"))
     docs.select(md5(col(textCol)).as("content_hash"), col("doc_id"))

@@ -183,9 +183,11 @@ object SpatialJoin {
     * uses one or two.
     *
     * Requires points extracted at a level >= index.levels.max (the default
-    * extraction level is also the covering maxLevel, so this holds). */
+    * extraction level is also the covering maxLevel, so this holds). An
+    * empty polygon layer has no levels and joins no rows. */
   def joinRangeWithIndex(points: DataFrame, index: PolygonIndex): DataFrame = {
-    val pivot = index.levels.min
+    // empty layer: any pivot works, the empty covering matches nothing
+    val pivot = index.levels.minOption.getOrElse(1)
     val outCols = points.columns.map(col) :+ col("poly_id")
     // join key = xxhash64 of the pivot prefix, not the string itself: long
     // hashing/equality beats per-row string hashing in the build-side probe

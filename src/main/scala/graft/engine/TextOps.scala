@@ -14,17 +14,6 @@ object TextOps {
     filter(split(lower(regexp_replace(text, "[^\\p{L}\\p{N}]+", " ")), " "),
       w => length(w) > 0)
 
-  /** doc_id + token/char counts + punctuation and whitespace ratios. */
-  def tokenStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs.select(
-      col("doc_id"),
-      length(t).as("n_chars"),
-      size(wordsCol(t)).as("n_words"),
-      (length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))).as("n_punct"),
-      (length(t) - length(regexp_replace(t, "\\s", ""))).as("n_space"))
-  }
-
   /** Whitespace as an explicit class: Java regex \s includes vertical tab
     * (\x0B) but RE2's \s does not — spelling the class out keeps the
     * DuckDB oracle bit-identical on any text. */
@@ -47,49 +36,49 @@ object TextOps {
       size(regexp_extract_all(t, lit(BpeTokenRx), lit(0))).as("n_bpe_tokens"))
   }
 
-  /** Heuristic quality score in [0,1]: penalizes extreme length, high
-    * punctuation ratio, low word count, and low alpha ratio — the standard
-    * cheap pre-filters of large-scale corpus cleaning. */
-  def qualityScore(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  /** Heuristic quality score in [0,1] of `t` with words `words`:
+    * penalizes extreme length, high punctuation ratio, low word count, and
+    * low alpha ratio — the standard cheap pre-filters of large-scale corpus
+    * cleaning. */
+  private def qualityCol(t: Column, words: Column): Column = {
     val nChars = length(t).cast("double")
-    val nWords = size(wordsCol(t)).cast("double")
+    val nWords = size(words).cast("double")
     val punctRatio = (nChars - length(regexp_replace(t, "[\\p{Punct}]", ""))) / greatest(nChars, lit(1.0))
     val alphaRatio = length(regexp_replace(t, "[^\\p{L}]", "")) / greatest(nChars, lit(1.0))
     val lenScore = when(nChars.between(20, 10000), 1.0)
       .when(nChars < 20, nChars / 20.0)
       .otherwise(lit(10000.0) / nChars)
     val wordScore = when(nWords >= 5, 1.0).otherwise(nWords / 5.0)
-    docs.select(col("doc_id"),
-      round(lenScore * wordScore * (lit(1.0) - punctRatio) * alphaRatio, 6).as("quality"))
+    round(lenScore * wordScore * (lit(1.0) - punctRatio) * alphaRatio, 6)
   }
 
-  /** Tiny n-gram language-ID heuristic: scores stopword hits per language
-    * over the word set; returns argmax or 'und'. Deterministic, pure
-    * DataFrame ops (explode + pivot-free agg). */
+  /** Stopword tables of the tiny language-ID heuristic ([[langPredCol]]). */
   val StopwordTables: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "for", "with", "it"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "den"),
     "fr" -> Seq("le", "la", "les", "et", "est", "pas", "pour", "une", "dans", "que"),
     "es" -> Seq("el", "la", "los", "y", "es", "no", "con", "una", "por", "que"))
 
-  def langId(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val hits = StopwordTables.toSeq.sortBy(_._1).map { case (lang, words) =>
-      val arr = array(words.map(lit): _*)
-      size(array_intersect(wordsCol(col(textCol)), arr)).as(s"hits_$lang")
+  /** Tiny language-ID heuristic over a word array: scores stopword hits
+    * per language and returns the argmax, or 'und' when nothing hits. */
+  private def langPredCol(words: Column): Column = {
+    val hits = StopwordTables.map { case (lang, ws) =>
+      lang -> size(array_intersect(words, array(ws.map(lit): _*)))
     }
-    val scored = docs.select(col("doc_id") +: hits: _*)
     val langs = StopwordTables.keys.toSeq.sorted
     // argmax via greatest + chained when; foldRight makes the FIRST sorted
     // language the outermost when(), so ties resolve in sorted lang order
     // (foldLeft would nest it innermost and resolve ties in reverse)
-    val best = langs.foldRight(lit("und")) { (lang, acc) =>
-      when(col(s"hits_$lang") > 0 &&
-        col(s"hits_$lang") === greatest(langs.map(l => col(s"hits_$l")): _*), lang)
+    langs.foldRight(lit("und")) { (lang, acc) =>
+      when(hits(lang) > 0 && hits(lang) === greatest(langs.map(hits): _*), lang)
         .otherwise(acc)
     }
-    scored.withColumn("lang_pred", best).select("doc_id", "lang_pred")
   }
+
+  /** Document fingerprint: md5 over the normalized word sequence — a
+    * shard-stable content identity that any SQL engine can recompute
+    * verbatim. */
+  private def fingerprintCol(words: Column): Column = md5(concat_ws(" ", words))
 
   /** Heavier-duty language ID: rank-weighted character-trigram profiles
     * (core.LangId, Cavnar-Trenkle style) as one codegen'd kernel pass per
@@ -101,7 +90,7 @@ object TextOps {
 
   /** Winnowing fingerprints (rolling k-gram hashes, per-window minima —
     * Schleimer/Wilkerson/Aiken 2003): the substring-robust fingerprint next
-    * to the whole-document md5/xxhash64. Shared substrings of length >=
+    * to the whole-document md5 (`fp`). Shared substrings of length >=
     * w + k - 1 guarantee a shared fingerprint; near-dup candidate pairs
     * come from grouping on exploded fingerprints (same bucket shape as the
     * minhash path). One kernel pass per row. */
@@ -112,12 +101,12 @@ object TextOps {
 
   /** Fused per-document profile: language ID + quality score + fingerprint
     * in ONE projection over ONE scan (doc_id, lang_pred, quality, fp).
-    * Exactly the values of langId/qualityScore/fingerprint — but where
-    * joining those three would scan `documents` three times and shuffle
-    * twice on doc_id, this is a single FileScan + Project (all three are
-    * per-row scalar computations over the same text column; common
-    * subexpressions like the word split are eliminated inside whole-stage
-    * codegen). At 100 TB that is 3x less scan I/O and zero shuffles. */
+    * Where three per-signal frames joined on doc_id would scan `documents`
+    * three times and shuffle twice, this is a single FileScan + Project
+    * (all three are per-row scalar computations over the same text column;
+    * common subexpressions like the word split are eliminated inside
+    * whole-stage codegen). At 100 TB that is 3x less scan I/O and zero
+    * shuffles. */
   def profile(docs: DataFrame, textCol: String = "text"): DataFrame =
     profileSelect(docs, textCol)
 
@@ -135,41 +124,10 @@ object TextOps {
                             extra: Seq[Column] = Nil): DataFrame = {
     val t = col(textCol)
     val words = wordsCol(t)
-    // langId mirror (argmax over stopword hits, ties in sorted lang order)
-    val hits = StopwordTables.toSeq.sortBy(_._1).map { case (lang, ws) =>
-      lang -> size(array_intersect(words, array(ws.map(lit): _*)))
-    }
-    val hitMap = hits.toMap
-    val langs = StopwordTables.keys.toSeq.sorted
-    val best = langs.foldRight(lit("und")) { (lang, acc) =>
-      when(hitMap(lang) > 0 &&
-        hitMap(lang) === greatest(langs.map(hitMap): _*), lang).otherwise(acc)
-    }
-    // qualityScore mirror
-    val nChars = length(t).cast("double")
-    val nWords = size(words).cast("double")
-    val punctRatio = (nChars - length(regexp_replace(t, "[\\p{Punct}]", ""))) / greatest(nChars, lit(1.0))
-    val alphaRatio = length(regexp_replace(t, "[^\\p{L}]", "")) / greatest(nChars, lit(1.0))
-    val lenScore = when(nChars.between(20, 10000), 1.0)
-      .when(nChars < 20, nChars / 20.0)
-      .otherwise(lit(10000.0) / nChars)
-    val wordScore = when(nWords >= 5, 1.0).otherwise(nWords / 5.0)
     docs.select(Seq(
       col("doc_id"),
-      best.as("lang_pred"),
-      round(lenScore * wordScore * (lit(1.0) - punctRatio) * alphaRatio, 6).as("quality"),
-      md5(concat_ws(" ", words)).as("fp")) ++ extra: _*)
+      langPredCol(words).as("lang_pred"),
+      qualityCol(t, words).as("quality"),
+      fingerprintCol(words).as("fp")) ++ extra: _*)
   }
-
-  /** Document fingerprint: md5 over the normalized word sequence — a
-    * shard-stable content identity for exact near-clone detection that any
-    * SQL engine can recompute verbatim. `fingerprint64` is the cheaper
-    * xxhash64 variant for engine-internal use at scale. */
-  def fingerprint(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"),
-      md5(concat_ws(" ", wordsCol(col(textCol)))).as("fp"))
-
-  def fingerprint64(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"),
-      xxhash64(concat_ws(" ", wordsCol(col(textCol)))).as("fp"))
 }

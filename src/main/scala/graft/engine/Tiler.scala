@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cells.{TileXShift, TileXYMask, TileZShift}
 
 /** Raster<->vector tile assignment + tile aggregation (slippy-map z/x/y).
   *
@@ -12,10 +13,26 @@ import org.apache.spark.sql.functions._
   */
 object Tiler {
 
+  // Column codec for the packed z|x|y tile id (layout: Cells.tileId). The
+  // decoded parts are longs; callers cast z to int where it is an output.
+  private def tileZ(t: Column): Column = shiftrightunsigned(t, TileZShift)
+  private def tileX(t: Column): Column =
+    shiftrightunsigned(t, TileXShift).bitwiseAND(lit(TileXYMask))
+  private def tileY(t: Column): Column = t.bitwiseAND(lit(TileXYMask))
+  private def packTile(z: Column, x: Column, y: Column): Column =
+    shiftleft(z, TileZShift) + shiftleft(x, TileXShift) + y
+
   /** points(doc_id, lat, lon, ...) -> + tile_id (packed z|x|y long). */
   def assign(points: DataFrame, zoom: Int): DataFrame =
     points.withColumn("tile_id",
       call_function("st_tile_id", col("lat"), col("lon"), lit(zoom)))
+
+  /** Single-zoom tile raster: points(lat, lon, ...) -> (tile_id, n_points)
+    * at `zoom`. The input contract of [[pyramidFromBase]], [[zonalStats]],
+    * [[focalSmooth]], [[hotspotGi]] and [[moranI]] (`valueCol =
+    * "n_points"`). */
+  def raster(points: DataFrame, zoom: Int): DataFrame =
+    assign(points, zoom).groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
 
   /** Per-tile doc histogram at one zoom: (tile_id, z, x, y, n_points,
     * n_docs). Default n_docs is approx_count_distinct at 5% rsd — single-pass,
@@ -29,10 +46,9 @@ object Tiler {
       .agg(count(lit(1)).as("n_points"),
         (if (exact) countDistinct(col("doc_id"))
          else approx_count_distinct(col("doc_id"), 0.05)).as("n_docs"))
-      .withColumn("z", shiftrightunsigned(col("tile_id"), 58).cast("int"))
-      .withColumn("x", shiftrightunsigned(col("tile_id"), 29)
-        .bitwiseAND(lit((1L << 29) - 1)))
-      .withColumn("y", col("tile_id").bitwiseAND(lit((1L << 29) - 1)))
+      .withColumn("z", tileZ(col("tile_id")).cast("int"))
+      .withColumn("x", tileX(col("tile_id")))
+      .withColumn("y", tileY(col("tile_id")))
 
   /** Multi-zoom rollup in one pass: tile ids at each requested zoom become
     * grouping-set columns. */
@@ -50,13 +66,9 @@ object Tiler {
     * z|x|y long: slippy tiles nest by halving, so x>>1 / y>>1 is exact —
     * including at the clamped antimeridian/polar edges (floor division
     * commutes with the clamp). */
-  def parentTileId(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val z = shiftrightunsigned(t, 58)
-    val x = shiftrightunsigned(t, 29).bitwiseAND(lit((1L << 29) - 1))
-    val y = t.bitwiseAND(lit((1L << 29) - 1))
-    shiftleft(z - 1, 58) + shiftleft(shiftrightunsigned(x, 1), 29) +
-      shiftrightunsigned(y, 1)
-  }
+  def parentTileId(t: Column): Column =
+    packTile(tileZ(t) - 1, shiftrightunsigned(tileX(t), 1),
+      shiftrightunsigned(tileY(t), 1))
 
   /** Tile pyramid minZoom..maxZoom in one pass over the POINTS plus one
     * cheap rollup per coarser level: the base histogram aggregates the
@@ -68,9 +80,7 @@ object Tiler {
   def pyramid(points: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
     require(0 <= minZoom && minZoom <= maxZoom && maxZoom <= 29,
       s"bad zoom range [$minZoom, $maxZoom]")
-    val base = assign(points, maxZoom)
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
-    pyramidFromBase(base, minZoom, maxZoom)
+    pyramidFromBase(raster(points, maxZoom), minZoom, maxZoom)
   }
 
   /** Pyramid seeded from an ALREADY-MATERIALIZED single-zoom histogram
@@ -86,7 +96,7 @@ object Tiler {
         .groupBy(col("tile_id")).agg(sum(col("n_points")).as("n_points"))
     }.take(maxZoom - minZoom + 1).toSeq
     levels.reduce(_ unionByName _)
-      .withColumn("z", shiftrightunsigned(col("tile_id"), 58).cast("int"))
+      .withColumn("z", tileZ(col("tile_id")).cast("int"))
       .select("tile_id", "z", "n_points")
   }
 
@@ -152,21 +162,19 @@ object Tiler {
     * assert_true rejects rows whose zoom makes the window wider than the x
     * ring (2r+1 > 2^z) — the wrap would otherwise reach the same column
     * from two different dx offsets and double-count contributions. */
-  private def scatterWindow(t: DataFrame, offs: org.apache.spark.sql.Column,
+  private def scatterWindow(t: DataFrame, offs: Column,
                             width: Int, keep: Seq[String]): DataFrame = {
-    val z = shiftrightunsigned(col("tile_id"), 58)
-    val x = shiftrightunsigned(col("tile_id"), 29).bitwiseAND(lit((1L << 29) - 1))
-    val y = col("tile_id").bitwiseAND(lit((1L << 29) - 1))
+    val id = col("tile_id")
     val ring = expr("shiftleft(1L, cast(z as int))")
-    t.select(Seq(z.as("z"), x.as("x"), y.as("y"), explode(offs).as("o")) ++
+    t.select(Seq(tileZ(id).as("z"), tileX(id).as("x"), tileY(id).as("y"),
+        explode(offs).as("o")) ++
         keep.map(col): _*)
       .where(assert_true(lit(width.toLong) <= ring,
         lit(s"neighbour window of width $width is wider than the x ring at this zoom " +
           "(wrapped columns would be double-counted)")).isNull)
       .select(Seq(
-        (shiftleft(col("z"), 58) +
-          shiftleft(pmod(col("x") + col("o.dx"), ring), 29) +
-          (col("y") + col("o.dy"))).as("tile_id"),
+        packTile(col("z"), pmod(col("x") + col("o.dx"), ring),
+          col("y") + col("o.dy")).as("tile_id"),
         (col("y") + col("o.dy")).as("ny"), ring.as("ring"), col("o")) ++
         keep.map(col): _*)
       .where(col("ny") >= 0 && col("ny") < col("ring"))
@@ -184,7 +192,7 @@ object Tiler {
         offs, 2 * r + 1, keep = Seq("v"))
       .groupBy(col("tile_id"))
       .agg(sum(col("v") * col("o.w")).as("sm"))
-      .withColumn("z", shiftrightunsigned(col("tile_id"), 58).cast("int"))
+      .withColumn("z", tileZ(col("tile_id")).cast("int"))
       .select("tile_id", "z", "sm")
   }
 
@@ -271,7 +279,7 @@ object Tiler {
       .withColumn("dist", call_function("st_haversine",
         col("c.lat"), col("c.lon"), col("lat"), col("lon")))
       .where(col("dist") > 0.0)
-      .groupBy((lit(zoom.toLong << 58) + shiftleft(col("nx"), 29) + col("ny")).as("tile_id"))
+      .groupBy(packTile(lit(zoom.toLong), col("nx"), col("ny")).as("tile_id"))
       .agg(count(lit(1)).as("n_contrib"),
         sum(col("v") / (col("dist") * col("dist"))).as("sw"),
         sum(lit(1.0) / (col("dist") * col("dist"))).as("w"))

@@ -4,27 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming layer: the cell/tile assignment operators are
-  * stateless per row so they stream as-is (readStream -> same transforms ->
-  * writeStream); aggregations get watermarked event-time windows; custom
-  * per-key state (session tracking) uses flatMapGroupsWithState.
+/** Structured Streaming layer: the span -> point -> tile operators are
+  * stateless per row, so streaming tile assignment IS the batch operator
+  * chain on a streaming frame —
+  * `Tiler.assign(SpatialJoin.extractPoints(stream), zoom)` — with no
+  * streaming copy of either; aggregations get watermarked event-time
+  * windows; custom per-key state (session tracking) uses
+  * flatMapGroupsWithState.
   *
   * The batch spatial join streams on the fact side as is:
   * `SpatialJoin.joinWithIndex` takes a streaming point frame against the
   * static broadcast polygon index, a stream-static join with no state. */
 object Streams {
-
-  /** Streaming point extraction + tile assignment over an interleaved-doc
-    * stream (same operators as the batch path — stateless). */
-  def tileAssign(docs: DataFrame, zoom: Int): DataFrame =
-    docs
-      .select(col("doc_id"), posexplode(col("spans")).as(Seq("span_idx", "span")))
-      .where(col("span.kind") === "text")
-      .select(col("doc_id"), col("span.offset").as("offset"),
-        call_function("st_parse_point", col("span.text")).as("pt"))
-      .where(col("pt").isNotNull)
-      .withColumn("tile_id",
-        call_function("st_tile_id", col("pt.lat"), col("pt.lon"), lit(zoom)))
 
   /** Watermarked sliding-window event counts (late data dropped after
     * `watermark`). */
@@ -113,15 +104,7 @@ object Streams {
     * StreamingSpec replay test). */
   def pyramidTick(spark: SparkSession, batch: DataFrame, workDir: String,
                   minZoom: Int, maxZoom: Int, batchId: Long): Unit = {
-    val pts = batch
-      .select(col("doc_id"), posexplode(col("spans")).as(Seq("span_idx", "span")))
-      .where(col("span.kind") === "text")
-      .select(col("doc_id"),
-        call_function("st_parse_point", col("span.text")).as("pt"))
-      .where(col("pt").isNotNull)
-      .select(col("doc_id"), col("pt.lat").as("lat"), col("pt.lon").as("lon"))
-    graft.engine.Tiler.assign(pts, maxZoom)
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
+    graft.engine.Tiler.raster(graft.engine.SpatialJoin.extractPoints(batch), maxZoom)
       .write.mode("overwrite").parquet(s"$workDir/base_deltas/b$batchId")
     val base = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$workDir/base_deltas")

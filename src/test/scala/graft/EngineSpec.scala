@@ -337,6 +337,18 @@ class EngineSpec extends AnyFunSuite {
     assert(ranged == classic)
   }
 
+  test("prefix range-join on an EMPTY polygon layer returns no rows, typed like joinWithIndex") {
+    // an empty layer has no covering levels, so there is no pivot prefix
+    val docs = Corpus.documentsDf(spark, 50, partitions = 2)
+    val pts = SpatialJoin.extractPoints(docs)
+    val index = SpatialJoin.buildIndex(Corpus.polygons(spark).toDF().limit(0))
+    assert(index.levels.isEmpty)
+    val ranged = SpatialJoin.joinRangeWithIndex(pts, index)
+    val exploded = SpatialJoin.joinWithIndex(pts, index)
+    assert(ranged.schema == exploded.schema)
+    assert(ranged.collect().isEmpty && exploded.collect().isEmpty)
+  }
+
   test("antimeridian-crossing polygons are rejected; the generator never makes one") {
     import spark.implicits._
     // generator precondition: every synthetic polygon stays within a

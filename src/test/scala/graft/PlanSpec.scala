@@ -337,8 +337,7 @@ class PlanSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_zs").toString
     try {
       val docs = Corpus.documentsDf(spark, 200, partitions = 2)
-      Tiler.assign(SpatialJoin.extractPoints(docs), 9)
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
+      Tiler.raster(SpatialJoin.extractPoints(docs), 9)
         .write.parquet(s"$tmp/tiles")
       val polys = Corpus.polygons(spark).toDF()
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -383,8 +382,7 @@ class PlanSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_gi").toString
     try {
       val docs = Corpus.documentsDf(spark, 200, partitions = 2)
-      Tiler.assign(SpatialJoin.extractPoints(docs), 6)
-        .groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
+      Tiler.raster(SpatialJoin.extractPoints(docs), 6)
         .write.parquet(s"$tmp/tiles")
       val plan = Tiler.hotspotGi(spark.read.parquet(s"$tmp/tiles"))
         .queryExecution.executedPlan.toString

@@ -1,10 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Corpus, SpatialJoin}
+import graft.engine.{Corpus, SpatialJoin, Tiler}
 import graft.streaming.Streams
 
 /** Streaming layer: batch parquet drives streaming queries synchronously via
@@ -48,14 +52,20 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(dir).schema
 
     val stream = spark.readStream.schema(schema).parquet(dir)
-    val q = Streams.tileAssign(stream, 7)
+    val q = Tiler.assign(SpatialJoin.extractPoints(stream), 7)
       .select("doc_id", "offset", "tile_id")
       .writeStream.format("memory").queryName("tiles_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
+    // the streaming plan keeps extractPoints' Generate barrier: one parse
+    // per span, not one in the null filter and another in the projection
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan.toString
+    val n = "parsePoint".r.findAllIn(plan).size
+    assert(n == 1, s"expected 1 parsePoint eval in the streaming plan, found $n:\n$plan")
 
     val got = spark.sql("SELECT * FROM tiles_out").collect().map(_.toString).sorted
-    val want = Streams.tileAssign(spark.read.parquet(dir), 7)
+    val want = Tiler.assign(SpatialJoin.extractPoints(spark.read.parquet(dir)), 7)
       .select("doc_id", "offset", "tile_id").collect().map(_.toString).sorted
     assert(got.length > 0 && got.sameElements(want))
   }
@@ -103,6 +113,34 @@ class StreamingSpec extends AnyFunSuite {
     val want = graft.engine.Tiler.pyramid(SpatialJoin.extractPoints(docs), 4, 7)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(replayed == want)
+  }
+
+  test("pyramid tick parses each span once in its base-delta write") {
+    val work = tmp()
+    val docs = Corpus.documentsDf(spark, 200, partitions = 2)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      // the adaptive plan's final physical plan (its string also repeats
+      // the initial plan)
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add((qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }).toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val delta = s"$work/base_deltas/b0"
+    def deltaPlans = plans.toArray(Array.empty[String]).toSeq.filter(_.contains(delta))
+    try {
+      Streams.pyramidTick(spark, docs, work, 4, 7, batchId = 0L)
+      // listener events arrive on the listener bus, after the action returns
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (deltaPlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(deltaPlans.size == 1, s"expected the delta write's plan once, saw ${deltaPlans.size}")
+    val n = "parsePoint".r.findAllIn(deltaPlans.head).size
+    assert(n == 1, s"expected 1 parsePoint eval in the delta write, found $n:\n${deltaPlans.head}")
   }
 
   test("stream-static spatial join equals batch join") {
