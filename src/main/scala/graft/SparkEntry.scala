@@ -1616,9 +1616,9 @@ object SparkEntry {
         .orderBy(col("tile_z4"), col("tile_z7"))
     }),
     // q87: STREAMING incremental tile pyramid — the ingest tick: each
-    // micro-batch (maxFilesPerTrigger=1 over the stored corpus dir) commits
-    // its base-tile delta and rebuilds the pyramid from the merged base
-    // (O(tiles) per tick, batchId-keyed delta overwrite = exactly-once).
+    // micro-batch (maxFilesPerTrigger=1 over the stored corpus dir) folds
+    // its base-tile delta into the committed base and rebuilds the pyramid
+    // from it (O(tiles) per tick, batchId-keyed ticks = exactly-once).
     // Tile counts are additive, so the final pyramid equals the batch
     // pyramid on the whole corpus regardless of batch slicing — the oracle
     // is exactly q79's (every zoom computed directly from the points).
@@ -1665,8 +1665,8 @@ object SparkEntry {
     }),
     // q88: STREAMING IVF ingest — micro-batches of vectors (3 staged source
     // files, maxFilesPerTrigger=1) are assigned to a FIXED centroid set and
-    // committed as batchId-keyed partition dirs (dynamic overwrite per
-    // batch = exactly-once); the accumulated index holds exactly the union
+    // committed as batchId-keyed partition dirs (each batch overwrites its
+    // own dir = exactly-once); the accumulated index holds exactly the union
     // of the ticks regardless of batch slicing, so a FULL-probe search over
     // it must equal exact brute force — q43's oracle verbatim. Partial
     // probing and crash-replay idempotency are StreamingSpec's job.
@@ -1695,8 +1695,8 @@ object SparkEntry {
           .parquet(srcDir.getPath),
         cents, idxPath, ckpt)
       q.awaitTermination()
-      // the manifest-aware tick reader (identical live set while no
-      // compaction has run) — gates readIvfTicks end-to-end
+      // the fold-aware tick reader (identical live set while no fold has
+      // run) — gates Ticks.live end-to-end
       Ann.searchIvfTicks(s, idxPath, queries, cents, k = 10, nprobe = 16)
         .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
         .orderBy(col("qid"), col("rank"))

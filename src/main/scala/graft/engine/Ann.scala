@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -385,115 +384,15 @@ object Ann {
     HierCentroids(top, flat, k2)
   }
 
-  // ---- tick-index compaction (small-file maintenance) ----------------------
-
-  /** Compaction commit of a tick-built index ([[ivfIngestTick]] layout),
-    * one batch of Spark's `HDFSMetadataLog` under `path/_graft_log`: the
-    * batch id is the live compacted generation `gen` (its rows live under
-    * `batch=-gen`; no batch = none yet), `upTo` the compaction WATERMARK —
-    * every streaming batch id < upTo is folded into the compacted
-    * generation and is DEAD as a directory. The log entry is the single
-    * commit point, which is what makes compaction crash-safe without a
-    * transactional store: a crash BEFORE it leaves the previous entry
-    * naming the old live set (the half-written new generation is invisible
-    * garbage, swept by the next attempt); a crash AFTER it leaves
-    * superseded dirs as garbage (swept by the next attempt) that
-    * [[readIvfTicks]] already ignores. Plain directory rewrites instead
-    * would have a window where a reader double-counts or loses rows —
-    * there is none here. */
-  private final case class IvfCompaction(upTo: Long)
-
-  /** (gen, upTo) of the latest committed compaction; (0, 0) before any. */
-  private def committedCompaction(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                                  path: String): (Long, Long) = {
-    val log = new org.apache.hadoop.fs.Path(path, "_graft_log")
-    if (!fs.exists(log)) (0L, 0L)
-    else new HDFSMetadataLog[IvfCompaction](spark, log.toString).getLatest()
-      .fold((0L, 0L)) { case (gen, c) => (gen, c.upTo) }
-  }
-
-  private def batchDirs(fs: org.apache.hadoop.fs.FileSystem,
-                        path: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath))
-      }
-  }
-
-  /** The LIVE row set of a tick-built index: the compacted generation (if
-    * any) plus every streaming batch at or above the compaction watermark.
-    * Superseded batch dirs, stale generations from crashed compactions,
-    * and — crucially — any batch a source REPLAYED below the watermark
-    * after its rows were compacted (a contract violation that would
-    * double-count under a naive read) are all invisible. Partition columns
-    * (batch, cid) are preserved via basePath, so probe-driven cid
-    * partition pruning works exactly as on an uncompacted index. */
-  def readIvfTicks(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, upTo) = committedCompaction(spark, fs, path)
-    val live = batchDirs(fs, path).collect {
-      case (id, p) if (gen > 0 && id == -gen) || id >= upTo => p.toString
-    }
-    require(live.nonEmpty, s"no live batch directories under $path")
-    spark.read.option("basePath", path).parquet(live: _*)
-  }
-
-  /** Fold the compacted generation plus every batch in [watermark,
-    * upToBatch) into ONE new generation (one file set per cid instead of
-    * one per (tick, cid) — the small-file maintenance a long-running
-    * ingest needs), then commit the next generation and sweep the
-    * superseded dirs.
-    *
-    * CALLER CONTRACT: `upToBatch` must not exceed the source checkpoint's
-    * highest COMMITTED batch id + 1 — Structured Streaming only ever
-    * replays the batch after the last committed one, so compacted batches
-    * can never legitimately replay. Even if one does, the watermark makes
-    * the recreated dir invisible (see [[readIvfTicks]]) — the failure
-    * degrades to dead bytes on disk, never to duplicate rows. Safe to run
-    * concurrently with ongoing ticks (they write ids >= upToBatch). */
-  def compactIvfTicks(spark: SparkSession, path: String, upToBatch: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, oldUpTo) = committedCompaction(spark, fs, path)
-    // sweep garbage first: stale generations (a crashed attempt's
-    // half-written dir) and batches already below the committed watermark
-    batchDirs(fs, path).foreach { case (id, p) =>
-      if ((id < 0 && id != -gen) || (id >= 0 && id < oldUpTo))
-        fs.delete(p, true)
-    }
-    if (upToBatch <= oldUpTo) return // nothing new to fold
-    val src = batchDirs(fs, path).collect {
-      case (id, p) if (gen > 0 && id == -gen) || (id >= oldUpTo && id < upToBatch) => p
-    }
-    if (src.isEmpty) return
-    val newGen = gen + 1
-    val dest = s"$path/batch=-$newGen"
-    spark.read.option("basePath", path).parquet(src.map(_.toString): _*)
-      .select(col("vec_id"), col("embedding"), col("cid"))
-      .write.partitionBy("cid").mode("overwrite").parquet(dest)
-    // the commit point: readers switch to the new generation + watermark
-    // in one log entry; a concurrent compactor that committed newGen first
-    // makes this add fail instead of overwriting its entry
-    val log = new HDFSMetadataLog[IvfCompaction](spark, s"$path/_graft_log")
-    require(log.add(newGen, IvfCompaction(upToBatch)),
-      s"compaction generation $newGen under $path was committed concurrently")
-    log.purge(newGen)
-    src.foreach(p => fs.delete(p, true))
-  }
-
-  /** Search a tick-built index through the compaction-aware live set —
-    * [[searchIvfIndex]]'s exact ranking over [[readIvfTicks]]. */
+  /** Search a tick-built index ([[ivfIngestTick]]) through its fold-aware
+    * live set — [[searchIvfIndex]]'s exact ranking over [[Ticks.live]]. */
   def searchIvfTicks(spark: SparkSession, path: String, queries: DataFrame,
                      cents: Array[(Long, Array[Double])], k: Int,
                      nprobe: Int): DataFrame = {
     validateCentroids(cents)
     val (probes, probedCids) = collectedProbes(spark, queries, cents, nprobe)
-    val index = readIvfTicks(spark, path)
+    val index = Ticks.live(spark, path)
+      .getOrElse(throw new IllegalArgumentException(s"no live batch directories under $path"))
       .where(col("cid").isin(probedCids.map(_.asInstanceOf[Any]): _*))
     topKOverCandidates(index, probes, k)
   }
@@ -623,12 +522,9 @@ object Ann {
 
   /** One ingest tick of an INCREMENTALLY-built IVF index (the vector-side
     * analogue of the tile-pyramid tick): assign the delta against the FIXED
-    * centroid set and commit it under batchId-keyed partition directories
-    * (layout `batch=<id>/cid=<list>/...`), overwriting ONLY this batch's
-    * partitions (dynamic partition overwrite) — replaying a batch after a
-    * crash rewrites its own files instead of appending duplicates:
-    * exactly-once without a transactional sink. O(delta) work per tick,
-    * earlier batches' files untouched; [[searchIvfIndex]] reads the
+    * centroid set and commit it as a [[Ticks.append]] tick (layout
+    * `batch=<id>/cid=<list>/...`, exactly-once on crash replay). O(delta)
+    * work per tick, earlier batches' files untouched; [[searchIvfIndex]] reads the
     * accumulated index unchanged (`cid` stays a partition column, so probes
     * still prune list directories — `batch` rides along as an extra
     * partition level the search ignores). The accumulated index holds
@@ -636,25 +532,15 @@ object Ann {
     * (assignment is per-row deterministic against frozen centroids).
     * Centroid RE-TRAINING is deliberately a rebuild via [[writeIvfIndex]]:
     * the cid space must stay frozen across ticks (the FAISS discipline —
-    * train once on a sample, add forever, retrain = new index). Long-
-    * running ingests compact their accumulated per-tick file sets with
-    * [[compactIvfTicks]] and read/search through [[readIvfTicks]] /
-    * [[searchIvfTicks]] (compaction-aware; identical to a plain read while
-    * no compaction has run). */
+    * train once on a sample, add forever, retrain = new index). Search the
+    * ticks with [[searchIvfTicks]] (fold-aware; identical to a plain read
+    * while no fold has run). Folding the per-tick file sets into one
+    * generation is internal to the engine: no public entry runs it, so
+    * each tick adds one file set per touched cid. */
   def ivfIngestTick(delta: DataFrame, cents: Array[(Long, Array[Double])],
                     path: String, batchId: Long): Unit =
-    assignCids(delta, cents)
-      .withColumn("batch", lit(batchId))
-      .write.partitionBy("batch", "cid")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(path)
+    Ticks.append(assignCids(delta, cents), path, batchId, "cid")
 
-  /** Search a persisted IVF index: probes are computed per query, their
-    * DISTINCT cid set (dimension-sized — at most nCentroids values) is
-    * collected once and pushed as a static `cid IN (...)` partition filter,
-    * so the scan reads ONLY the probed list directories (PlanSpec gates the
-    * PartitionFilters). Candidate restriction per query then happens via the
-    * broadcast (qid, cid) join as in [[ivfTopK]]. */
   /** Probe set computed once and collected: the (qid, q_emb, cid) rows are
     * dimension-sized — nQueries x nprobe on the side that is about to be
     * BROADCAST anyway — so both consumers (the static partition filter and
@@ -672,6 +558,12 @@ object Ann {
     (probes, rows.map(_.getLong(2)).distinct)
   }
 
+  /** Search a persisted IVF index: probes are computed per query, their
+    * DISTINCT cid set (dimension-sized — at most nCentroids values) is
+    * collected once and pushed as a static `cid IN (...)` partition filter,
+    * so the scan reads ONLY the probed list directories (PlanSpec gates the
+    * PartitionFilters). Candidate restriction per query then happens via the
+    * broadcast (qid, cid) join as in [[ivfTopK]]. */
   def searchIvfIndex(spark: SparkSession, path: String, queries: DataFrame,
                      cents: Array[(Long, Array[Double])], k: Int,
                      nprobe: Int): DataFrame = {

@@ -43,12 +43,19 @@ object Checkpoint {
       .map(p => norm(p.toString)).toSet
   }
 
-  /** The manifest committed under `dir`, if any stage has committed there. */
-  def committed(spark: SparkSession, dir: String): Option[Manifest] = {
+  /** The latest (batch id, entry) of the log under `dir/_graft_log`, the
+    * one reader of stage, [[Layout]] and [[Ticks]] commits; None before
+    * the first. Checked first: opening the log creates its directory. */
+  private[engine] def latest[T <: AnyRef : scala.reflect.ClassTag](
+      spark: SparkSession, dir: String): Option[(Long, T)] = {
     val log = new Path(dir, "_graft_log")
     if (!log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log)) None
-    else new HDFSMetadataLog[Manifest](spark, log.toString).get(0L)
+    else new HDFSMetadataLog[T](spark, log.toString).getLatest()
   }
+
+  /** The manifest committed under `dir`, if any stage has committed there. */
+  def committed(spark: SparkSession, dir: String): Option[Manifest] =
+    latest[Manifest](spark, dir).map(_._2)
 
   /** Run a stage: if `dir` holds a committed manifest for this fingerprint
     * whose file set is exactly the data files on disk, read it back

@@ -183,7 +183,7 @@ object Cluster {
     val labels = Dedup.connectedComponents(
       coreIds.select(col("pid").as("doc_id")),
       coreEdges.select(col("pid_a").as("doc_a"), col("pid_b").as("doc_b")),
-      maxIter = 30, validateNodes = false)
+      maxIter = 30, validateNodes = false, Dedup.DriverEdgeCap)
     val coreLabeled = labels.select(col("doc_id").as("pid"), col("rep").as("cluster"))
     val borderLabeled = prs
       .join(flagged.where(!col("is_core")).select(col("pid").as("pid_a")),

@@ -224,8 +224,9 @@ object Dedup {
     * wall time when the edge list is small (a 600k-edge DBSCAN core graph
     * collects in ~50 MB and resolves in milliseconds). Nodes are NEVER
     * collected — only edge endpoints — so a corpus of 10^9 singletons with
-    * 100 dup pairs still takes the driver path. Override with
-    * spark.graft.cc.driverEdgeCap (0 disables). */
+    * 100 dup pairs still takes the driver path. Specs force the
+    * distributed rounds through the `driverEdgeCap` parameter of the
+    * `private[graft]` overload (0 disables the driver regime). */
   val DriverEdgeCap = 400000L
 
   /** Total order matching Spark's least() for the id types the driver
@@ -301,7 +302,7 @@ object Dedup {
 
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIter: Int = 30): DataFrame =
-    connectedComponents(nodes, pairs, maxIter, validateNodes = true)
+    connectedComponents(nodes, pairs, maxIter, validateNodes = true, DriverEdgeCap)
 
   /** `validateNodes = false` is the trusted-caller mode for callers that
     * construct the edge set FROM the node set themselves (dbscan semi-joins
@@ -309,10 +310,12 @@ object Dedup {
     * construction, and its node rows are unique by the operator's pid
     * contract): it skips the endpoint-containment fail-fast action AND the
     * node-distinct shuffles — identical output, fewer jobs. External
-    * callers keep the default checks. */
+    * callers keep the default checks. `driverEdgeCap` is the
+    * [[DriverEdgeCap]] regime threshold (0 forces the distributed rounds). */
   private[graft] def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                                          maxIter: Int,
-                                         validateNodes: Boolean): DataFrame = {
+                                         validateNodes: Boolean,
+                                         driverEdgeCap: Long): DataFrame = {
     val spark = nodes.sparkSession
     // RAW pair rows, cached once: the driver regime consumes them directly
     // (union-find is orientation- and duplicate-insensitive), so the
@@ -342,10 +345,8 @@ object Dedup {
       // The cap compares against 2x the pair-row count — the both-direction
       // edge count of a dup-free single-direction pair set, preserving the
       // documented cap meaning without paying the distinct to measure it.
-      val cap = spark.conf.getOption("spark.graft.cc.driverEdgeCap")
-        .map(_.toLong).getOrElse(DriverEdgeCap)
-      if (cap > 0 && driverRegimeType(nodes.schema("doc_id").dataType) &&
-          rawEdges.count() * 2 <= cap)
+      if (driverEdgeCap > 0 && driverRegimeType(nodes.schema("doc_id").dataType) &&
+          rawEdges.count() * 2 <= driverEdgeCap)
         return driverComponents(spark, nodes, rawEdges,
           distinctNodes = validateNodes)
       val edges = rawEdges
@@ -353,7 +354,7 @@ object Dedup {
         .distinct()
         .cache() // reused every round; unpersisted in the finally below
       roundEdges = Some(edges)
-      val rounds = new Durable.Rounds(spark, "cc")
+      val rounds = new Durable.Rounds(spark)
       // id type is whatever the caller's doc_id is (long or string); the
       // "minimum" representative is numeric or lexicographic accordingly
       val nodeIds = nodes.select(col("doc_id").as("id"))

@@ -86,7 +86,7 @@ object Durable {
     * returned lazy DataFrame, so they live until [[close]] removes them at
     * JVM exit (or the caller, having materialized the result, closes
     * earlier). */
-  final class Rounds(spark: SparkSession, tag: String) {
+  final class Rounds(spark: SparkSession) {
     ensureCheckpointDir(spark)
     private val fs = new org.apache.hadoop.fs.Path(
       spark.sparkContext.getCheckpointDir.get)

@@ -78,9 +78,9 @@ object Knn {
     // list), never the point table, so the write cost is negligible at any
     // scale. Checkpoint-dir contract and the persist-then-checkpoint
     // mechanics live in [[Durable]] (shared with connectedComponents).
-    // The remaining driver-side serialization points are the two isEmpty
-    // actions per round (maxRounds * 2 tiny jobs) — inherent to the
-    // adaptive loop.
+    // The remaining driver-side serialization points are one isEmpty
+    // action per round plus one after the loop (at most maxRounds + 1 tiny
+    // jobs) — inherent to the adaptive loop.
     Durable.ensureCheckpointDir(spark)
     def durable(df: DataFrame): DataFrame = Durable.durable(df)
     // superseded `unresolved` snapshots are deleted as soon as the next
@@ -88,7 +88,7 @@ object Knn {
     // retains every round of every knn call. The per-round `parts`
     // checkpoints stay until JVM exit by design: they BACK the returned
     // result (bounded: <= maxRounds + 1 small query-side sets per call).
-    val rounds = new Durable.Rounds(spark, "knn")
+    val rounds = new Durable.Rounds(spark)
     val pts = points
       .select(col("pid"), col("lat").as("p_lat"), col("lon").as("p_lon"))
       .withColumn("cell", cf("st_cell", col("p_lat"), col("p_lon"), lit(level)))

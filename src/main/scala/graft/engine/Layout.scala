@@ -81,10 +81,7 @@ object Layout {
     val path = new Path(s"$dir/data")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = path.getFileSystem(conf)
-    val log = new Path(dir, "_graft_log")
-    val latest =
-      if (fs.exists(log)) new HDFSMetadataLog[LayoutFiles](spark, log.toString).getLatest()
-      else None
+    val latest = Checkpoint.latest[LayoutFiles](spark, dir)
     require(latest.isDefined, s"no layout committed under $dir")
     val entries = latest.get._2.files
     val onDiskPaths = fs.listStatus(path).map(_.getPath)

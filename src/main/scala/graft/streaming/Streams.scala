@@ -75,14 +75,12 @@ object Streams {
   /** Incremental tile-pyramid maintenance from a document STREAM — the
     * ingest tick of a production tile server: each micro-batch extracts its
     * points (stateless kernels), aggregates the batch's base-zoom tile
-    * DELTA (O(batch points)), commits it under a batchId-keyed path
-    * (overwrite per batch id -> re-running a batch after a crash replaces
-    * its own delta instead of double-counting: exactly-once without a
-    * transactional sink), then rebuilds the pyramid from the MERGED base
-    * via [[graft.engine.Tiler.pyramidFromBase]] — O(occupied tiles), never
-    * re-reading earlier batches' points. Delta dirs grow by one aggregated
-    * histogram per tick; compact on any background cadence (the merge is
-    * an associative sum, so compaction is a plain rewrite). AvailableNow
+    * DELTA (O(batch points)), commits it as one tick of a tick store,
+    * then rebuilds the pyramid from the summed live deltas via
+    * [[graft.engine.Tiler.pyramidFromBase]] — O(occupied tiles), never
+    * re-reading earlier batches' points. The deltas grow by one small
+    * per-tile histogram per tick; nothing here folds them (see
+    * [[pyramidTick]]). AvailableNow
     * drains a staged backlog; use a processing-time trigger on a live
     * stream. Pyramid lands at `workDir`/pyramid. */
   def pyramidStream(spark: SparkSession, docs: DataFrame, workDir: String,
@@ -96,28 +94,33 @@ object Streams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** One ingest tick of [[pyramidStream]]: commit `batch`'s base-zoom tile
-    * delta under its batchId-keyed path and rebuild the pyramid from the
-    * merged base. IDEMPOTENT per batchId — replaying a batch (foreachBatch
-    * re-delivery after a crash) overwrites its own delta and converges to
-    * the same final state, never double-counting (gated by the
-    * StreamingSpec replay test). */
+  /** One ingest tick of [[pyramidStream]]: append `batch`'s base-zoom tile
+    * delta as tick `batchId` of the tick store at `workDir`/base_deltas and
+    * rebuild the pyramid from the store's live rows summed per tile. Each
+    * tick re-reads every live delta (one small per-tile histogram per
+    * tick); a [[graft.engine.Ticks.fold]] with the same per-tile sum merges
+    * them into one generation and leaves the pyramid unchanged.
+    * IDEMPOTENT per batchId: a replayed batch overwrites its own tick, or,
+    * once folded, lands below the watermark and stays invisible — never
+    * double-counted (gated by the StreamingSpec replay tests). */
   def pyramidTick(spark: SparkSession, batch: DataFrame, workDir: String,
                   minZoom: Int, maxZoom: Int, batchId: Long): Unit = {
-    graft.engine.Tiler.raster(graft.engine.SpatialJoin.extractPoints(batch), maxZoom)
-      .write.mode("overwrite").parquet(s"$workDir/base_deltas/b$batchId")
-    val base = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$workDir/base_deltas")
+    import graft.engine.{SpatialJoin, Ticks, Tiler}
+    val deltas = s"$workDir/base_deltas"
+    val delta = Tiler.raster(SpatialJoin.extractPoints(batch), maxZoom)
+    Ticks.append(delta, deltas, batchId)
+    // nothing live: every delta so far was empty, and so is the base
+    val base = Ticks.live(spark, deltas).getOrElse(delta)
       .groupBy(col("tile_id")).agg(sum(col("n_points")).as("n_points"))
-    graft.engine.Tiler.pyramidFromBase(base, minZoom, maxZoom)
+    Tiler.pyramidFromBase(base, minZoom, maxZoom)
       .write.mode("overwrite").parquet(s"$workDir/pyramid")
   }
 
   /** Streaming IVF-index ingest — the vector-side analogue of
     * [[pyramidStream]]: each micro-batch of (vec_id, embedding) rows is
-    * assigned to a FIXED centroid set and committed under its batchId-keyed
-    * partition directories ([[graft.engine.Ann.ivfIngestTick]]: dynamic
-    * overwrite per batch = exactly-once on crash replay). The accumulated
+    * assigned to a FIXED centroid set and committed as one tick of the
+    * same tick store ([[graft.engine.Ann.ivfIngestTick]]: each batch
+    * overwrites its own dir = exactly-once on crash replay). The accumulated
     * index equals the batch-built one over the unioned corpus regardless of
     * batch slicing, and is searchable mid-stream with
     * [[graft.engine.Ann.searchIvfIndex]] (probes prune the cid partition
@@ -136,8 +139,6 @@ object Streams {
   final case class SessionState(count: Long, lastUs: Long, sessions: Long)
   final case class SessionUpdate(user_id: Long, sessions: Long, events: Long)
 
-  /** Custom keyed state: per-user session counting with a 30-minute gap rule
-    * (flatMapGroupsWithState, update mode). */
   final case class FenceState(inside: Boolean)
   final case class FenceHit(doc_id: String, offset: Int, lat: Double,
                             lon: Double, transition: String)
@@ -178,6 +179,8 @@ object Streams {
       .toDF()
   }
 
+  /** Custom keyed state: per-user session counting with a 30-minute gap rule
+    * (flatMapGroupsWithState, update mode). */
   def sessionize(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
     events

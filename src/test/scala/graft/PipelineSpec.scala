@@ -451,29 +451,29 @@ class PipelineSpec extends AnyFunSuite {
       // a CRASHED compaction attempt: a stale generation dir exists but the
       // manifest was never committed — readers must not see it
       corpus.limit(5).write.mode("overwrite").parquet(s"$idx/batch=-1/cid=0")
-      assert(Ann.readIvfTicks(spark, idx).count() == 300,
+      assert(Ticks.live(spark, idx).get.count() == 300,
         "stale uncommitted generation leaked into the live set")
       // real compaction folding batches 0 and 1 (gen 1 swept the stray dir)
-      Ann.compactIvfTicks(spark, idx, upToBatch = 2L)
+      Ticks.fold(spark, idx, 2L, "cid")(identity)
       val liveDirs = new java.io.File(idx).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
       assert(liveDirs == Set("batch=-1", "batch=2"), s"unexpected dirs: $liveDirs")
-      assert(Ann.readIvfTicks(spark, idx).count() == 300)
+      assert(Ticks.live(spark, idx).get.count() == 300)
       val after = Ann.searchIvfTicks(spark, idx, queries, cents, k = 5, nprobe = 3)
         .collect().map(_.toSeq).toSeq
       assert(after == before, "compaction changed search results")
       // contract-violating replay of a COMPACTED batch: the watermark makes
       // the recreated dir invisible — no double counting, search unchanged
       Ann.ivfIngestTick(b(0), cents, idx, 0L)
-      assert(Ann.readIvfTicks(spark, idx).count() == 300,
+      assert(Ticks.live(spark, idx).get.count() == 300,
         "replayed compacted batch double-counted")
       // second compaction folds gen 1 + batch 2 into gen 2 and sweeps the
       // replayed dead dir
-      Ann.compactIvfTicks(spark, idx, upToBatch = 3L)
+      Ticks.fold(spark, idx, 3L, "cid")(identity)
       val live2 = new java.io.File(idx).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
       assert(live2 == Set("batch=-2"), s"unexpected dirs after gen 2: $live2")
-      assert(Ann.readIvfTicks(spark, idx).count() == 300)
+      assert(Ticks.live(spark, idx).get.count() == 300)
       assert(Ann.searchIvfTicks(spark, idx, queries, cents, k = 5, nprobe = 3)
         .collect().map(_.toSeq).toSeq == before)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
@@ -617,15 +617,14 @@ class PipelineSpec extends AnyFunSuite {
       5L -> 5L, 6L -> 6L, 7L -> 5L, 8L -> 8L, 9L -> 9L))
     // a too-small round budget must THROW, never return a partial
     // clustering — distributed path forced (the driver regime has no rounds)
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    try {
-      val dist = Dedup.connectedComponents(nodes, pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(dist == got, "driver and distributed regimes disagree")
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(nodes, pairs, maxIter = 1)
-      }
-    } finally spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    val dist = Dedup.connectedComponents(nodes, pairs, 30, validateNodes = true,
+        driverEdgeCap = 0L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(dist == got, "driver and distributed regimes disagree")
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(nodes, pairs, maxIter = 1, validateNodes = true,
+        driverEdgeCap = 0L)
+    }
   }
 
   test("connected components: driver and distributed regimes agree on a random graph") {
@@ -636,10 +635,9 @@ class PipelineSpec extends AnyFunSuite {
       .filter(p => p._1 != p._2).toDF("doc_a", "doc_b")
     val driver = Dedup.connectedComponents(nodes, pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    val dist = try Dedup.connectedComponents(nodes, pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    val dist = Dedup.connectedComponents(nodes, pairs, 30, validateNodes = true,
+        driverEdgeCap = 0L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(driver == dist)
     assert(driver.size == 400)
   }
@@ -656,15 +654,14 @@ class PipelineSpec extends AnyFunSuite {
     val rawPairs = (0 until 250).map(_ => (rng.nextInt(300).toLong, rng.nextInt(300).toLong))
       .filter(p => p._1 != p._2)
     val pairs = (rawPairs ++ rawPairs.take(40).map(p => (p._2, p._1))).toDF("doc_a", "doc_b")
-    def run(validate: Boolean): Map[Long, Long] =
-      Dedup.connectedComponents(nodes, pairs, maxIter = 30, validateNodes = validate)
+    def run(validate: Boolean, cap: Long = Dedup.DriverEdgeCap): Map[Long, Long] =
+      Dedup.connectedComponents(nodes, pairs, maxIter = 30, validateNodes = validate,
+          driverEdgeCap = cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val checkedDriver = run(validate = true)
     val trustedDriver = run(validate = false)
     assert(trustedDriver == checkedDriver)
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    val trustedDist = try run(validate = false)
-      finally spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    val trustedDist = run(validate = false, cap = 0L)
     assert(trustedDist == checkedDriver)
     assert(checkedDriver.size == 300)
   }
@@ -677,9 +674,8 @@ class PipelineSpec extends AnyFunSuite {
     // a 999-edge graph takes the driver regime.
     val nodes = (0L until 1000L).toDF("doc_id")
     val pairs = (0L until 999L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    spark.conf.set("spark.graft.cc.driverEdgeCap", "0")
-    val got = try Dedup.connectedComponents(nodes, pairs, maxIter = 15).collect()
-      finally spark.conf.unset("spark.graft.cc.driverEdgeCap")
+    val got = Dedup.connectedComponents(nodes, pairs, maxIter = 15, validateNodes = true,
+      driverEdgeCap = 0L).collect()
     assert(got.length == 1000)
     assert(got.forall(_.getLong(1) == 0L), "chain did not collapse to min id 0")
   }

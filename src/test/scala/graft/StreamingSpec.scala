@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Corpus, SpatialJoin, Tiler}
+import graft.engine.{Corpus, SpatialJoin, Ticks, Tiler}
 import graft.streaming.Streams
 
 /** Streaming layer: batch parquet drives streaming queries synchronously via
@@ -94,6 +94,56 @@ class StreamingSpec extends AnyFunSuite {
     assert(deltaDirs.size >= 2, s"expected >= 2 ingest ticks, saw $deltaDirs")
   }
 
+  /** The `batch=<id>` directories of a pyramid work dir's tick store. */
+  private def baseDeltaBatchDirs(work: String): Set[String] =
+    new java.io.File(s"$work/base_deltas").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
+
+  test("pyramid ticks fold into one base generation; replays and stray generations stay invisible") {
+    val work = tmp()
+    val docs = Corpus.documentsDf(spark, 350, partitions = 2)
+    val part = Array.tabulate(7)(i => docs.where(pmod(crc32(col("doc_id")), lit(7)) === i))
+    def pyramid: Set[(Long, Int, Long)] = spark.read.parquet(s"$work/pyramid")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    def batchPyramid(in: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long)] =
+      Tiler.pyramid(SpatialJoin.extractPoints(in), 4, 7)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    def sumBase(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy(col("tile_id")).agg(sum(col("n_points")).as("n_points"))
+    for (i <- 0 until 6) Streams.pyramidTick(spark, part(i), work, 4, 7, batchId = i.toLong)
+    val firstSix = batchPyramid(docs.where(pmod(crc32(col("doc_id")), lit(7)) =!= 6))
+    assert(pyramid.nonEmpty && pyramid == firstSix)
+    assert(baseDeltaBatchDirs(work) == (0 until 6).map(i => s"batch=$i").toSet)
+    // fold mid-stream: one committed generation replaces the six ticks
+    val root = s"$work/base_deltas"
+    Ticks.fold(spark, root, 6L)(sumBase)
+    val dirs = baseDeltaBatchDirs(work)
+    assert(dirs.size == 1 && dirs.head.matches("batch=-[0-9]+"),
+      s"expected exactly one batch=-g directory, saw $dirs")
+    val g = dirs.head.stripPrefix("batch=-").toLong
+    // replay of an already-folded batch: its tick lands below the watermark,
+    // so the pyramid rebuilt from the folded base does not count it again
+    Streams.pyramidTick(spark, part(2), work, 4, 7, batchId = 2L)
+    assert(pyramid == firstSix, "replaying a folded batch changed the pyramid")
+    // a fold that crashed before its log commit leaves an uncommitted
+    // generation holding real rows: the next tick must not add it to the
+    // base, and the next fold sweeps it with the replayed tick
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$root/batch=-$g"), new java.io.File(s"$root/batch=-${g + 1}"))
+    Streams.pyramidTick(spark, part(6), work, 4, 7, batchId = 6L)
+    assert(pyramid == batchPyramid(docs), "a stray generation changed the pyramid")
+    Ticks.fold(spark, root, 7L)(sumBase)
+    assert(baseDeltaBatchDirs(work) == Set(s"batch=-${g + 1}"))
+    val folded = Ticks.live(spark, root).get.select("tile_id", "n_points")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(folded == Tiler.raster(SpatialJoin.extractPoints(docs), 7)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    // a first tick with no points leaves nothing live: the pyramid is empty
+    val empty = tmp()
+    Streams.pyramidTick(spark, docs.where(lit(false)), empty, 4, 7, batchId = 0L)
+    assert(spark.read.parquet(s"$empty/pyramid").count() == 0)
+  }
+
   test("pyramid tick is idempotent per batchId (crash-replay never double-counts)") {
     val work = tmp()
     val docs = Corpus.documentsDf(spark, 200, partitions = 2)
@@ -130,7 +180,8 @@ class StreamingSpec extends AnyFunSuite {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val delta = s"$work/base_deltas/b0"
+    // the write into the tick (the pyramid build's scan of it also names it)
+    val delta = s"InsertIntoHadoopFsRelationCommand file:$work/base_deltas/batch=0,"
     def deltaPlans = plans.toArray(Array.empty[String]).toSeq.filter(_.contains(delta))
     try {
       Streams.pyramidTick(spark, docs, work, 4, 7, batchId = 0L)
