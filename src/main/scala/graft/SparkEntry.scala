@@ -379,8 +379,7 @@ object SparkEntry {
       val s = prep(spark)
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
       val polys = Corpus.storedPolys(s, corpusDocs(dir))
-      SpatialJoin.join(SpatialJoin.extractPoints(docs), polys,
-        salt = 8, broadcastPolys = false)
+      SpatialJoin.join(SpatialJoin.extractPoints(docs), polys, salt = 8)
         .groupBy(col("poly_id")).agg(count(lit(1)).as("n_points"))
         .orderBy(col("poly_id"))
     }),

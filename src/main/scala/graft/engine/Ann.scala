@@ -390,10 +390,9 @@ object Ann {
                      cents: Array[(Long, Array[Double])], k: Int,
                      nprobe: Int): DataFrame = {
     validateCentroids(cents)
-    val (probes, probedCids) = collectedProbes(spark, queries, cents, nprobe)
-    val index = Ticks.live(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no live batch directories under $path"))
-      .where(col("cid").isin(probedCids.map(_.asInstanceOf[Any]): _*))
+    val (probes, index) = collectedProbes(probeSet(queries, cents, nprobe),
+      Ticks.live(spark, path)
+        .getOrElse(throw new IllegalArgumentException(s"no live batch directories under $path")))
     topKOverCandidates(index, probes, k)
   }
 
@@ -541,36 +540,36 @@ object Ann {
                     path: String, batchId: Long): Unit =
     Ticks.append(assignCids(delta, cents), path, batchId, "cid")
 
-  /** Probe set computed once and collected: the (qid, q_emb, cid) rows are
-    * dimension-sized — nQueries x nprobe on the side that is about to be
-    * BROADCAST anyway — so both consumers (the static partition filter and
-    * the candidate join) are served from a driver-local relation. An
-    * internal .cache() here would escape the function and be unpersistable
-    * for the session (the round-3 q56 lesson); for query batches too large
-    * to broadcast, use ivfTopK against the index DataFrame instead. */
-  private def collectedProbes(spark: SparkSession, queries: DataFrame,
-                              cents: Array[(Long, Array[Double])],
-                              nprobe: Int): (DataFrame, Array[Long]) = {
-    val probesDf = probeSet(queries, cents, nprobe)
+  /** Probe set computed once and collected: the (qid, q_emb, cid) rows of
+    * [[probeSet]] or [[probeSetHier]] are dimension-sized — nQueries x
+    * nprobe on the side that is about to be BROADCAST anyway — so both
+    * consumers are served from a driver-local relation. Returns the
+    * broadcast probes and `index` pruned by a static `cid IN (...)` filter
+    * on their distinct cids, so a cid-partitioned scan reads ONLY the probed
+    * list directories (PlanSpec gates the PartitionFilters). An internal
+    * .cache() here would escape the function and be unpersistable for the
+    * session (the round-3 q56 lesson); for query batches too large to
+    * broadcast, use ivfTopK against the index DataFrame instead. */
+  private def collectedProbes(probesDf: DataFrame,
+                              index: DataFrame): (DataFrame, DataFrame) = {
     val rows = probesDf.collect()
-    val probes = broadcast(spark.createDataFrame(
+    val probes = broadcast(probesDf.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), probesDf.schema))
-    (probes, rows.map(_.getLong(2)).distinct)
+    val cids = rows.map(_.getLong(2)).distinct
+    (probes, index.where(col("cid").isin(cids.map(_.asInstanceOf[Any]): _*)))
   }
 
-  /** Search a persisted IVF index: probes are computed per query, their
-    * DISTINCT cid set (dimension-sized — at most nCentroids values) is
-    * collected once and pushed as a static `cid IN (...)` partition filter,
-    * so the scan reads ONLY the probed list directories (PlanSpec gates the
-    * PartitionFilters). Candidate restriction per query then happens via the
-    * broadcast (qid, cid) join as in [[ivfTopK]]. */
+  /** Search a persisted IVF index: probes are computed per query and
+    * collected once ([[collectedProbes]]); their DISTINCT cid set
+    * (dimension-sized — at most nCentroids values) prunes the scan to the
+    * probed list directories. Candidate restriction per query then happens
+    * via the broadcast (qid, cid) join as in [[ivfTopK]]. */
   def searchIvfIndex(spark: SparkSession, path: String, queries: DataFrame,
                      cents: Array[(Long, Array[Double])], k: Int,
                      nprobe: Int): DataFrame = {
     validateCentroids(cents)
-    val (probes, probedCids) = collectedProbes(spark, queries, cents, nprobe)
-    val index = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids.map(_.asInstanceOf[Any]): _*))
+    val (probes, index) =
+      collectedProbes(probeSet(queries, cents, nprobe), spark.read.parquet(path))
     topKOverCandidates(index, probes, k)
   }
 
@@ -615,13 +614,8 @@ object Ann {
                          hier: HierCentroids, k: Int,
                          nprobe1: Int, nprobe: Int): DataFrame = {
     validateCentroids(hier.flat)
-    val probesDf = probeSetHier(queries, hier, nprobe1, nprobe)
-    val rows = probesDf.collect()
-    val probes = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), probesDf.schema))
-    val probedCids = rows.map(_.getLong(2)).distinct
-    val index = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids.map(_.asInstanceOf[Any]): _*))
+    val (probes, index) = collectedProbes(
+      probeSetHier(queries, hier, nprobe1, nprobe), spark.read.parquet(path))
     topKOverCandidates(index, probes, k)
   }
 
@@ -673,9 +667,8 @@ object Ann {
                        cents: Array[(Long, Array[Double])], k: Int,
                        nprobe: Int): DataFrame = {
     validateCentroids(cents)
-    val (probes, probedCids) = collectedProbes(spark, queries, cents, nprobe)
-    val index = spark.read.parquet(path)
-      .where(col("cid").isin(probedCids.map(_.asInstanceOf[Any]): _*))
+    val (probes, index) =
+      collectedProbes(probeSet(queries, cents, nprobe), spark.read.parquet(path))
     rankTopK(
       index.join(probes, Seq("cid"))
         .withColumn("sim", call_function("st_q8_cosine",

@@ -142,10 +142,10 @@ object Cluster {
     // the upstream point pipeline feeds two eager builds — the pair join
     // (whose a/b sides already share one exchange) and the flag table's
     // base — so without this it is evaluated twice during the build phase.
-    // Persist for the duration of the two Durable builds (the q34/§5
-    // pattern: cache filled by the first build, read by the second,
-    // released before returning; lineage is NOT truncated, so a lost cache
-    // partition recomputes from the caller's input as before). An input the
+    // Persist for the duration of the two Durable builds (cache filled by
+    // the first build, read by the second, released before returning;
+    // lineage is NOT truncated, so a lost cache partition recomputes from
+    // the caller's input as before). An input the
     // caller already cached is used as-is and stays cached.
     val owned = points.storageLevel == StorageLevel.NONE
     if (owned) points.persist(StorageLevel.MEMORY_AND_DISK)

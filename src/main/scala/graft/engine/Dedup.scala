@@ -216,8 +216,9 @@ object Dedup {
     * lineage-bounded — with the SUPERSEDED round deleted as soon as the
     * next one commits, so a long-lived session holds at most two rounds
     * per call instead of accumulating all of them), and convergence costs
-    * one count action per round (documented driver actions, like Knn's
-    * adaptive loop). */
+    * one count action per round (the label table is the size of the node
+    * set, so unlike Knn's query-sized rounds it cannot live on the
+    * driver). */
   /** Edge cap (BOTH-direction rows) below which [[connectedComponents]]
     * runs a driver union-find instead of distributed label rounds: each
     * round costs 2 shuffles + a snapshot + a count action, which dominates

@@ -2,9 +2,10 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Reliable-checkpoint plumbing shared by the iterative operators (Knn ring
-  * expansion, Dedup.connectedComponents): per-round state is RELIABLY
-  * checkpointed — written to the checkpoint dir, readable after executor
+/** Reliable-checkpoint plumbing shared by the iterative operators whose
+  * state is the size of the fact table (Dedup.connectedComponents,
+  * Cluster.dbscan; Knn's query-sized round state stays on the driver
+  * instead): per-round state is RELIABLY checkpointed — written to the checkpoint dir, readable after executor
   * loss — never localCheckpoint'ed (which stores blocks on executors and
   * truncates lineage, so one lost executor after round r kills the job with
   * no way to recompute).

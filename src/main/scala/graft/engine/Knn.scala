@@ -1,8 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.core.Cells
 
 /** k-nearest-neighbour via cell-ring expansion (engine operator named in the
@@ -16,7 +18,10 @@ import graft.core.Cells
   * (geohash cells are anisotropic; we take the worst case over the disk).
   * Unresolved queries expand to the next ring, bounded at `maxRounds`;
   * any residual is finished exactly with a targeted brute-force pass, so
-  * the result always equals true top-k.
+  * the result always equals true top-k. The round state (the unresolved
+  * queries and each resolved query's k rows) is query-sized and lives on
+  * the driver: one collect per round, nothing written to disk, no
+  * emptiness job.
   */
 object Knn {
 
@@ -33,7 +38,7 @@ object Knn {
     * Without this factor the straight parallel-arc estimate R·x·cosφ
     * OVERSTATES the true minimum by up to ~x²/24 — a resolved query could
     * then miss a marginally closer point just outside the disk. */
-  def lonChordSlack(xRad: Double): Double = math.max(0.0, 1.0 - xRad * xRad / 24.0)
+  private def lonChordSlack(xRad: Double): Double = math.max(0.0, 1.0 - xRad * xRad / 24.0)
 
   /** Lower bound (metres) on the distance from a point inside the centre
     * cell to any point outside the disk of radius r at latitude `lat`.
@@ -58,100 +63,54 @@ object Knn {
     * `level` picks the cell resolution; smaller level = bigger cells =
     * fewer rounds but more candidates per round.
     *
-    * PRECONDITION (cluster callers): per-round state is RELIABLY
-    * checkpointed, so on any non-local master `spark.checkpoint.dir`
-    * (SparkContext.setCheckpointDir) MUST point at SHARED storage
-    * (HDFS / object store) before calling — the method fails fast with an
-    * IllegalArgumentException otherwise. On local[*] masters a process-
-    * private tmp dir is auto-provisioned and removed at JVM exit. This is a
-    * deliberate durability change from the earlier localCheckpoint design,
-    * which silently lost the job on a single executor failure. */
+    * Round state lives on the driver: the query list is collected once and
+    * each row gets a driver index `qi`; every round ships the unresolved
+    * queries as a local relation, joins their disk against the cached
+    * points and collects the top-k rows per query (one collect per round,
+    * one for the residual pass). No checkpoint dir is needed and a call
+    * leaves no files behind. The driver therefore holds k rows per query:
+    * a query set whose results exceed `spark.driver.maxResultSize` fails
+    * the collect loudly rather than spilling. Each query row is its own
+    * query, so duplicate qids each get their own k rows. */
   def knn(spark: SparkSession, queries: DataFrame, points: DataFrame, k: Int,
           level: Int = 4, maxRounds: Int = 6): DataFrame = {
     import org.apache.spark.sql.functions.{call_function => cf}
-    // Durability: the per-round accumulators below are RELIABLY checkpointed
-    // (written to the checkpoint dir, readable after executor loss), not
-    // localCheckpoint'ed — localCheckpoint stores blocks on executors and
-    // TRUNCATES lineage, so on a real cluster one lost executor after round r
-    // would kill the whole job with no way to recompute. The checkpointed
-    // data is query-side only (<= k rows per query + the unresolved query
-    // list), never the point table, so the write cost is negligible at any
-    // scale. Checkpoint-dir contract and the persist-then-checkpoint
-    // mechanics live in [[Durable]] (shared with connectedComponents).
-    // The remaining driver-side serialization points are one isEmpty
-    // action per round plus one after the loop (at most maxRounds + 1 tiny
-    // jobs) — inherent to the adaptive loop.
-    Durable.ensureCheckpointDir(spark)
-    def durable(df: DataFrame): DataFrame = Durable.durable(df)
-    // superseded `unresolved` snapshots are deleted as soon as the next
-    // round commits (Durable.Rounds) — without this a long-lived session
-    // retains every round of every knn call. The per-round `parts`
-    // checkpoints stay until JVM exit by design: they BACK the returned
-    // result (bounded: <= maxRounds + 1 small query-side sets per call).
-    val rounds = new Durable.Rounds(spark)
     val pts = points
       .select(col("pid"), col("lat").as("p_lat"), col("lon").as("p_lon"))
       .withColumn("cell", cf("st_cell", col("p_lat"), col("p_lon"), lit(level)))
     pts.cache()
+    val qs = queries
+      .select(col("qid"), col("lat").cast("double"), col("lon").cast("double")).collect()
+    val qSchema = StructType(Seq(StructField("qi", IntegerType, nullable = false),
+      StructField("q_lat", DoubleType), StructField("q_lon", DoubleType)))
+    // the still-unresolved queries as a driver-built relation
+    def relation(qis: Seq[Int]): DataFrame = spark.createDataFrame(
+      qis.map(i => Row(i, qs(i).get(1), qs(i).get(2))).asJava, qSchema)
+    val w = Window.partitionBy("qi").orderBy(col("dist"), col("pid"))
+    def topK(cand: DataFrame): Map[Int, Array[Row]] = cand
+      .withColumn("dist",
+        cf("st_haversine", col("q_lat"), col("q_lon"), col("p_lat"), col("p_lon")))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select("qi", "pid", "dist", "rank")
+      .collect().groupBy(_.getInt(0))
 
-    var unresolved = queries
-      .select(col("qid"), col("lat").as("q_lat"), col("lon").as("q_lon"))
-      .withColumn("qcell", cf("st_cell", col("q_lat"), col("q_lon"), lit(level)))
-    // each round's resolved rows are checkpointed ONCE and buffered; the
-    // union happens at the end — re-checkpointing a growing accumulator
-    // every round would rewrite all previously-resolved rows each time
-    // (O(rounds * |result|) checkpoint I/O)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val found = new Array[Array[Row]](qs.length)
+    var open: Seq[Int] = qs.indices
     var round = 1
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("pid"))
-
-    while (round <= maxRounds && !unresolved.isEmpty) {
-      // persisted: the round's three consumers (the resolvedQ broadcast
-      // build, the resolvedRows probe, and the unresolved anti-join's own
-      // resolvedQ copy) otherwise EACH re-run the disk join + window —
-      // measured 3 evaluations per round in the r06 before-plan. The
-      // post-rank frame is bounded at k rows per unresolved query, so the
-      // cache is query-side-sized; lineage is NOT truncated (unlike
-      // localCheckpoint), so an executor loss just recomputes from the
-      // round checkpoint + cached points — the durability story is
-      // unchanged. Unpersisted at the bottom of the round.
-      val cand = unresolved
+    while (round <= maxRounds && open.nonEmpty) {
+      val got = topK(relation(open)
+        .withColumn("qcell", cf("st_cell", col("q_lat"), col("q_lon"), lit(level)))
         .withColumn("cell", explode(cf("st_cell_disk", col("qcell"), lit(round))))
-        .join(pts, Seq("cell"), "inner")
-        .withColumn("dist",
-          cf("st_haversine", col("q_lat"), col("q_lon"), col("p_lat"), col("p_lon")))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select("qid", "q_lat", "q_lon", "qcell", "pid", "dist", "rank")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-      // a query resolves when it has k hits and the k-th is inside the
-      // provable bound for this round's disk (pure column math, no UDF;
-      // same derivation as outsideDiskLowerBound)
-      val kth = cand.groupBy("qid", "q_lat", "qcell")
-        .agg(count(lit(1)).as("n"), max(col("dist")).as("kth"))
-      val (latDeg, lonDeg) = Cells.cellSizeDeg(level)
-      val maxAbsLat = least(lit(90.0), abs(col("q_lat")) + lit((round + 1) * latDeg))
-      val slack = lonChordSlack(math.toRadians(round * lonDeg))
-      val bound = lit(round) * least(
-        lit(latDeg * MetersPerDegree),
-        lit(lonDeg * MetersPerDegree * slack) * greatest(lit(0.0), cos(radians(maxAbsLat))))
-      // strict <: the derivation guarantees outside-disk distance >= bound,
-      // so at exact equality an outside point could still win the (dist, pid)
-      // tie-break — only kth strictly inside the bound proves the top-k
-      val resolvedQ = kth.where(col("n") === k && col("kth") < bound).select("qid")
-
-      val resolvedRows = cand.join(broadcast(resolvedQ), Seq("qid"), "left_semi")
-      // materialize this round's results before mutating `unresolved`
-      // (reliable checkpoint: survives executor loss, see header note)
-      parts += durable(resolvedRows.select("qid", "pid", "dist", "rank"))
-      // checkpoint: without this the unresolved plan references itself twice
-      // per round (directly and via resolvedQ), re-executing every earlier
-      // round's disk join on each isEmpty/join/crossJoin
-      unresolved = rounds.commit(
-        unresolved.join(broadcast(resolvedQ), Seq("qid"), "left_anti"))
-      rounds.dropPrevious() // this round's parts snapshot is already on disk
-      cand.unpersist() // parts + unresolved are durably committed above
+        .join(pts, Seq("cell"), "inner"))
+      // a query resolves when it has k hits and the k-th is strictly inside
+      // the outside-disk bound: at equality an outside point could still win
+      // the (dist, pid) tie-break
+      val (done, rest) = open.partition(i => got.get(i).exists(rows =>
+        rows.length == k &&
+          rows.map(_.getDouble(2)).max < outsideDiskLowerBound(qs(i).getDouble(1), level, round)))
+      done.foreach(i => found(i) = got(i))
+      open = rest
       round += 1
     }
     // Exact completion for the residual: queries still unresolved after
@@ -160,29 +119,14 @@ object Knn {
     // table. Output is therefore always exactly the true top-k, and ring
     // expansion is purely an optimization that resolves the dense majority
     // without scanning all points.
-    if (!unresolved.isEmpty) {
-      val rest = pts.crossJoin(broadcast(unresolved.select("qid", "q_lat", "q_lon")))
-        .withColumn("dist",
-          cf("st_haversine", col("q_lat"), col("q_lon"), col("p_lat"), col("p_lon")))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select("qid", "pid", "dist", "rank")
-      parts += durable(rest)
+    if (open.nonEmpty) {
+      val got = topK(pts.crossJoin(broadcast(relation(open))))
+      open.foreach(i => found(i) = got.getOrElse(i, Array.empty[Row]))
     }
-    // the residual pass above was the last reader of the unresolved set —
-    // every surviving result row lives in the separately-durable `parts`
-    // snapshots, so the final unresolved checkpoint is reclaimable NOW
-    // rather than at JVM exit (one stale snapshot per call otherwise)
-    rounds.close()
     pts.unpersist()
-    // union of per-round checkpointed pieces: each piece was written exactly
-    // once; the union itself is lineage-cheap (reads the checkpoint files).
-    // Empty query set -> a correctly-typed empty frame (never null)
-    if (parts.isEmpty)
-      queries.select(col("qid")).where(lit(false))
-        .crossJoin(points.select(col("pid")).where(lit(false)))
-        .withColumn("dist", lit(0.0)).withColumn("rank", lit(1))
-        .select("qid", "pid", "dist", "rank")
-    else parts.reduce(_ unionByName _)
+    val schema = StructType(Seq(queries.schema("qid"), points.schema("pid"),
+      StructField("dist", DoubleType), StructField("rank", IntegerType, nullable = false)))
+    spark.createDataFrame(found.indices.flatMap(i => found(i).map(r =>
+      Row(qs(i).get(0), r.get(1), r.get(2), r.get(3)))).asJava, schema)
   }
 }

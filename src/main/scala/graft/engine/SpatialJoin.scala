@@ -17,7 +17,7 @@ import graft.expr.GraftFunctions._
   *    cells: the fact side gets salt = pmod(xxhash64(doc_id, offset), S) and
   *    the polygon side replicates each covering cell S times on a shuffle
   *    join (explicit skew handling; AQE skew-join remains as a backstop for
-  *    the sort-merge path).
+  *    that shuffle join).
   */
 object SpatialJoin {
 
@@ -112,13 +112,12 @@ object SpatialJoin {
     * one level so no duplicate matches arise. The distinct-levels probe is a
     * plan-time action on the dimension-sized polygon side only.
     *
-    * broadcastPolys: broadcast the (small) polygon-cell side — the default
-    * for dimension-sized layers; false plans a sort-merge join. `salt` > 1
-    * plans a shuffle join keyed on (cell, salt) that splits hot cells
-    * across reducers, whatever `broadcastPolys` says. */
+    * `salt` = 1 (the default) broadcasts the (small) polygon-cell side;
+    * `salt` > 1 plans a shuffle join keyed on (cell, salt) that splits hot
+    * cells across reducers. */
   def join(points: DataFrame, polys: DataFrame, level: Int = DefaultLevel,
-           broadcastPolys: Boolean = true, salt: Int = 1): DataFrame =
-    joinWithIndex(points, buildIndex(polys, level), broadcastPolys, salt)
+           salt: Int = 1): DataFrame =
+    joinWithIndex(points, buildIndex(polys, level), salt)
 
   /** Points keyed for the per-level equi-join: one row per distinct covering
     * level, `jcell` = the point cell's prefix at that level. */
@@ -139,26 +138,21 @@ object SpatialJoin {
     * points may be a streaming frame — the index is a static dimension, so
     * the stream-static join needs no state). Same arms as [[join]].
     *
-    * The non-broadcast arms rebuild the ring-carrying covering with a
+    * The salted arm rebuilds the ring-carrying covering with a
     * DIMENSION-side join first, so the fact side still shuffles exactly once
-    * on the cell key (attaching rings after the shuffle join would
+    * on the (cell, salt) key (attaching rings after the shuffle join would
     * re-shuffle fact-sized candidates by poly_id instead). */
-  def joinWithIndex(points: DataFrame, index: PolygonIndex,
-                    broadcastPolys: Boolean = true, salt: Int = 1): DataFrame = {
+  def joinWithIndex(points: DataFrame, index: PolygonIndex, salt: Int = 1): DataFrame = {
     val outCols = points.columns.map(col) :+ col("poly_id")
-    // fat covering for the shuffle arms: (poly_id, jcell, ring)
-    def fat: DataFrame = index.cells.join(index.rings, Seq("poly_id"))
-      .withColumnRenamed("cell", "jcell")
     val cand =
       if (salt > 1)
         keyed(points, index.levels)
           .withColumn("salt", pmod(xxhash64(col("doc_id"), col("offset")), lit(salt)).cast("int"))
-          .join(fat.withColumn("salt", explode(sequence(lit(0), lit(salt - 1)))),
+          .join(index.cells.join(index.rings, Seq("poly_id"))
+            .withColumnRenamed("cell", "jcell")
+            .withColumn("salt", explode(sequence(lit(0), lit(salt - 1)))),
             Seq("jcell", "salt"), "inner")
-      else if (broadcastPolys) probe(points, index, "inner")
-      // hint sort-merge so both sides range-partition on the cell key (the
-      // "range-partition join" path for layers too large to broadcast)
-      else keyed(points, index.levels).join(fat.hint("merge"), Seq("jcell"), "inner")
+      else probe(points, index, "inner")
     cand.where(call_function("st_point_in_polygon", col("lat"), col("lon"), col("ring")))
       .select(outCols: _*)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -72,7 +73,7 @@ class EngineSpec extends AnyFunSuite {
     val points = SpatialJoin.extractPoints(docs)
     val plain = SpatialJoin.join(points, polys)
       .select("doc_id", "offset", "poly_id").collect().map(_.toString).sorted
-    val salted = SpatialJoin.join(points, polys, salt = 8, broadcastPolys = false)
+    val salted = SpatialJoin.join(points, polys, salt = 8)
       .select("doc_id", "offset", "poly_id").collect().map(_.toString).sorted
     assert(plain.sameElements(salted))
   }
@@ -300,9 +301,8 @@ class EngineSpec extends AnyFunSuite {
     assert(out.count() == 0)
   }
 
-  test("knn equals brute force") {
-    import spark.implicits._
-    val k = 5
+  /** The kNN fixture: 2,000 points and 40 queries in one 5° x 5° square. */
+  private def knnFixture: (Seq[(String, Double, Double)], Seq[(String, Double, Double)]) = {
     val rngP = new java.util.Random(1000L)
     val pts = (0 until 2000).map { i =>
       (s"p$i", 40.0 + rngP.nextDouble() * 5, -75.0 + rngP.nextDouble() * 5)
@@ -311,18 +311,76 @@ class EngineSpec extends AnyFunSuite {
     val qs = (0 until 40).map { i =>
       (s"q$i", 40.0 + rngQ.nextDouble() * 5, -75.0 + rngQ.nextDouble() * 5)
     }
-    val ptsDf = pts.toDF("pid", "lat", "lon")
-    val qsDf = qs.toDF("qid", "lat", "lon")
-    val got = Knn.knn(spark, qsDf, ptsDf, k)
-      .select("qid", "pid", "rank").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
-    val want = qs.flatMap { case (qid, qla, qlo) =>
+    (pts, qs)
+  }
+
+  /** Exact top-k by (dist, pid) with straight loops: (qid, pid, rank). */
+  private def bruteForceKnn[Q](qs: Seq[(Q, Double, Double)], pts: Seq[(String, Double, Double)],
+                               k: Int): Set[(Q, String, Int)] =
+    qs.flatMap { case (qid, qla, qlo) =>
       pts.map { case (pid, pla, plo) => (pid, Dist.haversine(qla, qlo, pla, plo)) }
         .sortBy { case (pid, d) => (d, pid) }
         .take(k).zipWithIndex
         .map { case ((pid, _), idx) => (qid, pid, idx + 1) }
     }.toSet
-    assert(got == want)
+
+  test("knn equals brute force") {
+    import spark.implicits._
+    val k = 5
+    val (pts, qs0) = knnFixture
+    // q_far is far from every point: no round's disk holds a candidate, so
+    // only the residual brute-force pass answers it
+    val qs = qs0 :+ (("q_far", -30.0, 100.0))
+    val ptsDf = pts.toDF("pid", "lat", "lon")
+    val got = Knn.knn(spark, qs.toDF("qid", "lat", "lon"), ptsDf, k)
+      .select("qid", "pid", "rank").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    assert(got == bruteForceKnn(qs, pts, k))
+    // Long qids: the qid type rides through to the output unchanged
+    val lqs = qs.zipWithIndex.map { case ((_, la, lo), i) => (i.toLong, la, lo) }
+    val gotL = Knn.knn(spark, lqs.toDF("qid", "lat", "lon"), ptsDf, k)
+      .select("qid", "pid", "rank").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    assert(gotL == bruteForceKnn(lqs, pts, k))
+  }
+
+  test("knn runs one collect per round: no checkpoint, no emptiness job") {
+    import spark.implicits._
+    val (pts, qs) = knnFixture
+    val qsDf = qs.toDF("qid", "lat", "lon")
+    val ptsDf = pts.toDF("pid", "lat", "lon")
+    val sc = spark.sparkContext
+    // (job group, stage names) per job start
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""), e.stageInfos.map(_.name).mkString(";")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("knn", "knn under test")
+      assert(Knn.knn(spark, qsDf, ptsDf, k = 5).collect().length == qs.length * 5)
+      // the listener bus delivers events in order, so once the marker job's
+      // start arrives every job the knn call ran has been seen
+      sc.setJobGroup("marker", "listener flush")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.asScala.exists(_._1 == "marker"), "marker job never reached the listener")
+      val knnStages = jobs.asScala.toSeq.filter(_._1 == "knn").map(_._2)
+      assert(!knnStages.exists(n => n.contains("checkpoint") || n.contains("isEmpty")),
+        knnStages.mkString("\n"))
+      // two rounds on this fixture: the cached points' build, then per round
+      // the broadcast of the query disks, the window's shuffle map stage and
+      // the collect (round state in reliable checkpoints ran 25 jobs)
+      assert(knnStages.length <= 7,
+        s"knn ran ${knnStages.length} jobs:\n${knnStages.mkString("\n")}")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("prefix range-join equals the multi-resolution explode join") {

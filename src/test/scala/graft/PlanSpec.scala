@@ -92,16 +92,6 @@ class PlanSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(plan).size >= 2, s"no partial agg:\n$plan")
   }
 
-  test("non-broadcast path range-partitions via sort-merge join") {
-    val docs = Corpus.documentsDf(spark, 200, partitions = 2)
-    val polys = Corpus.polygons(spark).toDF()
-    val df = SpatialJoin.join(SpatialJoin.extractPoints(docs), polys,
-      broadcastPolys = false)
-    df.collect()
-    val plan = physical(df)
-    assert(plan.contains("SortMergeJoin"), s"no SMJ:\n${plan.take(1200)}")
-  }
-
   test("q42 fused text profile is one scan, zero joins, zero shuffles") {
     val df = SparkEntry.queries("q42_lang_quality")(spark, sf)
     val plan = physical(df)
@@ -269,8 +259,7 @@ class PlanSpec extends AnyFunSuite {
   test("salted join key includes the salt (skew split)") {
     val docs = Corpus.documentsDf(spark, 200, partitions = 2)
     val polys = Corpus.polygons(spark).toDF()
-    val plan = physical(SpatialJoin.join(SpatialJoin.extractPoints(docs), polys,
-      salt = 4, broadcastPolys = false))
+    val plan = physical(SpatialJoin.join(SpatialJoin.extractPoints(docs), polys, salt = 4))
     assert(plan.contains("salt"), s"salt missing from join keys:\n${plan.take(1500)}")
   }
 
