@@ -676,16 +676,15 @@ object Ann {
   }
 
   /** LSH-bucketed ANN top-k: candidates = corpus rows sharing any band key
-    * with the query, then exact cosine + window top-k over candidates only.
-    * Recall < 1 by construction; `bands` trades recall for candidate count.
-    * Rows whose embedding length differs from `dims` get NULL keys and drop
-    * out silently (relaxed null discipline, like unparseable text spans) —
+    * with the query (16 bands of 6 hyperplane bits), then exact cosine +
+    * window top-k over candidates only. Recall < 1 by construction. Rows
+    * whose embedding length differs from `dims` get NULL keys and drop out
+    * silently (relaxed null discipline, like unparseable text spans) —
     * validate embedding dimensionality upstream if that must be an error. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              dims: Int = 64, bands: Int = 16, bitsPerBand: Int = 6): DataFrame = {
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dims: Int = 64): DataFrame = {
     def withKeys(df: DataFrame, emb: String): DataFrame =
       df.select(df.columns.map(col) :+
-        posexplode(lshBandKeys(col(emb), dims, bands, bitsPerBand)).as(Seq("band", "key")): _*)
+        posexplode(lshBandKeys(col(emb), dims, 16, 6)).as(Seq("band", "key")): _*)
     val c = withKeys(corpus.select(col("vec_id"), col("embedding")), "embedding")
     val q = withKeys(queries.select(col("qid"), col("q_emb")), "q_emb")
     val cand = c.join(broadcast(q), Seq("band", "key"))

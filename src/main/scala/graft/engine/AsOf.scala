@@ -32,9 +32,10 @@ object AsOf {
     t => floor(unix_micros(t) / lit(widthMicros)).cast("long")
   }
 
-  /** left/right must both carry `keyCol`, `tsCol`, `idCol`. Returns the left
-    * rows' (key, id, ts) plus `asof_id`/`asof_ts` of the matched right row
-    * (null when no right row precedes). EVERY left row is returned: a left
+  /** left/right must both carry the key `user_id`, the timestamp `ts` and
+    * the id `event_id`. Returns the left rows' (user_id, event_id, ts) plus
+    * `asof_id`/`asof_ts` of the matched right row (null when no right row
+    * precedes). EVERY left row is returned: a left
     * row with a NULL timestamp matches nothing (`v.ts <= c.ts` is never true
     * for null — the SQL semantics) and comes back with null asof_id/asof_ts;
     * RIGHT rows with a null timestamp (no position on the time axis) or a
@@ -50,11 +51,9 @@ object AsOf {
     * |buckets|-sized, not |rows|-sized), joined back by (key, bucket).
     * Identical output to the one-pass plan for any monotone bucketing. */
   def joinAsOf(left: DataFrame, right: DataFrame,
-               keyCol: String = "user_id", tsCol: String = "ts",
-               idCol: String = "event_id",
                bucketFn: Option[Column => Column] = None): DataFrame = {
-    val idType = right.schema(idCol).dataType
-    val tsType = right.schema(tsCol).dataType
+    val idType = right.schema("event_id").dataType
+    val tsType = right.schema("ts").dataType
     // a null-ts RIGHT row would sort FIRST in the window (nulls-first) and
     // become a spurious carry-forward match with asof_ts = null; a null-ID
     // right row carries no referencable identity (the match IS its id) and
@@ -67,10 +66,10 @@ object AsOf {
     // carry-forward — and hence asof_id/asof_ts — naturally NULL, which is
     // the correct "matches nothing" answer without a second scan of `left`
     val l = left
-      .select(col(keyCol).as("k"), col(tsCol).as("t"), col(idCol).as("lid"))
+      .select(col("user_id").as("k"), col("ts").as("t"), col("event_id").as("lid"))
       .withColumn("side", lit(1)).withColumn("rid", lit(null).cast(idType))
-    val r = right.where(col(tsCol).isNotNull && col(idCol).isNotNull)
-      .select(col(keyCol).as("k"), col(tsCol).as("t"), col(idCol).as("rid"))
+    val r = right.where(col("ts").isNotNull && col("event_id").isNotNull)
+      .select(col("user_id").as("k"), col("ts").as("t"), col("event_id").as("rid"))
       .withColumn("side", lit(0)).withColumn("lid", lit(null).cast(idType))
     val u = l.unionByName(r)
     val matched = bucketFn match {
@@ -113,7 +112,7 @@ object AsOf {
     }
     matched
       .where(col("side") === 1)
-      .select(col("k").as(keyCol), col("lid").as(idCol), col("t").as(tsCol),
+      .select(col("k").as("user_id"), col("lid").as("event_id"), col("t").as("ts"),
         col("asof_id"), col("asof_ts"))
   }
 }

@@ -36,13 +36,14 @@ object Cluster {
   /** Smallest disk radius k whose outside-disk lower bound clears `radiusM`
     * for EVERY latitude in band b (the bound is monotone non-increasing in
     * |lat|, so the band's poleward edge is the worst case); -1 marks a
-    * polar band where no k <= kMax suffices. Strict `>`: the refine keeps
+    * polar band where no k <= 64 suffices. Strict `>`: the refine keeps
     * dist <= radiusM, so a bound exactly equal to the radius could sit on
     * a true match outside the disk (Knn's discipline). */
-  private def diskKByBand(level: Int, radiusM: Double, kMax: Int): Seq[(Int, Int)] =
+  private def diskKByBand(radiusM: Double): Seq[(Int, Int)] =
     (0 until nBands).map { b =>
       val worstLat = math.min(90.0, (b + 1) * BandDegWidth)
-      val k = (1 to kMax).find(k => Knn.outsideDiskLowerBound(worstLat, level, k) > radiusM)
+      val k = (1 to 64).find(k =>
+        Knn.outsideDiskLowerBound(worstLat, SpatialJoin.DefaultLevel, k) > radiusM)
       (b, k.getOrElse(-1))
     }
 
@@ -54,17 +55,16 @@ object Cluster {
     * regular/polar arms partition on a's band so they cannot overlap).
     *
     * points: (pid, lat, lon[, cell]) — pid of any type, assumed unique; a
-    * present `cell` column is reused and must have been computed at this
-    * `level`. Rows with a null lat or lon are DROPPED (they have no
-    * location; a null coordinate cannot be within any radius).
+    * present `cell` column is reused and must have been computed at
+    * SpatialJoin.DefaultLevel. Rows with a null lat or lon are DROPPED
+    * (they have no location; a null coordinate cannot be within any
+    * radius).
     *
     * Plan shape: one explode of the left side into its (2k+1)² disk cells
     * (k = 1-2 for city-scale radii at the default level), one shuffle
     * equi-join on the cell string, haversine refine. No broadcast of
     * anything fact-sized, no driver collect of any data. */
-  def neighborPairs(points: DataFrame, radiusM: Double,
-                    level: Int = SpatialJoin.DefaultLevel,
-                    kMax: Int = 64): DataFrame = {
+  def neighborPairs(points: DataFrame, radiusM: Double): DataFrame = {
     require(radiusM > 0, s"radiusM must be positive: $radiusM")
     val spark = points.sparkSession
     import spark.implicits._
@@ -73,8 +73,9 @@ object Cluster {
       .select(col("pid"), col("lat").cast("double").as("lat"),
         col("lon").cast("double").as("lon"),
         (if (points.columns.contains("cell")) col("cell")
-         else call_function("st_cell", col("lat"), col("lon"), lit(level))).as("cell"))
-    val bands = diskKByBand(level, radiusM, kMax).toDF("band", "k")
+         else call_function("st_cell", col("lat"), col("lon"),
+           lit(SpatialJoin.DefaultLevel))).as("cell"))
+    val bands = diskKByBand(radiusM).toDF("band", "k")
     val banded = pts0
       .withColumn("band",
         least(floor(abs(col("lat")) / lit(BandDegWidth)).cast("int"), lit(nBands - 1)))
@@ -134,8 +135,7 @@ object Cluster {
     * ball of radius eps — the metric's own property (a corpus with 10⁶
     * coincident points has 10¹² eps-pairs no matter the algorithm); callers
     * bound it by choosing eps against their density, not by a silent cap. */
-  def dbscan(points: DataFrame, epsM: Double, minPts: Int,
-             level: Int = SpatialJoin.DefaultLevel): DataFrame = {
+  def dbscan(points: DataFrame, epsM: Double, minPts: Int): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
     val spark = points.sparkSession
     Durable.ensureCheckpointDir(spark)
@@ -150,13 +150,12 @@ object Cluster {
     val owned = points.storageLevel == StorageLevel.NONE
     if (owned) points.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      dbscanBuilt(points, epsM, minPts, level)
+      dbscanBuilt(points, epsM, minPts)
     } finally if (owned) points.unpersist()
   }
 
-  private def dbscanBuilt(points: DataFrame, epsM: Double, minPts: Int,
-                          level: Int): DataFrame = {
-    val prs = Durable.durable(neighborPairs(points, epsM, level))
+  private def dbscanBuilt(points: DataFrame, epsM: Double, minPts: Int): DataFrame = {
+    val prs = Durable.durable(neighborPairs(points, epsM))
     val base = points
       .where(col("lat").isNotNull && col("lon").isNotNull)
       .select(col("pid"))

@@ -110,9 +110,9 @@ object Corpus {
 
   /** Deterministic polygon layer: 45 regular n-gons centred on hotspots
     * (cycling) + 5 uniform-random, n in 5..12, radius 0.1..2.0 deg. */
-  def polygons(spark: SparkSession, nPolys: Int = 50): Dataset[Poly] = {
+  def polygons(spark: SparkSession): Dataset[Poly] = {
     import spark.implicits._
-    spark.createDataset((0 until nPolys).map(genPoly))
+    spark.createDataset((0 until 50).map(genPoly))
   }
 
   /** Deterministic polygon parameters (center, vertex count, radius) —
@@ -156,9 +156,11 @@ object Corpus {
     MultiPoly(f"poly-$p%03d", rings)
   }
 
-  def polygonsHoled(spark: SparkSession, nPolys: Int = 50): Dataset[MultiPoly] = {
+  /** The multi-ring layer of [[genPolyHoled]] over the 50 polygons of
+    * [[polygons]]. */
+  def polygonsHoled(spark: SparkSession): Dataset[MultiPoly] = {
     import spark.implicits._
-    spark.createDataset((0 until nPolys).map(genPolyHoled))
+    spark.createDataset((0 until 50).map(genPolyHoled))
   }
 
   /** Documents as a DataFrame with the exact input-hint schema. */

@@ -21,21 +21,17 @@ object Dedup {
   /** Exact duplicate membership rows (content_hash, doc_id, n) by content
     * hash, without any unbounded per-group state (a window count instead
     * of collect_list). */
-  def exactGroups(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def exactGroups(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("content_hash"))
-    docs.select(md5(col(textCol)).as("content_hash"), col("doc_id"))
+    docs.select(md5(col("text")).as("content_hash"), col("doc_id"))
       .withColumn("n", count(lit(1)).over(w))
       .where(col("n") > 1)
   }
 
   /** Word 3-gram shingles of the normalized text (codegen'd st_shingles
     * kernel: lower-cased alnum words, distinct space-joined n-grams). */
-  def shingles(text: Column, n: Int = 3): Column =
-    call_function("st_shingles", text, lit(n))
-
-  /** docs -> (doc_id, shingles). */
-  private def shingled(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(col("doc_id"), shingles(col(textCol)).as("shingles"))
+  def shingles(text: Column): Column =
+    call_function("st_shingles", text, lit(3))
 
   /** (doc_id, band, bucket) LSH band-bucket rows, hot buckets capped. */
   private def bandBuckets(sh: DataFrame,
@@ -67,10 +63,9 @@ object Dedup {
     * verification — and is recomputed for each rather than stored: the
     * stored projection measured 4.7x the raw text bytes and slower end to
     * end (sf0.1 documents, local[16]). */
-  def minhashLsh(docs: DataFrame, textCol: String = "text",
-                 numHashes: Int = 32, bands: Int = 8,
+  def minhashLsh(docs: DataFrame, numHashes: Int = 32, bands: Int = 8,
                  threshold: Double = 0.7, maxBucket: Int = 64): DataFrame = {
-    val sh = shingled(docs, textCol)
+    val sh = docs.select(col("doc_id"), shingles(col("text")).as("shingles"))
     val banded = bandBuckets(sh, numHashes, bands, maxBucket)
     val a = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
     val b = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b"))
@@ -92,18 +87,18 @@ object Dedup {
   /** 64-bit SimHash over the word multiset via the codegen'd st_simhash
     * kernel (word hash = big-endian first 8 bytes of md5(word), signed bit
     * votes) — no typed .map row ser/de in the path. */
-  def simhash(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def simhash(docs: DataFrame): DataFrame =
     docs.select(col("doc_id").cast("string").as("doc_id"),
-      call_function("st_simhash", call_function("st_words", col(textCol))).as("simhash"))
+      call_function("st_simhash", call_function("st_words", col("text"))).as("simhash"))
 
   /** SimHash near-dup candidate pairs: 4 x 16-bit chunk buckets (capped at
     * maxBucket rows per chunk-key, same quarantine rule as minhashLsh),
     * verify hamming distance <= maxHamming. Note the candidate guarantee is
     * pigeonhole-exact only for maxHamming <= 3 with 4 chunks; beyond that a
     * pair can differ in every chunk and still be within maxHamming. */
-  def simhashPairs(docs: DataFrame, textCol: String = "text",
-                   maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val sh = simhash(docs, textCol)
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
+                   maxBucket: Int = 64): DataFrame = {
+    val sh = simhash(docs)
     val chunked = sh.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map { c =>
         shiftrightunsigned(col("simhash"), c * 16).bitwiseAND(lit(0xFFFFL))
@@ -124,26 +119,26 @@ object Dedup {
   }
 
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH bucket candidates
-    * (same deterministic md5-derived planes as Ann), capped per bucket, then
-    * exact cosine verification. vecs: (vec_id, embedding array<double>).
-    * Returns (vec_a, vec_b, cos) with vec_a < vec_b, cos >= threshold.
-    * Approximate by construction (recall < 1 for moderate thresholds).
-    * Identical vectors share every band bucket, so exact copies are found
-    * UNLESS their duplicate group exceeds maxBucket — members past the cap
-    * are quarantined, the same rule as minhashLsh/simhashPairs.
+    * (16 bands of 6 bits, the same deterministic md5-derived planes as
+    * Ann.lshTopK), capped per bucket, then exact cosine verification.
+    * vecs: (vec_id, embedding array<double> of 64 dims; other lengths get
+    * NULL keys and drop out, as in Ann.lshTopK). Returns (vec_a, vec_b, cos) with vec_a < vec_b,
+    * cos >= threshold. Approximate by construction (recall < 1 for
+    * moderate thresholds). Identical vectors share every band bucket, so
+    * exact copies are found UNLESS their duplicate group exceeds 64
+    * members (the per-bucket cap) — members past the cap are quarantined,
+    * the same rule as minhashLsh/simhashPairs.
     *
     * Shuffle shape matches minhashLsh: only (vec_id, band, key) rows enter
     * the band shuffle and the candidate self-join; embeddings re-attach once
     * per deduped candidate pair for the cosine verify. */
-  def embeddingNearDup(vecs: DataFrame, threshold: Double = 0.9,
-                       dims: Int = 64, bands: Int = 16, bitsPerBand: Int = 6,
-                       maxBucket: Int = 64): DataFrame = {
+  def embeddingNearDup(vecs: DataFrame, threshold: Double = 0.9): DataFrame = {
     val banded = vecs.select(col("vec_id"),
-      posexplode(Ann.lshBandKeys(col("embedding"), dims, bands, bitsPerBand))
+      posexplode(Ann.lshBandKeys(col("embedding"), 64, 16, 6))
         .as(Seq("band", "key")))
     val wB = Window.partitionBy(col("band"), col("key")).orderBy(col("vec_id"))
     val capped = banded.withColumn("bn", row_number().over(wB))
-      .where(col("bn") <= maxBucket)
+      .where(col("bn") <= 64)
     val a = capped.select(col("band"), col("key"), col("vec_id").as("vec_a"))
     val b = capped.select(col("band"), col("key"), col("vec_id").as("vec_b"))
     val idPairs = a.join(b, Seq("band", "key"))
@@ -159,22 +154,19 @@ object Dedup {
   }
 
   /** Substring-overlap near-dup candidates via winnowing fingerprints
-    * (st_winnow): pairs of docs sharing at least `minShared` window-minimum
-    * k-gram hashes. The winnowing guarantee makes any pair sharing a
-    * contiguous substring of length >= w + k - 1 a candidate — the
+    * ([[TextOps.winnowCol]]): (doc_a, doc_b, n_shared) for pairs of docs
+    * sharing at least 10 fingerprints. The winnowing guarantee makes any
+    * pair sharing a contiguous substring of length >= 8 a candidate — the
     * contiguous-plagiarism detector the token-set methods (minhash/simhash)
     * miss when the shared run is short relative to the documents. Same
     * 100-TB bucket shape as the LSH paths: the fingerprint is the join key,
-    * hot fingerprints (boilerplate substrings) capped at `maxBucket` docs
-    * so no bucket detonates the self-join. */
-  def winnowNearDup(docs: DataFrame, textCol: String = "text",
-                    k: Int = 5, w: Int = 4, minShared: Long = 10,
-                    maxBucket: Int = 64): DataFrame = {
-    val fps = docs.select(col("doc_id"),
-      explode(call_function("st_winnow", col(textCol), lit(k), lit(w))).as("fp"))
+    * hot fingerprints (boilerplate substrings) capped at 64 docs so no
+    * bucket detonates the self-join. */
+  def winnowNearDup(docs: DataFrame): DataFrame = {
+    val fps = docs.select(col("doc_id"), explode(TextOps.winnowCol(col("text"))).as("fp"))
     val wF = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
     val capped = fps.withColumn("rn", row_number().over(wF))
-      .where(col("rn") <= maxBucket)
+      .where(col("rn") <= 64)
       .select("fp", "doc_id")
     val a = capped.select(col("fp"), col("doc_id").as("doc_a"))
     val b = capped.select(col("fp"), col("doc_id").as("doc_b"))
@@ -182,43 +174,9 @@ object Dedup {
       .where(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
+      .where(col("n_shared") >= 10L)
   }
 
-  /** n-gram Jaccard similarity for explicit candidate pairs
-    * (pairs: doc_a, doc_b) against the docs table. */
-  /** Connected components over a near-duplicate pair set -> per-doc cluster
-    * representative (the component's MINIMUM doc id): the step AFTER pair
-    * detection in a production dedup pipeline — keep one canonical doc per
-    * cluster, drop the rest. `nodes` (doc_id) is every doc that needs a
-    * cluster id (docs in no pair stay their own singleton); `pairs`
-    * (doc_a, doc_b) is undirected.
-    *
-    * Min-label propagation WITH per-round pointer doubling (path
-    * shortcutting): each round every node takes the min of its label and
-    * its neighbors' labels, then follows its representative pointer one
-    * extra hop (rep <- rep(rep), looked up in the previous round's label
-    * map). Propagation alone needs O(component diameter) rounds — a
-    * CHAIN-shaped dup graph (pairwise sliding near-dups) of length 10^6
-    * would blow any practical maxIter; the shortcut roughly doubles how far
-    * the minimum has reached each round, so convergence is O(log n) rounds
-    * (a 1000-node path converges in ~10, gated by EngineSpec). Reps only
-    * ever DECREASE and stay within the component (each new rep is some
-    * member's current-or-previous rep), so the fixpoint every member agrees
-    * on is the component MINIMUM, exactly as pure propagation's. THROWS if
-    * not converged by `maxIter` rather than returning a
-    * plausible-but-wrong clustering.
-    *
-    * Scale shape: each round shuffles only the label table (one row per
-    * node) — once against the cached edge list, once for the shortcut
-    * lookup; labels are snapshotted per round through [[Durable.Rounds]]
-    * (reliable parquet under the checkpoint dir — executor-loss-safe,
-    * lineage-bounded — with the SUPERSEDED round deleted as soon as the
-    * next one commits, so a long-lived session holds at most two rounds
-    * per call instead of accumulating all of them), and convergence costs
-    * one count action per round (the label table is the size of the node
-    * set, so unlike Knn's query-sized rounds it cannot live on the
-    * driver). */
   /** Edge cap (BOTH-direction rows) below which [[connectedComponents]]
     * runs a driver union-find instead of distributed label rounds: each
     * round costs 2 shuffles + a snapshot + a count action, which dominates
@@ -301,6 +259,38 @@ object Dedup {
       .select(col("id").as("doc_id"), coalesce(col("mrep"), col("id")).as("rep"))
   }
 
+  /** Connected components over a near-duplicate pair set -> per-doc cluster
+    * representative (the component's MINIMUM doc id): the step AFTER pair
+    * detection in a production dedup pipeline — keep one canonical doc per
+    * cluster, drop the rest. `nodes` (doc_id) is every doc that needs a
+    * cluster id (docs in no pair stay their own singleton); `pairs`
+    * (doc_a, doc_b) is undirected.
+    *
+    * Min-label propagation WITH per-round pointer doubling (path
+    * shortcutting): each round every node takes the min of its label and
+    * its neighbors' labels, then follows its representative pointer one
+    * extra hop (rep <- rep(rep), looked up in the previous round's label
+    * map). Propagation alone needs O(component diameter) rounds — a
+    * CHAIN-shaped dup graph (pairwise sliding near-dups) of length 10^6
+    * would blow any practical maxIter; the shortcut roughly doubles how far
+    * the minimum has reached each round, so convergence is O(log n) rounds
+    * (a 1000-node path converges in ~10, gated by EngineSpec). Reps only
+    * ever DECREASE and stay within the component (each new rep is some
+    * member's current-or-previous rep), so the fixpoint every member agrees
+    * on is the component MINIMUM, exactly as pure propagation's. THROWS if
+    * not converged by `maxIter` rather than returning a
+    * plausible-but-wrong clustering.
+    *
+    * Scale shape: each round shuffles only the label table (one row per
+    * node) — once against the cached edge list, once for the shortcut
+    * lookup; labels are snapshotted per round through [[Durable.Rounds]]
+    * (reliable parquet under the checkpoint dir — executor-loss-safe,
+    * lineage-bounded — with the SUPERSEDED round deleted as soon as the
+    * next one commits, so a long-lived session holds at most two rounds
+    * per call instead of accumulating all of them), and convergence costs
+    * one count action per round (the label table is the size of the node
+    * set, so unlike Knn's query-sized rounds it cannot live on the
+    * driver). */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIter: Int = 30): DataFrame =
     connectedComponents(nodes, pairs, maxIter, validateNodes = true, DriverEdgeCap)
@@ -403,9 +393,10 @@ object Dedup {
     }
   }
 
-  def ngramJaccard(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
-                   n: Int = 3): DataFrame = {
-    val sh = docs.select(col("doc_id"), shingles(col(textCol), n).as("sh"))
+  /** Word 3-gram Jaccard similarity for explicit candidate pairs
+    * (pairs: doc_a, doc_b) against the docs table. */
+  def ngramJaccard(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val sh = docs.select(col("doc_id"), shingles(col("text")).as("sh"))
     pairs
       .join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), Seq("doc_a"))
       .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), Seq("doc_b"))

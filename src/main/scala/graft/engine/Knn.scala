@@ -16,7 +16,7 @@ import graft.core.Cells
   * neighbour is provably closer than anything outside the disk — the bound
   * uses the cell's minimum metric dimension at the query's latitude band
   * (geohash cells are anisotropic; we take the worst case over the disk).
-  * Unresolved queries expand to the next ring, bounded at `maxRounds`;
+  * Unresolved queries expand to the next ring, bounded at `MaxRounds`;
   * any residual is finished exactly with a targeted brute-force pass, so
   * the result always equals true top-k. The round state (the unresolved
   * queries and each resolved query's k rows) is query-sized and lives on
@@ -29,6 +29,14 @@ object Knn {
     * (R = 6371008.8 m, matching `st_haversine`): 2*pi*R/360 = 111194.9267...
     * Rounded DOWN so every product below stays a true lower bound. */
   val MetersPerDegree = 111194.0
+
+  /** Cell level of the ring expansion (geohash 4, ~39 x 20 km cells): a
+    * smaller level means bigger cells, so fewer rounds but more candidates
+    * per round. */
+  private val Level = 4
+
+  /** Ring rounds before the residual brute-force pass. */
+  private val MaxRounds = 6
 
   /** Correction factor for the lon-separation bound: the haversine distance
     * between two points Δλ apart at |lat| <= φ is
@@ -60,8 +68,6 @@ object Knn {
 
   /** queries: (qid, lat, lon); points: (pid, lat, lon).
     * Returns (qid, pid, dist, rank) with rank 1..k per query.
-    * `level` picks the cell resolution; smaller level = bigger cells =
-    * fewer rounds but more candidates per round.
     *
     * Round state lives on the driver: the query list is collected once and
     * each row gets a driver index `qi`; every round ships the unresolved
@@ -72,12 +78,11 @@ object Knn {
     * a query set whose results exceed `spark.driver.maxResultSize` fails
     * the collect loudly rather than spilling. Each query row is its own
     * query, so duplicate qids each get their own k rows. */
-  def knn(spark: SparkSession, queries: DataFrame, points: DataFrame, k: Int,
-          level: Int = 4, maxRounds: Int = 6): DataFrame = {
+  def knn(spark: SparkSession, queries: DataFrame, points: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.functions.{call_function => cf}
     val pts = points
       .select(col("pid"), col("lat").as("p_lat"), col("lon").as("p_lon"))
-      .withColumn("cell", cf("st_cell", col("p_lat"), col("p_lon"), lit(level)))
+      .withColumn("cell", cf("st_cell", col("p_lat"), col("p_lon"), lit(Level)))
     pts.cache()
     val qs = queries
       .select(col("qid"), col("lat").cast("double"), col("lon").cast("double")).collect()
@@ -98,9 +103,9 @@ object Knn {
     val found = new Array[Array[Row]](qs.length)
     var open: Seq[Int] = qs.indices
     var round = 1
-    while (round <= maxRounds && open.nonEmpty) {
+    while (round <= MaxRounds && open.nonEmpty) {
       val got = topK(relation(open)
-        .withColumn("qcell", cf("st_cell", col("q_lat"), col("q_lon"), lit(level)))
+        .withColumn("qcell", cf("st_cell", col("q_lat"), col("q_lon"), lit(Level)))
         .withColumn("cell", explode(cf("st_cell_disk", col("qcell"), lit(round))))
         .join(pts, Seq("cell"), "inner"))
       // a query resolves when it has k hits and the k-th is strictly inside
@@ -108,13 +113,13 @@ object Knn {
       // the (dist, pid) tie-break
       val (done, rest) = open.partition(i => got.get(i).exists(rows =>
         rows.length == k &&
-          rows.map(_.getDouble(2)).max < outsideDiskLowerBound(qs(i).getDouble(1), level, round)))
+          rows.map(_.getDouble(2)).max < outsideDiskLowerBound(qs(i).getDouble(1), Level, round)))
       done.foreach(i => found(i) = got(i))
       open = rest
       round += 1
     }
     // Exact completion for the residual: queries still unresolved after
-    // maxRounds (sparse regions, polar anisotropy) get a brute-force pass —
+    // MaxRounds (sparse regions, polar anisotropy) get a brute-force pass —
     // one broadcast of the (small) residual query set against the point
     // table. Output is therefore always exactly the true top-k, and ring
     // expansion is purely an optimization that resolves the dense majority

@@ -51,9 +51,17 @@ object Layout {
       .repartitionByRange(numFiles, col("zkey"))
       .sortWithinPartitions("zkey")
       .write.mode("overwrite").parquet(s"$dir/data")
+    // each file's box over its non-NaN coordinates (NaN sorts above every
+    // double in Spark and the log's JSON cannot hold it; min/max skip
+    // nulls); a file with none gets an empty box that no query hits. Exact:
+    // a NaN or null coordinate never passes readBBox's residual filter
+    def finite(c: String) = when(!isnan(col(c)), col(c))
     val entries = spark.read.parquet(s"$dir/data")
       .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min("lat"), max("lat"), min("lon"), max("lon"))
+      .agg(coalesce(min(finite("lat")), lit(Double.MaxValue)),
+        coalesce(max(finite("lat")), lit(-Double.MaxValue)),
+        coalesce(min(finite("lon")), lit(Double.MaxValue)),
+        coalesce(max(finite("lon")), lit(-Double.MaxValue)))
       .collect()
       .map(r => Entry(r.getString(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toSeq

@@ -63,10 +63,9 @@ object SpatialJoin {
     * geometry size, which at a production layer (10^6 polygons x up to 1024
     * cells x KB-scale rings) is the difference between a feasible and an
     * impossible broadcast. */
-  def polygonCells(polys: DataFrame, level: Int = DefaultLevel,
-                   maxCells: Int = MaxCellsPerPolygon): DataFrame =
+  def polygonCells(polys: DataFrame, level: Int = DefaultLevel): DataFrame =
     polys.select(col("poly_id"), explode(call_function("st_cover_cells_adaptive",
-      col("ring"), lit(level), lit(maxCells))).as("cell"))
+      col("ring"), lit(level), lit(MaxCellsPerPolygon))).as("cell"))
 
   /** Prepared polygon side: covering rows (poly_id, cell), the distinct
     * covering levels, and the ring geometry (poly_id, ring) — one row per
@@ -93,9 +92,8 @@ object SpatialJoin {
   }
 
   def buildIndex(polys: DataFrame, level: Int = DefaultLevel,
-                 maxCells: Int = MaxCellsPerPolygon,
                  cache: Boolean = false): PolygonIndex = {
-    val pc = polygonCells(polys, level, maxCells)
+    val pc = polygonCells(polys, level)
     val pcc = if (cache) pc.cache() else pc
     val rings = polys.select(col("poly_id"), col("ring"))
     val ringsC = if (cache) rings.cache() else rings
@@ -213,9 +211,10 @@ object SpatialJoin {
     * the dimension side (tiny, broadcast). The survivors are pairwise
     * disjoint per polygon, so each point matches at most one covering cell
     * per polygon and the plan stays shuffle-free after the broadcast join.
-    * Refine: st_point_in_polygon_multi (even-odd over all rings). */
-  def joinMulti(points: DataFrame, polys: DataFrame, level: Int = DefaultLevel,
-                maxCells: Int = MaxCellsPerPolygon,
+    * Refine: st_point_in_polygon_multi (even-odd over all rings). Each ring
+    * is covered at the finest level <= DefaultLevel that stays under
+    * MaxCellsPerPolygon cells. */
+  def joinMulti(points: DataFrame, polys: DataFrame,
                 broadcastPolys: Boolean = true): DataFrame = {
     // The covering machinery moves ONLY (poly_id, cell) string pairs —
     // carrying the full nested `rings` geometry through the dedup/prune
@@ -231,7 +230,7 @@ object SpatialJoin {
       .select(col("poly_id"),
         explode(call_function("st_compact_cells",
           call_function("st_cover_cells_adaptive",
-            col("ring"), lit(level), lit(maxCells)))).as("cell"))
+            col("ring"), lit(DefaultLevel), lit(MaxCellsPerPolygon)))).as("cell"))
     // Nested-cell prune: drop cells strictly nested under a coarser cell of
     // the SAME polygon — coverage is unchanged (the coarser cell contains
     // them) and the remaining per-polygon cells are pairwise disjoint.
@@ -249,7 +248,7 @@ object SpatialJoin {
     // Non-broadcast path (big dimension): keep the fully distributed plan —
     // dropDuplicates, then the prune as a shuffled sort-merge anti-join
     // keyed on poly_id, where both sides co-partition and each polygon's
-    // cells (<= maxCells) meet within one task.
+    // cells (<= MaxCellsPerPolygon per ring) meet within one task.
     val ringsDim = polys.select(col("poly_id"), col("rings"))
     val cand =
       if (broadcastPolys) {
@@ -300,11 +299,10 @@ object SpatialJoin {
     *
     * sites: (qid, lat, lon) — the small side (broadcast); points:
     * (pid, lat, lon[, cell]) — the fact side, which never shuffles; a
-    * present `cell` column is REUSED and must have been computed at this
-    * `level` (extractPoints' default).
+    * present `cell` column is REUSED and must have been computed at
+    * DefaultLevel (extractPoints' default).
     * Output: (qid, pid, dist) with dist <= radiusM. */
-  def withinDistance(sites: DataFrame, points: DataFrame, radiusM: Double,
-                     level: Int = DefaultLevel): DataFrame = {
+  def withinDistance(sites: DataFrame, points: DataFrame, radiusM: Double): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
     require(radiusM > 0, s"radiusM must be positive: $radiusM")
@@ -342,7 +340,7 @@ object SpatialJoin {
     // that unreachable, but exactness must not hinge on a constant's
     // rounding direction — Knn uses the same strict discipline.)
     def kFor(lat: Double): Option[Int] =
-      (1 to 64).find(k => Knn.outsideDiskLowerBound(lat, level, k) > radiusM)
+      (1 to 64).find(k => Knn.outsideDiskLowerBound(lat, DefaultLevel, k) > radiusM)
     val withK = siteRows.map(s => (s, kFor(s._2)))
     val regular = withK.collect { case ((q, la, lo), Some(k)) => (q, la, lo, k) }
     val polar = withK.collect { case (s, None) => s }
@@ -352,17 +350,17 @@ object SpatialJoin {
         .where(col("dist") <= radiusM)
         .select(col("qid"), col("pid"), col("dist"))
     // reuse the caller's cell column when present — extractPoints already
-    // pays the encode; it MUST have been computed at this `level`
+    // pays the encode; it MUST have been computed at DefaultLevel
     val pts =
       if (points.columns.contains("cell")) points
       else points.withColumn("cell",
-        call_function("st_cell", col("lat"), col("lon"), lit(level)))
+        call_function("st_cell", col("lat"), col("lon"), lit(DefaultLevel)))
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     if (regular.nonEmpty) {
       val siteCells = siteDf(regular.toSeq.map { case (q, la, lo, k) => Row(q, la, lo, k) },
           Seq(StructField("k", IntegerType, nullable = false)))
         .withColumn("scell",
-          call_function("st_cell", col("q_lat"), col("q_lon"), lit(level)))
+          call_function("st_cell", col("q_lat"), col("q_lon"), lit(DefaultLevel)))
         .withColumn("cell",
           explode(call_function("st_cell_disk", col("scell"), col("k"))))
         .select(col("qid"), col("q_lat"), col("q_lon"), col("cell"))
@@ -404,9 +402,8 @@ object SpatialJoin {
     * hit-set subtree and the domain subtree differ, so exchange reuse
     * could never merge them. PIP on an unmatched candidate sees a null
     * ring and returns null (= no hit). */
-  def containmentSplit(points: DataFrame, polys: DataFrame,
-                       level: Int = DefaultLevel): DataFrame = {
-    val index = buildIndex(polys, level)
+  def containmentSplit(points: DataFrame, polys: DataFrame): DataFrame = {
+    val index = buildIndex(polys)
     if (index.levels.isEmpty)
       // empty polygon layer: every doc with >= 1 point is 'out' (what the
       // join-then-probe shape produced); explode(array()) would instead

@@ -28,8 +28,8 @@ object TextOps {
     s"'(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^ \\t\\n\\x0B\\f\\r\\p{L}\\p{N}]+|$WsClass+"
 
   /** doc_id + whitespace-token and BPE-ish token counts. */
-  def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def tokenCounts(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.select(
       col("doc_id"),
       size(filter(split(t, WsClass + "+"), w => length(w) > 0)).as("n_ws_tokens"),
@@ -84,20 +84,22 @@ object TextOps {
     * (core.LangId, Cavnar-Trenkle style) as one codegen'd kernel pass per
     * row — no explode, no shuffle; the classifier a real pipeline would
     * run where the stopword heuristic above is the cheap prefilter. */
-  def langIdNgram(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"),
-      call_function("st_langid", col(textCol)).as("lang3"))
+  def langIdNgram(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), call_function("st_langid", col("text")).as("lang3"))
 
-  /** Winnowing fingerprints (rolling k-gram hashes, per-window minima —
-    * Schleimer/Wilkerson/Aiken 2003): the substring-robust fingerprint next
-    * to the whole-document md5 (`fp`). Shared substrings of length >=
-    * w + k - 1 guarantee a shared fingerprint; near-dup candidate pairs
-    * come from grouping on exploded fingerprints (same bucket shape as the
-    * minhash path). One kernel pass per row. */
-  def winnow(docs: DataFrame, k: Int = 5, w: Int = 4,
-             textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"),
-      call_function("st_winnow", col(textCol), lit(k), lit(w)).as("fps"))
+  /** Winnowing fingerprints of `text`: rolling k-gram hashes with k = 5,
+    * minimum per window of w = 4 (Schleimer/Wilkerson/Aiken 2003). Shared
+    * substrings of length >= w + k - 1 = 8 guarantee a shared fingerprint.
+    * One kernel pass per row. */
+  private[engine] def winnowCol(text: Column): Column =
+    call_function("st_winnow", text, lit(5), lit(4))
+
+  /** (doc_id, fps): the [[winnowCol]] fingerprints, the substring-robust
+    * fingerprint next to the whole-document md5 (`fp`); near-dup candidate
+    * pairs come from grouping on exploded fingerprints (same bucket shape
+    * as the minhash path). */
+  def winnow(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), winnowCol(col("text")).as("fps"))
 
   /** Fused per-document profile: language ID + quality score + fingerprint
     * in ONE projection over ONE scan (doc_id, lang_pred, quality, fp).
@@ -107,22 +109,20 @@ object TextOps {
     * common subexpressions like the word split are eliminated inside
     * whole-stage codegen). At 100 TB that is 3x less scan I/O and zero
     * shuffles. */
-  def profile(docs: DataFrame, textCol: String = "text"): DataFrame =
-    profileSelect(docs, textCol)
+  def profile(docs: DataFrame): DataFrame = profileSelect(docs)
 
   /** `profile` plus the heavier per-doc signals (trigram language id and
     * the winnowing fingerprint count) — still ONE projection over one scan.
     * The shape a training-data pipeline routes on: partition the output by
     * `lang3`, filter on `quality`, join near-dup candidates on fingerprint
     * overlap. */
-  def profileFull(docs: DataFrame, textCol: String = "text"): DataFrame =
-    profileSelect(docs, textCol,
-      Seq(call_function("st_langid", col(textCol)).as("lang3"),
-        size(call_function("st_winnow", col(textCol), lit(5), lit(4))).as("n_fps")))
+  def profileFull(docs: DataFrame): DataFrame =
+    profileSelect(docs,
+      Seq(call_function("st_langid", col("text")).as("lang3"),
+        size(winnowCol(col("text"))).as("n_fps")))
 
-  private def profileSelect(docs: DataFrame, textCol: String,
-                            extra: Seq[Column] = Nil): DataFrame = {
-    val t = col(textCol)
+  private def profileSelect(docs: DataFrame, extra: Seq[Column] = Nil): DataFrame = {
+    val t = col("text")
     val words = wordsCol(t)
     docs.select(Seq(
       col("doc_id"),

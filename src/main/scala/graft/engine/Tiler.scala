@@ -29,8 +29,8 @@ object Tiler {
 
   /** Single-zoom tile raster: points(lat, lon, ...) -> (tile_id, n_points)
     * at `zoom`. The input contract of [[pyramidFromBase]], [[zonalStats]],
-    * [[focalSmooth]], [[hotspotGi]] and [[moranI]] (`valueCol =
-    * "n_points"`). */
+    * [[focalSmooth]], [[hotspotGi]] and [[moranI]], which all read the
+    * `n_points` column. */
   def raster(points: DataFrame, zoom: Int): DataFrame =
     assign(points, zoom).groupBy(col("tile_id")).agg(count(lit(1)).as("n_points"))
 
@@ -107,7 +107,7 @@ object Tiler {
       explode(call_function("st_tile_polyfill", col("ring"), lit(zoom))).as("tile_id"))
 
   /** Zonal statistics: per-polygon aggregates of a single-zoom tile
-    * raster. zones: (poly_id, ring); tiles: (tile_id, `valueCol`) at
+    * raster. zones: (poly_id, ring); tiles: (tile_id, n_points) at
     * `zoom`. Output: (poly_id, n_zone_tiles, n_data_tiles, total) —
     * covering size, covered tiles with data, and the value sum (exact
     * long arithmetic).
@@ -118,10 +118,9 @@ object Tiler {
     * Zones with no data come from a dimension-side-only aggregate, not an
     * outer join against the raster (Spark cannot preserve a broadcast
     * side, and outer-joining the raster would shuffle it). */
-  def zonalStats(polys: DataFrame, tiles: DataFrame, zoom: Int,
-                 valueCol: String = "n_points"): DataFrame = {
+  def zonalStats(polys: DataFrame, tiles: DataFrame, zoom: Int): DataFrame = {
     val zones = polyfill(polys, zoom)
-    val hits = tiles.select(col("tile_id"), col(valueCol).cast("long").as("v"))
+    val hits = tiles.select(col("tile_id"), col("n_points").cast("long").as("v"))
       .join(broadcast(zones), Seq("tile_id"))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("n_data_tiles"), sum(col("v")).as("total"))
@@ -135,24 +134,6 @@ object Tiler {
   private def choose(n: Int, k: Int): Long =
     (1 to k).foldLeft(1L)((acc, i) => acc * (n - k + i) / i)
 
-  /** Binomial-kernel focal smoothing of a single-zoom tile raster — the
-    * classic raster "focal statistics" / heatmap-blur operator. Each output
-    * tile's value is the kernel-weighted sum over its (2r+1)² neighborhood
-    * with separable weights w(d) = C(2r, r+d) (the discrete binomial
-    * approximation of a Gaussian; weights are INTEGERS, so the sums are
-    * exact longs — order-independent, no float drift anywhere).
-    *
-    * Edge semantics: x wraps at the antimeridian (mod 2^z — longitude is
-    * periodic); y clamps (no polar wrap; contributions that fall off the
-    * top/bottom are dropped, the standard "ignore outside" focal policy).
-    * Output covers the input's dilation by r: every tile that receives at
-    * least one contribution appears, with (tile_id, z, sm).
-    *
-    * Scale shape: the input is an already-aggregated tile histogram (never
-    * the raw points), the kernel explode is a bounded (2r+1)² factor, and
-    * the single groupBy shuffles tile-sized data with map-side partial
-    * aggregation. Weights overflow-check: sum(n·w) <= total_points · C(2r,r)²
-    * — at r <= 8 that headroom is > 2^40 points. */
   /** Shared neighbour-scatter machinery for the window operators
     * (focalSmooth / hotspotGi / moranI): decode the packed tile_id, explode
     * each row to its (dx, dy) window offsets, wrap x across the
@@ -181,14 +162,32 @@ object Tiler {
       .drop("ny", "ring")
   }
 
-  def focalSmooth(tiles: DataFrame, r: Int = 1,
-                  valueCol: String = "n_points"): DataFrame = {
+  /** Binomial-kernel focal smoothing of a single-zoom tile raster
+    * (tile_id, n_points) — the classic raster "focal statistics" /
+    * heatmap-blur operator. Each output tile's value is the kernel-weighted
+    * sum of n_points over its (2r+1)² neighborhood with separable weights
+    * w(d) = C(2r, r+d) (the discrete binomial approximation of a Gaussian;
+    * weights are INTEGERS, so the sums are exact longs — order-independent,
+    * no float drift anywhere).
+    *
+    * Edge semantics: x wraps at the antimeridian (mod 2^z — longitude is
+    * periodic); y clamps (no polar wrap; contributions that fall off the
+    * top/bottom are dropped, the standard "ignore outside" focal policy).
+    * Output covers the input's dilation by r: every tile that receives at
+    * least one contribution appears, with (tile_id, z, sm).
+    *
+    * Scale shape: the input is an already-aggregated tile histogram (never
+    * the raw points), the kernel explode is a bounded (2r+1)² factor, and
+    * the single groupBy shuffles tile-sized data with map-side partial
+    * aggregation. Weights overflow-check: sum(n·w) <= total_points · C(2r,r)²
+    * — at r <= 8 that headroom is > 2^40 points. */
+  def focalSmooth(tiles: DataFrame, r: Int = 1): DataFrame = {
     require(r >= 1 && r <= 8, s"kernel radius out of range [1,8]: $r")
     val w = (-r to r).map(d => choose(2 * r, r + d))
     val offs = array((for (dx <- -r to r; dy <- -r to r) yield
       struct(lit(dx).as("dx"), lit(dy).as("dy"),
         lit(w(dx + r) * w(dy + r)).as("w"))): _*)
-    scatterWindow(tiles.select(col("tile_id"), col(valueCol).cast("long").as("v")),
+    scatterWindow(tiles.select(col("tile_id"), col("n_points").cast("long").as("v")),
         offs, 2 * r + 1, keep = Seq("v"))
       .groupBy(col("tile_id"))
       .agg(sum(col("v") * col("o.w")).as("sm"))
@@ -196,7 +195,8 @@ object Tiler {
       .select("tile_id", "z", "sm")
   }
 
-  /** Getis-Ord Gi* hot/cold-spot z-scores over the (sparse) tile raster:
+  /** Getis-Ord Gi* hot/cold-spot z-scores over the (sparse) tile raster
+    * (tile_id, n_points):
     * for each OBSERVED tile, the weighted neighbourhood is the 3x3 window
     * (binary weights, self included) intersected with the observed tile set,
     * and
@@ -216,8 +216,8 @@ object Tiler {
     * counts (exact double sums); n >= 2 tiles required for a defined std;
     * tile_id must be unique (an aggregated raster).
     */
-  def hotspotGi(tiles: DataFrame, valueCol: String = "n_points"): DataFrame = {
-    val t = tiles.select(col("tile_id"), col(valueCol).cast("double").as("v"))
+  def hotspotGi(tiles: DataFrame): DataFrame = {
+    val t = tiles.select(col("tile_id"), col("n_points").cast("double").as("v"))
     val offs = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
       struct(lit(dx).as("dx"), lit(dy).as("dy"))): _*)
     // ONE evaluation of `tiles`: the dx=dy=0 contribution every observed
@@ -246,9 +246,9 @@ object Tiler {
   }
 
   /** Inverse-distance-weighted interpolation of a point measurement onto
-    * the z tile grid: every tile within Chebyshev radius `r` of an occupied
+    * the z tile grid: every tile within Chebyshev radius 1 of an occupied
     * tile gets est = sum(v_i / d_i^2) / sum(1 / d_i^2) over the points in
-    * its (2r+1)^2 window, d_i = haversine(tile centre, point). The cutoff
+    * its 3x3 window, d_i = haversine(tile centre, point). The cutoff
     * is by tile adjacency (not metric radius) — the standard gridded-IDW
     * search window. Points exactly on a tile centre (d = 0) are excluded
     * (measure-zero; the limit est there is the point's own value).
@@ -256,14 +256,13 @@ object Tiler {
     * Output: (tile_id, n_contrib, est) — note tiles with NO points of
     * their own still get estimates from neighbouring points (the point of
     * interpolation: point samples -> continuous raster). Plan: one bounded
-    * (2r+1)^2 explode of the point table + ONE shuffle with map-side
+    * 9x explode of the point table + ONE shuffle with map-side
     * partial sums; scales with points, never materializes the full grid. */
-  def idw(points: DataFrame, zoom: Int, valueCol: String, r: Int = 1): DataFrame = {
-    require(r >= 1 && r <= 8, s"search radius out of range [1,8]: $r")
-    require(2 * r + 1 <= (1L << zoom),
-      s"window of width ${2 * r + 1} is wider than the x ring at zoom $zoom — " +
+  def idw(points: DataFrame, zoom: Int, valueCol: String): DataFrame = {
+    require(3 <= (1L << zoom),
+      s"window of width 3 is wider than the x ring at zoom $zoom — " +
         "the wrap would double-count contributions")
-    val offs = array((for (dx <- -r to r; dy <- -r to r) yield
+    val offs = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
       struct(lit(dx).as("dx"), lit(dy).as("dy"))): _*)
     val n = 1L << zoom
     points
@@ -288,7 +287,7 @@ object Tiler {
   }
 
   /** Global Moran's I spatial autocorrelation over the (sparse) tile raster
-    * with binary queen contiguity (8 neighbours, observed tiles only):
+    * (tile_id, n_points) with binary queen contiguity (8 neighbours, observed tiles only):
     *   I = (n / W) * sum_i (xi - m)(sum_nbr_i - wn_i * m) / sum_i (xi - m)^2
     * where sum_nbr_i / wn_i are the observed-neighbour value sum / count
     * (so sum_j w_ij (xj - m) = sum_nbr_i - wn_i * m) and W = sum wn_i.
@@ -300,8 +299,8 @@ object Tiler {
     * aggregated tile table (8 neighbours + the self observedness marker),
     * one shuffle, everything else folds into one global aggregate —
     * the input pipeline is evaluated once. tile_id must be unique. */
-  def moranI(tiles: DataFrame, valueCol: String = "n_points"): DataFrame = {
-    val t = tiles.select(col("tile_id"), col(valueCol).cast("double").as("v"))
+  def moranI(tiles: DataFrame): DataFrame = {
+    val t = tiles.select(col("tile_id"), col("n_points").cast("double").as("v"))
     // Same single-evaluation shape as [[hotspotGi]]: scatter ALL nine
     // offsets, but the self row only marks observedness and carries the
     // tile's own value — it is excluded from nsum/wn, so the neighbour

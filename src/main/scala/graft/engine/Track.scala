@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * A "track" is one entity's extracted points in sequence order — here a
   * document's span points ordered by span offset (the interleaved corpus's
-  * native notion of a path), but any (id, seq, lat, lon) frame works.
+  * native notion of a path). Every operator reads (doc_id, offset, lat,
+  * lon): doc_id names the track and offset orders its points.
   *
   * Scale shape: every operator is ONE hash shuffle on the track id (the
   * window partition), followed by map-side work — no self-joins, no
@@ -24,13 +25,12 @@ import org.apache.spark.sql.functions._
 object Track {
 
   /** Consecutive-leg frame: each row pairs a point with its predecessor on
-    * the same track. Columns: id, seq, p_lat, p_lon, lat, lon, leg_m
+    * the same track. Columns: doc_id, offset, lat, lon, p_lat, p_lon, leg_m
     * (haversine metres), bearing_deg (initial great-circle bearing
     * predecessor -> point). First point of each track carries nulls. */
-  def legs(pts: DataFrame, idCol: String = "doc_id",
-           seqCol: String = "offset"): DataFrame = {
-    val w = Window.partitionBy(col(idCol)).orderBy(col(seqCol))
-    pts.select(col(idCol), col(seqCol), col("lat"), col("lon"))
+  def legs(pts: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("offset"))
+    pts.select(col("doc_id"), col("offset"), col("lat"), col("lon"))
       .withColumn("p_lat", lag("lat", 1).over(w))
       .withColumn("p_lon", lag("lon", 1).over(w))
       .withColumn("leg_m",
@@ -44,18 +44,17 @@ object Track {
     * rounded to mm before the ratio so the output is reassociation-stable
     * (haversine leg sums drift ~1e-12 relative under different partition
     * orders). Single-point tracks get length 0 and null sinuosity. */
-  def stats(pts: DataFrame, idCol: String = "doc_id",
-            seqCol: String = "offset"): DataFrame = {
+  def stats(pts: DataFrame): DataFrame = {
     val lengthR = round(coalesce(col("len_raw"), lit(0.0)), 3) + 0.0
     val netR = round(call_function("st_haversine",
       col("a.lat"), col("a.lon"), col("b.lat"), col("b.lon")), 3) + 0.0
-    legs(pts, idCol, seqCol)
-      .groupBy(col(idCol))
+    legs(pts)
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_points"),
         sum(col("leg_m")).as("len_raw"),
-        min_by(struct(col("lat"), col("lon")), col(seqCol)).as("a"),
-        max_by(struct(col("lat"), col("lon")), col(seqCol)).as("b"))
-      .select(col(idCol), col("n_points"),
+        min_by(struct(col("lat"), col("lon")), col("offset")).as("a"),
+        max_by(struct(col("lat"), col("lon")), col("offset")).as("b"))
+      .select(col("doc_id"), col("n_points"),
         lengthR.as("length_m"), netR.as("net_m"))
       .withColumn("sinuosity",
         when(col("net_m") > 0.0, round(col("length_m") / col("net_m"), 6) + 0.0))
@@ -79,15 +78,14 @@ object Track {
     * chain per point — the same pre-state shape Streams.geofenceStream
     * already uses. */
   def geofenceTransitions(pts: DataFrame, fences: Seq[(Double, Double)],
-                          radiusM: Double, idCol: String = "doc_id",
-                          seqCol: String = "offset"): DataFrame = {
+                          radiusM: Double): DataFrame = {
     require(fences.nonEmpty, "geofenceTransitions needs at least one fence centre")
-    val w = Window.partitionBy(col(idCol)).orderBy(col(seqCol))
-    pts.select(col(idCol), col(seqCol), col("lat"), col("lon"),
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("offset"))
+    pts.select(col("doc_id"), col("offset"), col("lat"), col("lon"),
         (Track.minFenceDist(fences, col("lat"), col("lon")) <= lit(radiusM)).as("inside"))
       .withColumn("p_inside", lag(col("inside"), 1).over(w))
       .where(col("p_inside").isNotNull && col("p_inside") =!= col("inside"))
-      .select(col(idCol), col(seqCol), col("lat"), col("lon"),
+      .select(col("doc_id"), col("offset"), col("lat"), col("lon"),
         when(col("inside"), lit("enter")).otherwise(lit("exit")).as("transition"))
   }
 
@@ -107,13 +105,12 @@ object Track {
     * last-tile) pair at zoom `z`; output is the pair histogram. Two
     * shuffles: per-track argmin/argmax, then the pair count — both with
     * map-side partial aggregation. */
-  def odMatrix(pts: DataFrame, z: Int, idCol: String = "doc_id",
-               seqCol: String = "offset"): DataFrame =
-    pts.select(col(idCol), col(seqCol),
+  def odMatrix(pts: DataFrame, z: Int): DataFrame =
+    pts.select(col("doc_id"), col("offset"),
         call_function("st_tile_id", col("lat"), col("lon"), lit(z)).as("tid"))
-      .groupBy(col(idCol))
-      .agg(min_by(col("tid"), col(seqCol)).as("o_tile"),
-        max_by(col("tid"), col(seqCol)).as("d_tile"))
+      .groupBy(col("doc_id"))
+      .agg(min_by(col("tid"), col("offset")).as("o_tile"),
+        max_by(col("tid"), col("offset")).as("d_tile"))
       .groupBy(col("o_tile"), col("d_tile"))
       .agg(count(lit(1)).as("n_tracks"))
 }

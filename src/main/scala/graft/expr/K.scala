@@ -962,10 +962,6 @@ object K {
     new GenericArrayData(mins)
   }
 
-  /** st_cosine(a, b): cosine similarity of two double arrays — one codegen'd
-    * pass with the same left-to-right accumulation order as the
-    * zip_with/aggregate formulation (and the SQL oracle), including the
-    * 1e-12 denominator floor. */
   /** st_compact_cells(cells): covering compression (the H3 compactCells
     * analogue for geohash cells): any complete set of 32 sibling cells is
     * replaced by its parent, repeated bottom-up until no set completes —
@@ -1347,6 +1343,10 @@ object K {
     java.lang.Long.valueOf(b1.toLong * k2 + b2)
   }
 
+  /** st_cosine(a, b): cosine similarity of two double arrays — one codegen'd
+    * pass with the same left-to-right accumulation order as the
+    * zip_with/aggregate formulation (and the SQL oracle), including the
+    * 1e-12 denominator floor. */
   def cosineSim(a: ArrayData, b: ArrayData): java.lang.Double = {
     if (a == null || b == null) return null
     // ragged input -> NULL (matching the zip_with formulation's null

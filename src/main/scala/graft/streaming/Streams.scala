@@ -17,14 +17,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * static broadcast polygon index, a stream-static join with no state. */
 object Streams {
 
-  /** Watermarked sliding-window event counts (late data dropped after
-    * `watermark`). */
-  def windowedCounts(events: DataFrame, watermark: String = "10 minutes",
-                     window_ : String = "5 minutes", slide: String = "5 minutes"): DataFrame =
+  /** Watermarked event counts per 5-minute window (slide = width; late
+    * data dropped after a 10-minute watermark). */
+  def windowedCounts(events: DataFrame): DataFrame =
     events
       .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "5 minutes", "5 minutes"), col("event_type"))
       // sum through DECIMAL: exact and order-independent, so the streaming
       // result is bit-identical to the batch plan (and to a SQL oracle)
       // regardless of micro-batch/partition arrival order
@@ -37,26 +36,24 @@ object Streams {
     * `watermark` after the first occurrence's event time may re-emit (the
     * documented trade-off of watermark-scoped dedup state at 10^12 rows —
     * unbounded-state dropDuplicates is the non-scalable alternative). */
-  def dedupStream(docs: DataFrame, watermark: String = "10 minutes",
-                  textCol: String = "text"): DataFrame =
+  def dedupStream(docs: DataFrame, watermark: String = "10 minutes"): DataFrame =
     docs
-      .withColumn("content_hash", md5(col(textCol)))
+      .withColumn("content_hash", md5(col("text")))
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("content_hash")
 
   /** Stream-STREAM inner join with an event-time range condition: each left
     * row pairs with same-key right rows whose event time lies in
-    * [l_ts - boundSec, l_ts]. BOTH sides are watermarked and the join
+    * [l_ts - 3600 s, l_ts]. BOTH sides are watermarked and the join
     * condition bounds the time skew, so each side's join state expires once
-    * the other side's watermark passes ts + bound — the state-bounded shape
+    * the other side's watermark passes ts + 3600 s — the state-bounded shape
     * stream-stream joins require at 10^12 rows (an unconstrained join would
     * buffer both streams forever). Inner-join matches emit as rows arrive
     * (no watermark wait), so the result set equals the batch interval join
     * under any micro-batch slicing. */
   def intervalJoinStream(left: DataFrame, right: DataFrame,
-                         watermark: String = "2 hours",
-                         boundSec: Long = 3600): DataFrame = {
+                         watermark: String = "2 hours"): DataFrame = {
     val l = left.select(col("user_id"), col("event_id").as("l_event"),
         col("ts").cast("timestamp").as("l_ts"))
       .withWatermark("l_ts", watermark)
@@ -67,7 +64,7 @@ object Streams {
         col("user_id") === col("r_user") &&
           col("r_ts") <= col("l_ts") &&
           col("r_ts") >= col("l_ts") - org.apache.spark.sql.functions.expr(
-            s"INTERVAL $boundSec SECONDS"))
+            "INTERVAL 3600 SECONDS"))
       .select(col("user_id"), col("l_event"), col("r_event"),
         col("l_ts"), col("r_ts"))
   }

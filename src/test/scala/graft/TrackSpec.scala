@@ -364,6 +364,30 @@ class TrackSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("manifest out of sync"))
   }
 
+  test("Layout file boxes skip NaN and null coordinates") {
+    import spark.implicits._
+    val (south, west, north, east) = (39.0, -75.0, 41.0, -73.0)
+    // one file: 100 in-box points next to one NaN-latitude row
+    val dir = TestTmp.dir("layout_nan")
+    val pts = ((0 until 100).map(i => (s"p$i", Option(40.0 + i * 0.001), -74.0)) :+
+      (("nan", Option(Double.NaN), -74.0))).toDF("pid", "lat", "lon")
+    Layout.writeZOrdered(pts, dir, numFiles = 1)
+    val plain = pts.where(col("lat") >= south && col("lat") <= north &&
+      col("lon") >= west && col("lon") <= east).select("pid").as[String].collect().toSet
+    assert(plain.size == 100)
+    val got = Layout.readBBox(spark, dir, south, west, north, east)
+      .select("pid").as[String].collect().toSet
+    assert(got == plain)
+    assert(Layout.pruneStats(spark, dir, south, west, north, east) == ((1L, 1L)))
+    // a file holding only null/NaN latitudes gets an empty box no query hits
+    val blankDir = TestTmp.dir("layout_blank")
+    val blank = Seq(("null", Option.empty[Double], -74.0), ("nan", Option(Double.NaN), -74.0))
+      .toDF("pid", "lat", "lon")
+    Layout.writeZOrdered(blank, blankDir, numFiles = 1)
+    assert(Layout.pruneStats(spark, blankDir, -90.0, -180.0, 90.0, 180.0) == ((0L, 1L)))
+    assert(Layout.readBBox(spark, blankDir, -90.0, -180.0, 90.0, 180.0).count() == 0L)
+  }
+
   test("Layout.pruneStats runs no Spark job: the manifest is a driver-side log read") {
     val dir = TestTmp.dir("layout_jobs")
     Layout.writeZOrdered(ptsDf, dir, bits = 16, numFiles = 8)
