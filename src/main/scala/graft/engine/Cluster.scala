@@ -126,27 +126,28 @@ object Cluster {
     *  - noise: everything else; cluster is NULL.
     *
     * Scale shape: the eps-graph comes from [[neighborPairs]] (shuffle
-    * equi-join, nothing broadcast), is materialized ONCE via a reliable
-    * checkpoint (three consumers — degree count, core-core edges, border
-    * assignment — would otherwise each recompute the join), and the core
-    * components run through [[Dedup.connectedComponents]] (min-label +
-    * pointer doubling: O(log diameter) rounds, per-round shuffles touch
-    * only the label table). Worst case remains inherently quadratic in a
-    * ball of radius eps — the metric's own property (a corpus with 10⁶
-    * coincident points has 10¹² eps-pairs no matter the algorithm); callers
-    * bound it by choosing eps against their density, not by a silent cap. */
+    * equi-join, nothing broadcast), and the core components run through
+    * [[Dedup.connectedComponents]] (min-label + pointer doubling: O(log
+    * diameter) rounds, per-round shuffles touch only the label table).
+    * Worst case remains inherently quadratic in a ball of radius eps — the
+    * metric's own property (a corpus with 10⁶ coincident points has 10¹²
+    * eps-pairs no matter the algorithm); callers bound it by choosing eps
+    * against their density, not by a silent cap.
+    *
+    * The pair graph and the per-point flag table each feed several
+    * consumers, so each is [[pinned]] for the call: the connected-components
+    * phase's own actions, inside this call, fill both caches, and the
+    * returned lazy frame reads them. Nothing is written to disk and no
+    * checkpoint dir is needed; Spark's ContextCleaner releases the blocks
+    * once the caller has dropped the result and it is garbage-collected. */
   def dbscan(points: DataFrame, epsM: Double, minPts: Int): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1: $minPts")
-    val spark = points.sparkSession
-    Durable.ensureCheckpointDir(spark)
-    // the upstream point pipeline feeds two eager builds — the pair join
+    // the upstream point pipeline feeds both pinned frames — the pair join
     // (whose a/b sides already share one exchange) and the flag table's
-    // base — so without this it is evaluated twice during the build phase.
-    // Persist for the duration of the two Durable builds (cache filled by
-    // the first build, read by the second, released before returning;
-    // lineage is NOT truncated, so a lost cache partition recomputes from
-    // the caller's input as before). An input the
-    // caller already cached is used as-is and stays cached.
+    // base — so without this it is evaluated twice while they fill.
+    // Persisted for the call, which fills both (lineage is NOT truncated,
+    // so a lost cache partition recomputes from the caller's input). An
+    // input the caller already cached is used as-is and stays cached.
     val owned = points.storageLevel == StorageLevel.NONE
     if (owned) points.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -154,21 +155,29 @@ object Cluster {
     } finally if (owned) points.unpersist()
   }
 
+  /** `df` persisted at the RDD level (MEMORY_AND_DISK) and wrapped back
+    * into a DataFrame, so that its consumers share one computation. The
+    * first action over it fills the cache and later plans read the blocks.
+    * Lineage is NOT truncated: a lost block recomputes from `df`'s plan.
+    * Nothing is registered in the CacheManager; Spark's ContextCleaner
+    * unpersists the blocks once the RDD is garbage-collected, i.e. once
+    * no live frame references it. */
+  private def pinned(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      df.rdd.persist(StorageLevel.MEMORY_AND_DISK), df.schema)
+
   private def dbscanBuilt(points: DataFrame, epsM: Double, minPts: Int): DataFrame = {
-    val prs = Durable.durable(neighborPairs(points, epsM))
+    val prs = pinned(neighborPairs(points, epsM))
     val base = points
       .where(col("lat").isNotNull && col("lon").isNotNull)
       .select(col("pid"))
     val degrees = prs.groupBy(col("pid_a").as("pid")).agg(count(lit(1)).as("nn"))
-    // flagged is the second fact-sized frame with MANY consumers (core ids,
-    // core-edge semi-joins, border candidates, the final outer join, plus
-    // the CC regime's node set) — materialize it ONCE like prs. Before this,
-    // the final plan re-evaluated the upstream point pipeline + the degree
-    // aggregation FOUR times (r06 before-plan: 4 identical parse subtrees,
-    // 4 identical degree exchanges); one bounded snapshot (one row per
-    // point, smaller than prs in any regime where DBSCAN is meaningful)
-    // replaces all of them with parquet reads.
-    val flagged = Durable.durable(
+    // flagged has MANY consumers (core ids, core-edge semi-joins, border
+    // candidates, the final outer join, plus the CC regime's node set);
+    // unpinned, the final plan re-evaluates the upstream point pipeline and
+    // the degree aggregation FOUR times (r06 before-plan: 4 identical parse
+    // subtrees, 4 identical degree exchanges)
+    val flagged = pinned(
       base.join(degrees, Seq("pid"), "left_outer")
         .select(col("pid"),
           (coalesce(col("nn"), lit(0L)) + lit(1L) >= minPts).as("is_core")))

@@ -283,14 +283,15 @@ object Dedup {
     *
     * Scale shape: each round shuffles only the label table (one row per
     * node) — once against the cached edge list, once for the shortcut
-    * lookup; labels are snapshotted per round through [[Durable.Rounds]]
-    * (reliable parquet under the checkpoint dir — executor-loss-safe,
-    * lineage-bounded — with the SUPERSEDED round deleted as soon as the
-    * next one commits, so a long-lived session holds at most two rounds
-    * per call instead of accumulating all of them), and convergence costs
-    * one count action per round (the label table is the size of the node
-    * set, so unlike Knn's query-sized rounds it cannot live on the
-    * driver). */
+    * lookup. In the distributed regime the labels are checkpointed per
+    * round through [[Durable.Rounds]] (reliable files under the checkpoint
+    * dir — executor-loss-safe, lineage-bounded), and the SUPERSEDED round is
+    * deleted as soon as the next one commits, so a call holds at most two
+    * rounds on disk and leaves one, the final round. Convergence costs one
+    * count action per round (the label table is the size of the node set,
+    * so unlike Knn's query-sized rounds it cannot live on the driver). That
+    * regime needs spark.checkpoint.dir on shared storage on a cluster; the
+    * driver regime writes nothing. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIter: Int = 30): DataFrame =
     connectedComponents(nodes, pairs, maxIter, validateNodes = true, DriverEdgeCap)
@@ -383,9 +384,8 @@ object Dedup {
       }
       require(changed == 0,
         s"connectedComponents did not converge within $maxIter rounds")
-      // the returned frame reads the FINAL round's parquet; those files are
-      // removed at JVM exit (Durable.Rounds shutdown hook), or earlier if
-      // the caller materializes the result and closes the session's scratch
+      // the returned frame reads the FINAL round's checkpoint files; the
+      // Durable shutdown hook removes them at JVM exit
       labels.select(col("id").as("doc_id"), col("rep"))
     } finally {
       roundEdges.foreach(_.unpersist())

@@ -1,11 +1,14 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Reliable-checkpoint plumbing shared by the iterative operators whose
-  * state is the size of the fact table (Dedup.connectedComponents,
-  * Cluster.dbscan; Knn's query-sized round state stays on the driver
-  * instead): per-round state is RELIABLY checkpointed — written to the checkpoint dir, readable after executor
+/** Round checkpointer for [[Dedup.connectedComponents]]' distributed rounds,
+  * the one engine operator whose lineage grows with its input (one join
+  * chain per round) and whose round state is the size of the node set, so it
+  * can neither stay lazy nor live on the driver. Each round is RELIABLY
+  * checkpointed — written to the checkpoint dir, readable after executor
   * loss — never localCheckpoint'ed (which stores blocks on executors and
   * truncates lineage, so one lost executor after round r kills the job with
   * no way to recompute).
@@ -14,79 +17,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (spark.checkpoint.dir on HDFS/object storage) — a node-local path would
   * strand partitions on the writer. [[ensureCheckpointDir]] fails fast on a
   * non-local master without one, and auto-provisions a process-private tmp
-  * dir (removed at JVM exit) for local[*] masters, where one filesystem
-  * serves all "executors". */
-object Durable {
+  * dir for local[*] masters, where one filesystem serves all "executors".
+  * One JVM shutdown hook runs [[shutdown]]. */
+private[engine] object Durable {
 
-  // one shutdown hook per JVM for the auto-provisioned checkpoint dir
-  private var cleanupRegistered = false
+  private val openRounds =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Rounds]()
+  // the dir ensureCheckpointDir provisioned in this JVM, if any
+  @volatile private var provisioned: Option[java.io.File] = None
+
+  java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => shutdown()))
 
   def ensureCheckpointDir(spark: SparkSession): Unit = {
     if (spark.sparkContext.getCheckpointDir.nonEmpty) return
     require(spark.sparkContext.master.startsWith("local"),
       "iterative operators on a cluster need spark.checkpoint.dir on SHARED " +
         "storage (a node-local default would strand checkpoint partitions)")
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt_" +
-      java.lang.ProcessHandle.current().pid()
-    spark.sparkContext.setCheckpointDir(ckpt)
-    // Spark never deletes reliable checkpoint files on its own
-    // (cleanCheckpoints defaults to false); since WE provisioned a
-    // process-private local dir, remove it when this JVM exits — its
-    // contents are only meaningful within this JVM's lifetime anyway
-    Durable.synchronized {
-      if (!cleanupRegistered) {
-        cleanupRegistered = true
-        java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-          catch { case _: Throwable => () }
-        }))
-      }
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      "graft_ckpt_" + java.lang.ProcessHandle.current().pid())
+    spark.sparkContext.setCheckpointDir(dir.getPath)
+    provisioned = Some(dir)
+  }
+
+  /** The shutdown hook's body: close every open [[Rounds]], THEN delete the
+    * provisioned dir. Spark never deletes reliable checkpoint files on its
+    * own (cleanCheckpoints defaults to false), and the provisioned dir's
+    * contents mean nothing outside this JVM. The two steps run in order:
+    * JVM hooks run concurrently, and a tree walk whose files another hook
+    * deletes under it throws. A failed delete is printed to stderr. */
+  def shutdown(): Unit = {
+    openRounds.forEach(_.close())
+    provisioned.foreach { dir =>
+      try org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      catch { case e: java.io.IOException =>
+        System.err.println(s"graft: could not delete checkpoint dir $dir: $e") }
     }
   }
 
-  /** persist-then-checkpoint: the eager checkpoint job populates the cache
-    * while writing, so the plan is computed ONCE (a bare checkpoint(true)
-    * would recompute the whole plan for the write). */
-  def durable(df: DataFrame): DataFrame = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = cached.checkpoint(true)
-    cached.unpersist()
-    out
-  }
-
-  // one shutdown hook for ALL Rounds instances (a per-instance hook would
-  // accumulate threads in a long-lived session — the leak being fixed)
-  private val openRounds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Rounds]()
-  private var roundsHookRegistered = false
-  private def registerRounds(r: Rounds): Unit = {
-    openRounds.add(r)
-    Durable.synchronized {
-      if (!roundsHookRegistered) {
-        roundsHookRegistered = true
-        java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          val it = openRounds.iterator()
-          while (it.hasNext) it.next().close()
-        }))
-      }
-    }
-  }
-
-  /** Per-call ROUND checkpointer for iterative operators, adding the cleanup
-    * discipline RDD checkpoints lack (Spark never deletes reliable
-    * checkpoint files — cleanCheckpoints defaults to false, so a long-lived
-    * session running many iterative calls accumulates every round of every
-    * call): [[commit]] is exactly [[durable]] (persist + eager reliable
-    * checkpoint — the data also lands in the block-manager cache, so
-    * re-reads within the round cost nothing, which is why this beats a
-    * parquet write/read cycle ~2x per round at small scale), but the
-    * checkpoint DIRECTORY of each round is captured from the returned
-    * plan's LogicalRDD, so [[dropPrevious]] can delete the superseded
-    * round as soon as the caller has committed the next one. At most TWO
-    * rounds are ever on disk per call; the FINAL round's files back the
-    * returned lazy DataFrame, so they live until [[close]] removes them at
-    * JVM exit (or the caller, having materialized the result, closes
-    * earlier). */
+  /** Per-call ROUND checkpointer, adding the cleanup discipline RDD
+    * checkpoints lack (a long-lived session running many iterative calls
+    * would otherwise accumulate every round of every call): [[commit]]
+    * writes a round and captures its checkpoint DIRECTORY from the returned
+    * plan's LogicalRDD, so [[dropPrevious]] can delete the superseded round
+    * as soon as the caller has committed the next one. At most TWO rounds
+    * are ever on disk per call; the FINAL round's files back the returned
+    * lazy DataFrame, so they live until [[close]] removes them at JVM exit
+    * (or the caller, having materialized the result, closes earlier). */
   final class Rounds(spark: SparkSession) {
     ensureCheckpointDir(spark)
     private val fs = new org.apache.hadoop.fs.Path(
@@ -94,21 +70,28 @@ object Durable {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     private var prevFile: Option[String] = None
     private var curFile: Option[String] = None
-    registerRounds(this)
+    openRounds.add(this)
 
     private def delete(p: Option[String]): Unit = p.foreach { path =>
       try fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      catch { case _: Throwable => () }
+      catch { case e: java.io.IOException =>
+        System.err.println(s"graft: could not delete checkpoint $path: $e") }
     }
 
-    /** Checkpoint `df` as this call's next round (reliable + cached) and
-      * track its on-disk file set for later cleanup. */
+    /** Checkpoint `df` as this call's next round and track its file set.
+      * persist-then-checkpoint: the eager checkpoint job fills the cache
+      * while writing, so the plan is computed ONCE (a bare checkpoint(true)
+      * would recompute it for the write); re-reads within the round then
+      * cost nothing, which beats a parquet write/read cycle ~2x per round at
+      * small scale. */
     def commit(df: DataFrame): DataFrame = {
-      val out = durable(df)
+      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      val out = cached.checkpoint(true)
+      cached.unpersist()
       val file = out.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.getCheckpointFile
-        case _ => None // untracked: cleanup degrades to the pre-r5 behavior
+        case l: LogicalRDD if l.rdd.getCheckpointFile.nonEmpty => l.rdd.getCheckpointFile
+        case p => throw new IllegalStateException(
+          s"checkpoint left no checkpoint file to track: ${p.nodeName}")
       }
       prevFile = curFile
       curFile = file

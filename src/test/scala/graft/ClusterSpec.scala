@@ -165,4 +165,36 @@ class ClusterSpec extends AnyFunSuite {
       assert(df.storageLevel == level, "dbscan dropped or changed the caller's cache")
     } finally df.unpersist()
   }
+
+  test("dbscan on an uncached input writes no checkpoint and registers no cache") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // the checkpoint dir (None when nothing set one) and its entries
+    def checkpoints(): Option[Set[String]] = sc.getCheckpointDir.map { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(sc.hadoopConfiguration)
+      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
+    }
+    // frames earlier suites left cached are no concern of this one
+    spark.catalog.clearCache()
+    val ckpt0 = checkpoints()
+    val got = Cluster.dbscan(mixedPoints.toDF("pid", "lat", "lon"), epsM = 3000.0, minPts = 4)
+    assert(got.collect().length == mixedPoints.length)
+    assert(checkpoints() == ckpt0, "dbscan touched the checkpoint dir")
+    assert(spark.sharedState.cacheManager.isEmpty, "dbscan left a CacheManager entry")
+  }
+
+  test("dbscan on the mixed corpus stays under its job ceiling") {
+    import spark.implicits._
+    val df = mixedPoints.toDF("pid", "lat", "lon")
+    val jobs = JobTrace.jobs(spark) {
+      Cluster.dbscan(df, epsM = 3000.0, minPts = 4).collect()
+    }
+    assert(!jobs.exists(_.contains("checkpoint")), jobs.mkString("\n"))
+    // 32-34 measured: the pinned pair and flag frames' AQE stages, the
+    // connected-components count and collect, and the result's collect with
+    // its AQE stages (the same calls ran 31 with reliable snapshots, 10 of
+    // them checkpoint writes; with no snapshot at all q90 ran ~3.7x its jobs)
+    assert(jobs.length <= 36, s"dbscan ran ${jobs.length} jobs:\n${jobs.mkString("\n")}")
+  }
 }

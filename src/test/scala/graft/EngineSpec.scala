@@ -1,6 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -349,38 +348,16 @@ class EngineSpec extends AnyFunSuite {
     val (pts, qs) = knnFixture
     val qsDf = qs.toDF("qid", "lat", "lon")
     val ptsDf = pts.toDF("pid", "lat", "lon")
-    val sc = spark.sparkContext
-    // (job group, stage names) per job start
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""), e.stageInfos.map(_.name).mkString(";")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("knn", "knn under test")
+    val knnStages = JobTrace.jobs(spark) {
       assert(Knn.knn(spark, qsDf, ptsDf, k = 5).collect().length == qs.length * 5)
-      // the listener bus delivers events in order, so once the marker job's
-      // start arrives every job the knn call ran has been seen
-      sc.setJobGroup("marker", "listener flush")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!jobs.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.asScala.exists(_._1 == "marker"), "marker job never reached the listener")
-      val knnStages = jobs.asScala.toSeq.filter(_._1 == "knn").map(_._2)
-      assert(!knnStages.exists(n => n.contains("checkpoint") || n.contains("isEmpty")),
-        knnStages.mkString("\n"))
-      // two rounds on this fixture: the cached points' build, then per round
-      // the broadcast of the query disks, the window's shuffle map stage and
-      // the collect (round state in reliable checkpoints ran 25 jobs)
-      assert(knnStages.length <= 7,
-        s"knn ran ${knnStages.length} jobs:\n${knnStages.mkString("\n")}")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(!knnStages.exists(n => n.contains("checkpoint") || n.contains("isEmpty")),
+      knnStages.mkString("\n"))
+    // two rounds on this fixture: the cached points' build, then per round
+    // the broadcast of the query disks, the window's shuffle map stage and
+    // the collect (round state in reliable checkpoints ran 25 jobs)
+    assert(knnStages.length <= 7,
+      s"knn ran ${knnStages.length} jobs:\n${knnStages.mkString("\n")}")
   }
 
   test("prefix range-join equals the multi-resolution explode join") {

@@ -391,30 +391,10 @@ class TrackSpec extends AnyFunSuite {
   test("Layout.pruneStats runs no Spark job: the manifest is a driver-side log read") {
     val dir = TestTmp.dir("layout_jobs")
     Layout.writeZOrdered(ptsDf, dir, bits = 16, numFiles = 8)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("prune", "pruneStats under test")
+    val pruneJobs = JobTrace.jobs(spark) {
       val (sel, tot) = Layout.pruneStats(spark, dir, 39.5, -75.5, 42.0, -72.5)
       assert(tot == 8L && sel < tot, s"pruneStats gave ($sel, $tot)")
-      // the listener bus delivers events in order, so once the marker job's
-      // start arrives every job pruneStats could have run has been seen
-      sc.setJobGroup("marker", "listener flush")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains("marker"), "marker job never reached the listener")
-      val pruneJobs = jobs.toArray.count(_ == "prune")
-      assert(pruneJobs == 0, s"pruneStats ran $pruneJobs Spark jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(pruneJobs.isEmpty, s"pruneStats ran ${pruneJobs.length} Spark jobs")
   }
 }
