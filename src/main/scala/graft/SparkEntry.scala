@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.engine._
 import graft.expr.GraftFunctions
@@ -47,57 +48,70 @@ object SparkEntry {
     spark
   }
 
-  /** Per-process scratch dir for the streaming driver queries: deterministic
+  /** An EMPTY per-process scratch dir for the gates that write: deterministic
     * per (tag, scale) WITHIN a process so repeated runs in one JVM reuse and
     * wipe a single dir (bounded /tmp growth), and scoped by PID so two
     * concurrent JVMs (e.g. Bench and Verify at the same scale) can never
     * delete or overwrite each other's LIVE streaming sink/checkpoint/source.
-    * A shutdown hook removes everything this process registered. */
+    * A shutdown hook removes everything this process registered, and each
+    * call first sweeps this (tag, scale)'s dirs of dead JVMs with
+    * [[Scratch.sweepDead]], the sweep Durable's checkpoint dir shares. */
   private val scratchRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val scratchHook: Unit =
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchRoots.forEach { p =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-        catch { case _: Throwable => () }
-      }
-    }))
+    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchRoots.forEach(p => Scratch.delete(new java.io.File(p)))))
   private def scratchDir(tag: String, dir: String): String = {
     scratchHook
     val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
     val stem = s"graft_${tag}_" + Integer.toHexString(dir.hashCode)
-    val pid = java.lang.ProcessHandle.current().pid()
-    // self-heal: a SIGKILLed JVM never runs its shutdown hook, so sweep
-    // siblings of this (tag, scale) whose owning process is gone (plus
-    // pre-PID-layout dirs with no suffix) — restores the bounded-/tmp
-    // guarantee without ever touching a LIVE process's scratch
-    val stale = Option(tmpRoot.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(stem) && f.getName != s"${stem}_$pid")
-      .filter { f =>
-        f.getName.substring(stem.length) match {
-          case "" => true // old layout, no owner tracking
-          case s if s.startsWith("_") =>
-            s.drop(1).toLongOption match {
-              case Some(p) => java.lang.ProcessHandle.of(p)
-                .map[java.lang.Boolean](h => !h.isAlive).orElse(true)
-              case None => false
-            }
-          case _ => false
-        }
-      }
-    stale.foreach { f =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(f)
-      catch { case _: Throwable => () }
-    }
-    val p = s"${tmpRoot.getPath}/${stem}_$pid"
-    scratchRoots.add(p)
-    p
+    Scratch.sweepDead(tmpRoot, stem)
+    val d = new java.io.File(tmpRoot, s"${stem}_" + java.lang.ProcessHandle.current().pid())
+    scratchRoots.add(d.getPath)
+    org.apache.commons.io.FileUtils.deleteDirectory(d)
+    require(d.mkdirs(), s"could not create scratch dir $d")
+    d.getPath
+  }
+
+  /** Stage `parts` as one mtime-ordered parquet file each (b0, b1, ...) in
+    * an empty scratch dir, so a file stream under maxFilesPerTrigger=1
+    * reads them as that many micro-batches in order. Returns the dir and
+    * the staged schema. Restaged on EVERY call: a stale staged copy after
+    * the source is regenerated would silently desync the stream from the
+    * oracle. */
+  private def stageBatches(tag: String, dir: String,
+                           parts: Seq[DataFrame]): (String, StructType) = {
+    val src = new java.io.File(scratchDir(tag, dir))
+    val now = System.currentTimeMillis()
+    for ((part, i) <- parts.zipWithIndex)
+      stageSingleParquet(part, src, s"b$i", now - (parts.size - 1 - i) * 600000L)
+    (src.getPath, parts.head.sparkSession.read.parquet(s"${src.getPath}/b0.parquet").schema)
+  }
+
+  /** Run `stream` to completion under AvailableNow into an append-mode
+    * parquet sink in the (tag, scale) scratch dir and read the sink back.
+    * The read takes the stream's schema, nullable as parquet inference
+    * would make it: a stream that runs no micro-batch writes no data file,
+    * and a bare `spark.read.parquet` of its sink fails on schema inference
+    * instead of returning an empty frame. */
+  private[graft] def drain(stream: DataFrame, tag: String, dir: String): DataFrame = {
+    val out = scratchDir(tag, dir)
+    stream.writeStream
+      .format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", s"$out/ckpt")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    stream.sparkSession.read
+      .schema(StructType(stream.schema.fields.map(_.copy(nullable = true))))
+      .parquet(s"$out/data")
   }
 
   /** Write `df` as a SINGLE parquet file `destDir/name.parquet` with the
     * given mtime. FileStreamSource orders candidate files by mtime, so the
-    * staged mtimes define micro-batch order under maxFilesPerTrigger=1 —
-    * shared by every streaming gate that needs deterministic batches. */
+    * staged mtimes define micro-batch order under maxFilesPerTrigger=1. */
   private def stageSingleParquet(df: DataFrame, destDir: java.io.File,
                                  name: String, mtime: Long): Unit = {
     val tmp = new java.io.File(destDir, s"_tmp_$name")
@@ -119,6 +133,20 @@ object SparkEntry {
     spark.createDataFrame(
       Corpus.Hotspots.zipWithIndex.map { case ((la, lo), i) => (f"hub-$i%02d", la, lo) }.toSeq)
       .toDF("qid", "lat", "lon")
+
+  /** The ANN gates' shared frames: `search` gets the (vec_id, embedding)
+    * corpus and the eight q<vec_id> queries (q_emb) of the embeddings
+    * table, and its (qid, vec_id, sim, rank) hits come back as the oracle
+    * compares them: sim rounded to 6 places, ordered by (qid, rank). */
+  private def annGate(spark: SparkSession, dir: String)
+                     (search: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = t(dir, "embeddings")(spark)
+    val emb = col("embedding").cast("array<double>")
+    search(e.select(col("vec_id"), emb.as("embedding")),
+      e.where(col("vec_id") < 8).select(concat(lit("q"), col("vec_id")).as("qid"), emb.as("q_emb")))
+      .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
+      .orderBy(col("qid"), col("rank"))
+  }
 
   /** Derived deterministic points from customer keys (SQL-reproducible):
     * lat in [-80, 83.9], lon in [-180, 179.9]. */
@@ -457,18 +485,8 @@ object SparkEntry {
       TextOps.profile(t(dir, "documents"))
         .orderBy(col("doc_id"))
     }),
-    "q43_ann_topk" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      Ann.bruteForceTopK(
-        e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")),
-        queries, k = 10)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q43_ann_topk" -> ((spark, dir) =>
+      annGate(prep(spark), dir)(Ann.bruteForceTopK(_, _, k = 10))),
     "q47_vincenty" -> ((spark, dir) => {
       val s = prep(spark)
       customerPoints(s, dir)
@@ -693,20 +711,9 @@ object SparkEntry {
       val nDocs = corpusDocs(dir)
       val (docsPath, _) = Corpus.ensure(s, nDocs)
       val sch = s.read.parquet(docsPath).schema
-      val outBase = scratchDir("q57", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = Tiler.assign(
+      drain(Tiler.assign(
           SpatialJoin.extractPoints(s.readStream.schema(sch).parquet(docsPath)), 7)
-        .select(col("doc_id"), col("offset"), col("tile_id"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outBase/data")
-        .option("checkpointLocation", s"$outBase/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$outBase/data")
+        .select(col("doc_id"), col("offset"), col("tile_id")), "q57", dir)
         .orderBy(col("doc_id"), col("offset"), col("tile_id"))
     }),
     // q58: n-gram Jaccard for explicit candidate pairs (the similarity
@@ -724,21 +731,11 @@ object SparkEntry {
     // Trigger.AvailableNow (complete mode, memory sink) — must equal the
     // batch aggregation exactly (the DECIMAL-routed sum is order-independent).
     "q59_stream_window" -> ((spark, dir) => {
-      val s = prep(spark)
-      implicit val ss: SparkSession = s
-      // readStream needs a DIRECTORY; stage the single events.parquet file.
-      // Copied UNCONDITIONALLY: a stale staged copy after the source is
-      // regenerated would silently desync the stream from the oracle.
-      val srcDir = new java.io.File(scratchDir("q59src", dir))
-      srcDir.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        java.nio.file.Paths.get(srcDir.getPath, "events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val sch = s.read.parquet(srcDir.getPath).schema
+      implicit val s: SparkSession = prep(spark)
+      // readStream needs a DIRECTORY; q60 stages the same copy
+      val (src, sch) = stageBatches("events", dir, Seq(t(dir, "events")))
       val qname = "graft_q59_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.Streams.windowedCounts(
-          s.readStream.schema(sch).parquet(srcDir.getPath))
+      val q = graft.streaming.Streams.windowedCounts(s.readStream.schema(sch).parquet(src))
         .select(unix_micros(col("window.start")).as("ws_us"),
           unix_micros(col("window.end")).as("we_us"),
           col("event_type"), col("n"), col("total"))
@@ -746,23 +743,13 @@ object SparkEntry {
         .format("memory")
         .queryName(qname)
         .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       s.table(qname).orderBy(col("ws_us"), col("event_type"))
     }),
-    "q44_ann_lsh" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      Ann.lshTopK(
-        e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")),
-        queries, k = 10, dims = 64)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q44_ann_lsh" -> ((spark, dir) =>
+      annGate(prep(spark), dir)(Ann.lshTopK(_, _, k = 10, dims = 64))),
     // q60: custom keyed streaming state (flatMapGroupsWithState sessionize)
     // under Trigger.AvailableNow — the last streaming shape missing from the
     // driver gate. The per-user counters it emits are MONOTONE, so max() per
@@ -772,29 +759,20 @@ object SparkEntry {
     // guaranteed here because the single staged file is one AvailableNow
     // batch. The oracle is the batch gap-rule SQL (same as q18).
     "q60_stream_sessionize" -> ((spark, dir) => {
-      val s = prep(spark)
-      implicit val ss: SparkSession = s
-      val srcDir = new java.io.File(scratchDir("q60src", dir))
-      srcDir.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        java.nio.file.Paths.get(srcDir.getPath, "events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val sch = s.read.parquet(srcDir.getPath).schema
+      implicit val s: SparkSession = prep(spark)
+      val (src, sch) = stageBatches("events", dir, Seq(t(dir, "events")))
       val outBase = scratchDir("q60", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
       // update-mode output can't go to a parquet sink directly; foreachBatch
       // appends each batch's updates and the readback reduces to the final
       // (= max) counter per user
-      val q = graft.streaming.Streams.sessionize(s,
-          s.readStream.schema(sch).parquet(srcDir.getPath))
+      val q = graft.streaming.Streams.sessionize(s, s.readStream.schema(sch).parquet(src))
         .writeStream
         .outputMode("update")
         .option("checkpointLocation", s"$outBase/ckpt")
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("append").parquet(s"$outBase/data")
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       s.read.parquet(s"$outBase/data")
@@ -804,18 +782,8 @@ object SparkEntry {
     }),
     // q61: IVF-flat ANN (coarse quantizer + nprobe list search) — the
     // second scale path for similarity search next to q44's LSH buckets.
-    "q61_ann_ivf" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      Ann.ivfTopK(
-        e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")),
-        queries, k = 10, nCentroids = 16, nprobe = 4)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q61_ann_ivf" -> ((spark, dir) =>
+      annGate(prep(spark), dir)(Ann.ivfTopK(_, _, k = 10, nCentroids = 16, nprobe = 4))),
     // q62: the cell/geohash/tile scalar surface that until now was
     // ScalaTest-gated only — parent/long-id/ring/neighbors/auto-precision/
     // cover-box/tile-bounds/box-center, every output mirrored exactly in
@@ -1017,24 +985,13 @@ object SparkEntry {
       // reuse the batch index builder: covering + levels probe computed once
       val index = SpatialJoin.buildIndex(polys, cache = true)
       val pts = SpatialJoin.extractPoints(s.readStream.schema(sch).parquet(docsPath))
-      val outBase = scratchDir("q69", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = SpatialJoin.joinWithIndex(pts, index)
-        .select(col("doc_id"), col("offset"), col("poly_id"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outBase/data")
-        .option("checkpointLocation", s"$outBase/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val out = drain(SpatialJoin.joinWithIndex(pts, index)
+        .select(col("doc_id"), col("offset"), col("poly_id")), "q69", dir)
       // the sink holds the results now; release the cached covering (the
-      // readback below no longer references it)
+      // readback no longer references it)
       index.cells.unpersist()
       index.rings.unpersist()
-      s.read.parquet(s"$outBase/data")
-        .orderBy(col("doc_id"), col("offset"), col("poly_id"))
+      out.orderBy(col("doc_id"), col("offset"), col("poly_id"))
     }),
     // q71: REAL media decode — media refs render to valid binary PPM (P6)
     // payloads and decodePpm genuinely parses them (comment-tolerant header
@@ -1092,13 +1049,8 @@ object SparkEntry {
     "q72_stream_dedup" -> ((spark, dir) => {
       val s = prep(spark)
       implicit val ss: SparkSession = s
-      val srcDir = new java.io.File(scratchDir("q72src", dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(srcDir)
-      srcDir.mkdirs()
       val baseUs = 1704067200000000L // 2024-01-01 00:00:00 UTC
       val docs = t(dir, "documents")
-      def stage(df: DataFrame, name: String, mtime: Long): Unit =
-        stageSingleParquet(df, srcDir, name, mtime)
       // one row per DISTINCT text (min doc_id): within batch 0 every content
       // hash must be unique or the intra-batch survivor is arbitrary — the
       // fabricated sf1 replicates documents 10x with offset ids but
@@ -1114,26 +1066,13 @@ object SparkEntry {
         timestamp_micros(tsUs).as("ts"))
       val echoes = uniq.select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text"),
         timestamp_micros(tsUs + lit(60000000L)).as("ts"))
-      val now = System.currentTimeMillis()
-      stage(originals, "b0", now - 600000L)
-      stage(echoes, "b1", now)
-      val sch = s.read.parquet(s"${srcDir.getPath}/b0.parquet").schema
-      val outBase = scratchDir("q72", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = graft.streaming.Streams.dedupStream(
-          s.readStream.schema(sch).option("maxFilesPerTrigger", 1)
-            .parquet(srcDir.getPath),
+      val (src, sch) = stageBatches("q72src", dir, Seq(originals, echoes))
+      drain(graft.streaming.Streams.dedupStream(
+          s.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
           watermark = "1 hour")
-        .select(col("doc_id"), col("content_hash"), unix_micros(col("ts")).as("ts_us"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outBase/data")
-        .option("checkpointLocation", s"$outBase/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$outBase/data").orderBy(col("doc_id"))
+        .select(col("doc_id"), col("content_hash"), unix_micros(col("ts")).as("ts_us")),
+        "q72", dir)
+        .orderBy(col("doc_id"))
     }),
     // q73: containment-only spatial join — doc-level semi/anti split in one
     // gated row via a status column. Uses containmentSplit (ONE spatial
@@ -1196,61 +1135,37 @@ object SparkEntry {
     // for the trained-centroid machinery. Partial-probe recall is gated by
     // the clustered-corpus ScalaTest (quality is data-dependent, so it has
     // no SQL oracle).
-    "q75_ann_ivf_trained" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val corpus = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      val cents = Ann.kmeansFit(corpus, k = 16, iters = 5, sampleCap = 2048)
-      val idxPath = scratchDir("q75idx", dir)
-      Ann.writeIvfIndex(corpus, cents, idxPath)
-      Ann.searchIvfIndex(s, idxPath, queries, cents, k = 10, nprobe = 16)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q75_ann_ivf_trained" -> ((spark, dir) =>
+      annGate(prep(spark), dir) { (corpus, queries) =>
+        val cents = Ann.kmeansFit(corpus, k = 16, iters = 5, sampleCap = 2048)
+        val idxPath = scratchDir("q75idx", dir)
+        Ann.writeIvfIndex(corpus, cents, idxPath)
+        Ann.searchIvfIndex(spark, idxPath, queries, cents, k = 10, nprobe = 16)
+      }),
     // q77: int8-quantized embedding index (st_q8_pack -> parquet ->
     // asymmetric-distance cosine top-k). The oracle recomputes the
     // quantization law (min/max affine, floor(x+0.5), clamp 255) and the
     // reconstruction from the RAW embeddings table — the engine's packed
     // bytes never reach the oracle, so a pack/unpack defect cannot cancel
     // itself out.
-    "q77_ann_q8" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val corpus = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      val idxPath = scratchDir("q77idx", dir)
-      Ann.writeQuantizedIndex(corpus, idxPath)
-      Ann.searchQuantizedIndex(s, idxPath, queries, k = 10)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q77_ann_q8" -> ((spark, dir) =>
+      annGate(prep(spark), dir) { (corpus, queries) =>
+        val idxPath = scratchDir("q77idx", dir)
+        Ann.writeQuantizedIndex(corpus, idxPath)
+        Ann.searchQuantizedIndex(spark, idxPath, queries, k = 10)
+      }),
     // q78: the combined IVF + int8 index (FAISS IVF-SQ8 shape — trained
     // lists as partition directories, quantized payloads inside) at FULL
     // probe, which must equal q77's quantized brute force exactly: the gate
     // proves the two index layouts compose without touching each other's
     // arithmetic. Partial-probe behavior is the ScalaTest's job.
-    "q78_ann_ivf_q8" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val corpus = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      val cents = Ann.kmeansFit(corpus, k = 16, iters = 5, sampleCap = 2048)
-      val idxPath = scratchDir("q78idx", dir)
-      Ann.writeIvfQ8Index(corpus, cents, idxPath)
-      Ann.searchIvfQ8Index(s, idxPath, queries, cents, k = 10, nprobe = 16)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q78_ann_ivf_q8" -> ((spark, dir) =>
+      annGate(prep(spark), dir) { (corpus, queries) =>
+        val cents = Ann.kmeansFit(corpus, k = 16, iters = 5, sampleCap = 2048)
+        val idxPath = scratchDir("q78idx", dir)
+        Ann.writeIvfQ8Index(corpus, cents, idxPath)
+        Ann.searchIvfQ8Index(spark, idxPath, queries, cents, k = 10, nprobe = 16)
+      }),
     // q79: incremental tile pyramid — base histogram at z=7, every coarser
     // level rolled up from the PREVIOUS level by parent-tile bit arithmetic
     // (O(tiles) per level, never re-reading the points). The oracle computes
@@ -1472,41 +1387,14 @@ object SparkEntry {
     // cross-batch state path; oracle = the batch q95 SQL verbatim.
     "q100_stream_geofence" -> ((spark, dir) => {
       val s = prep(spark)
-      implicit val ss: SparkSession = s
-      val srcDir = new java.io.File(scratchDir("q100src", dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(srcDir)
-      srcDir.mkdirs()
       val docs = Corpus.storedDocs(s, corpusDocs(dir))
       val pts = SpatialJoin.extractPoints(docs)
         .select(col("doc_id"), col("offset"), col("lat"), col("lon"))
-      val now = System.currentTimeMillis()
-      stageSingleParquet(pts.where(col("offset") < 64), srcDir, "b0", now - 600000L)
-      stageSingleParquet(pts.where(col("offset") >= 64), srcDir, "b1", now)
-      val sch = s.read.parquet(s"${srcDir.getPath}/b0.parquet").schema
-      val outBase = scratchDir("q100", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = graft.streaming.Streams.geofenceStream(s,
-          s.readStream.schema(sch).option("maxFilesPerTrigger", 1)
-            .parquet(srcDir.getPath),
-          Corpus.Hotspots.toSeq, radiusM = 25000.0)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outBase/data")
-        .option("checkpointLocation", s"$outBase/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // a corpus yielding ZERO transitions writes no data files and a bare
-      // read would fail on schema inference instead of returning an empty
-      // frame (r05 advisory) — read with the sink's schema (all-nullable,
-      // exactly what parquet inference yields), leaving the non-empty path
-      // byte-identical
-      val fenceSchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.Encoders
-          .product[graft.streaming.Streams.FenceHit].schema
-          .fields.map(_.copy(nullable = true)))
-      s.read.schema(fenceSchema).parquet(s"$outBase/data")
+      val (src, sch) = stageBatches("q100src", dir,
+        Seq(pts.where(col("offset") < 64), pts.where(col("offset") >= 64)))
+      drain(graft.streaming.Streams.geofenceStream(s,
+          s.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+          Corpus.Hotspots.toSeq, radiusM = 25000.0), "q100", dir)
         .orderBy(col("doc_id"), col("offset"))
     }),
     // q84: stream-STREAM interval join under Trigger.AvailableNow — the
@@ -1524,41 +1412,18 @@ object SparkEntry {
       val s = prep(spark)
       implicit val ss: SparkSession = s
       val ev = t(dir, "events")
-      val now = System.currentTimeMillis()
-      def stageSide(tag: String, typ: String): String = {
-        val d0 = new java.io.File(scratchDir(tag, dir))
-        org.apache.commons.io.FileUtils.deleteDirectory(d0)
-        d0.mkdirs()
-        val side = ev.where(col("event_type") === typ)
+      def side(tag: String, typ: String): DataFrame = {
+        val rows = ev.where(col("event_type") === typ)
           .select(col("event_id"), col("user_id"), col("ts"))
-        stageSingleParquet(side.where(col("event_id") % 2 === 0), d0, "b0",
-          now - 600000L)
-        stageSingleParquet(side.where(col("event_id") % 2 === 1), d0, "b1", now)
-        d0.getPath
+        val (src, sch) = stageBatches(tag, dir,
+          Seq(rows.where(col("event_id") % 2 === 0), rows.where(col("event_id") % 2 === 1)))
+        s.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src)
       }
-      val clicksDir = stageSide("q84c", "click")
-      val viewsDir = stageSide("q84v", "view")
-      val sch = s.read.parquet(s"$clicksDir/b0.parquet").schema
-      val outBase = scratchDir("q84", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
-      val q = graft.streaming.Streams.intervalJoinStream(
-          s.readStream.schema(sch).option("maxFilesPerTrigger", 1)
-            .parquet(clicksDir),
-          s.readStream.schema(sch).option("maxFilesPerTrigger", 1)
-            .parquet(viewsDir),
-          watermark = "45 days")
+      drain(graft.streaming.Streams.intervalJoinStream(
+          side("q84c", "click"), side("q84v", "view"), watermark = "45 days")
         .select(col("user_id"), col("l_event"), col("r_event"),
           unix_micros(col("l_ts")).as("l_ts_us"),
-          unix_micros(col("r_ts")).as("r_ts_us"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outBase/data")
-        .option("checkpointLocation", s"$outBase/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$outBase/data")
+          unix_micros(col("r_ts")).as("r_ts_us")), "q84", dir)
         .orderBy(col("l_event"), col("r_event"))
     }),
     // q83: covering compaction (st_compact_cells, the H3 compactCells
@@ -1627,7 +1492,6 @@ object SparkEntry {
       val (docsPath, _) = Corpus.ensure(s, nDocs)
       val sch = s.read.parquet(docsPath).schema
       val outBase = scratchDir("q87", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outBase))
       val q = graft.streaming.Streams.pyramidStream(s,
         s.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(docsPath),
         outBase, minZoom = 4, maxZoom = 7, checkpoint = s"$outBase/ckpt")
@@ -1642,26 +1506,18 @@ object SparkEntry {
     // q43's oracle verbatim (the same argument as q75: full probe covers
     // every list, and every row lives in exactly one list). Partial-probe
     // recall and the padding tie-break are PipelineSpec's job.
-    "q89_ann_ivf_hier" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val corpus = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      val hier = Ann.kmeansFitHier(corpus, k1 = 4, k2 = 4, iters = 5,
-        sampleCap = 2048, subSampleCap = 512)
-      val idxPath = scratchDir("q89idx", dir)
-      Ann.writeIvfIndexHier(corpus, hier, idxPath)
-      // two-level probing at nprobe1 = k1 ranks the identical probe set as
-      // the flat path, so full probe stays exact — the gate covers the
-      // hier probe machinery end-to-end
-      Ann.searchIvfIndexHier(s, idxPath, queries, hier, k = 10,
-        nprobe1 = 4, nprobe = 16)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q89_ann_ivf_hier" -> ((spark, dir) =>
+      annGate(prep(spark), dir) { (corpus, queries) =>
+        val hier = Ann.kmeansFitHier(corpus, k1 = 4, k2 = 4, iters = 5,
+          sampleCap = 2048, subSampleCap = 512)
+        val idxPath = scratchDir("q89idx", dir)
+        Ann.writeIvfIndexHier(corpus, hier, idxPath)
+        // two-level probing at nprobe1 = k1 ranks the identical probe set as
+        // the flat path, so full probe stays exact — the gate covers the
+        // hier probe machinery end-to-end
+        Ann.searchIvfIndexHier(spark, idxPath, queries, hier, k = 10,
+          nprobe1 = 4, nprobe = 16)
+      }),
     // q88: STREAMING IVF ingest — micro-batches of vectors (3 staged source
     // files, maxFilesPerTrigger=1) are assigned to a FIXED centroid set and
     // committed as batchId-keyed partition dirs (each batch overwrites its
@@ -1669,37 +1525,19 @@ object SparkEntry {
     // of the ticks regardless of batch slicing, so a FULL-probe search over
     // it must equal exact brute force — q43's oracle verbatim. Partial
     // probing and crash-replay idempotency are StreamingSpec's job.
-    "q88_stream_ivf_ingest" -> ((spark, dir) => {
-      implicit val s: SparkSession = prep(spark)
-      val e = t(dir, "embeddings")
-      val corpus = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      val queries = e.where(col("vec_id") < 8)
-        .select(concat(lit("q"), col("vec_id")).as("qid"),
-          col("embedding").cast("array<double>").as("q_emb"))
-      val cents = Ann.firstNCentroids(corpus, 16)
-      val srcDir = new java.io.File(scratchDir("q88src", dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(srcDir)
-      srcDir.mkdirs()
-      val baseMs = 1704067200000L
-      for (i <- 0 until 3)
-        stageSingleParquet(corpus.where(col("vec_id") % 3 === i), srcDir,
-          s"p$i", baseMs + i * 1000L)
-      val idxPath = scratchDir("q88idx", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idxPath))
-      val ckpt = scratchDir("q88ckpt", dir)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-      val q = graft.streaming.Streams.ivfIngest(s,
-        s.readStream.schema(corpus.schema).option("maxFilesPerTrigger", 1)
-          .parquet(srcDir.getPath),
-        cents, idxPath, ckpt)
-      q.awaitTermination()
-      // the fold-aware tick reader (identical live set while no fold has
-      // run) — gates Ticks.live end-to-end
-      Ann.searchIvfTicks(s, idxPath, queries, cents, k = 10, nprobe = 16)
-        .select(col("qid"), col("vec_id"), (round(col("sim"), 6) + 0.0).as("sim"), col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+    "q88_stream_ivf_ingest" -> ((spark, dir) =>
+      annGate(prep(spark), dir) { (corpus, queries) =>
+        val cents = Ann.firstNCentroids(corpus, 16)
+        val (src, sch) = stageBatches("q88src", dir,
+          (0 until 3).map(i => corpus.where(col("vec_id") % 3 === i)))
+        val work = scratchDir("q88", dir)
+        graft.streaming.Streams.ivfIngest(spark,
+          spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src),
+          cents, s"$work/idx", s"$work/ckpt").awaitTermination()
+        // the fold-aware tick reader (identical live set while no fold has
+        // run) — gates Ticks.live end-to-end
+        Ann.searchIvfTicks(spark, s"$work/idx", queries, cents, k = 10, nprobe = 16)
+      }),
     // q86: registry datum-shift ROUND TRIP — st_datum_shift_inv is the
     // WGS84->datum direction from the SAME p7 registry row with all seven
     // parameters negated (EPSG-style approximate reversal; quirk Q6: the

@@ -17,8 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * (spark.checkpoint.dir on HDFS/object storage) — a node-local path would
   * strand partitions on the writer. [[ensureCheckpointDir]] fails fast on a
   * non-local master without one, and auto-provisions a process-private tmp
-  * dir for local[*] masters, where one filesystem serves all "executors".
-  * One JVM shutdown hook runs [[shutdown]]. */
+  * dir for local[*] masters, where one filesystem serves all "executors",
+  * first sweeping the dirs of dead JVMs ([[Scratch.sweepDead]]). One JVM
+  * shutdown hook runs [[shutdown]]. */
 private[engine] object Durable {
 
   private val openRounds =
@@ -33,8 +34,9 @@ private[engine] object Durable {
     require(spark.sparkContext.master.startsWith("local"),
       "iterative operators on a cluster need spark.checkpoint.dir on SHARED " +
         "storage (a node-local default would strand checkpoint partitions)")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ckpt_" + java.lang.ProcessHandle.current().pid())
+    val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
+    Scratch.sweepDead(tmpRoot, "graft_ckpt")
+    val dir = new java.io.File(tmpRoot, "graft_ckpt_" + java.lang.ProcessHandle.current().pid())
     spark.sparkContext.setCheckpointDir(dir.getPath)
     provisioned = Some(dir)
   }
@@ -47,11 +49,7 @@ private[engine] object Durable {
     * deletes under it throws. A failed delete is printed to stderr. */
   def shutdown(): Unit = {
     openRounds.forEach(_.close())
-    provisioned.foreach { dir =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      catch { case e: java.io.IOException =>
-        System.err.println(s"graft: could not delete checkpoint dir $dir: $e") }
-    }
+    provisioned.foreach(Scratch.delete)
   }
 
   /** Per-call ROUND checkpointer, adding the cleanup discipline RDD

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** What connected components' distributed rounds leave in the checkpoint
-  * dir, and the shutdown hook's cleanup of the auto-provisioned dir. */
+  * dir, the shutdown hook's cleanup of the auto-provisioned dir, and the
+  * sweep of dirs whose JVM is gone. */
 class DurableSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -38,6 +39,19 @@ class DurableSpec extends AnyFunSuite {
     // that round backs the returned frame
     val rows = got.collect()
     assert(rows.length == 64 && rows.forall(_.getLong(1) == 0L))
+  }
+
+  test("the sweep deletes a dead JVM's checkpoint dir and keeps a live or foreign one") {
+    val root = new java.io.File(graft.TestTmp.dir("graft-sweep"))
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val dead = new java.io.File(root, s"graft_ckpt_${child.pid()}")
+    val live = new java.io.File(root, s"graft_ckpt_${ProcessHandle.current().pid()}")
+    val foreign = new java.io.File(root, s"graft_other_${child.pid()}")
+    Seq(dead, live, foreign).foreach(d => assert(new java.io.File(d, "rdd-0").mkdirs()))
+    Scratch.sweepDead(root, "graft_ckpt")
+    assert(!dead.exists(), s"$dead survived the sweep")
+    assert(live.isDirectory && foreign.isDirectory)
   }
 
   test("shutdown closes the open Rounds, then deletes the provisioned dir") {
